@@ -99,7 +99,7 @@ object Bench {
     val cold = SparkEntry.coldQueries.sorted
       .filter(n => only.forall(_.contains(n)))
       .map(n => n -> timeOne(SparkEntry.queries(n),
-        () => SparkEntry.clearAllMemos()))
+        () => Memo.clearAll()))
     val dist = SparkEntry.distributedVariants.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (n, fn) => n -> timeOne(fn, () => ()) }

@@ -32,8 +32,7 @@ object IndexGc {
   /** Minimum age (ms) a condemned generation must reach before it may
     * be reaped — the wall-clock fence against refresh storms. Tests
     * that drive refresh cycles faster than real time set this to 0. */
-  @volatile var graceMs: Long =
-    sys.props.get("graft.indexgc.graceMs").map(_.toLong).getOrElse(600000L)
+  @volatile var graceMs: Long = 600000L
 
   /** scope → generations condemned by past refreshes, newest first,
     * each carrying the earliest instant it may be reaped. */

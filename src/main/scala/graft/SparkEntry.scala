@@ -615,7 +615,7 @@ object SparkEntry {
   /** Queries whose headline bench time can be a per-JVM memo read
     * (trained centroids/codebooks, the inverted file, gate models,
     * the build manifest). Bench re-runs these in its `cold` section
-    * with [[clearAllMemos]] before every sample, so the TRUE
+    * with [[Memo.clearAll]] before every sample, so the TRUE
     * build/train cost gets a tracked number (round-10 verdict #2)
     * while the headline keeps measuring the serving path. */
   val coldQueries: Seq[String] = Seq(
@@ -629,20 +629,6 @@ object SparkEntry {
     "q161_doc_takedown", "q162_takedown_pack", "q163_takedown_phrase",
     "q164_takedown_ann", "q165_takedown_report", "q166_cluster_takedown",
     "q168_cluster_table", "q169_cluster_forget", "q170_canonical_table")
-
-  /** Drop every per-JVM train/build memo (cold-path benching; also
-    * what a corpus-rewrite simulation wants). */
-  def clearAllMemos(): Unit = {
-    Curation.clearManifestMemo()
-    Curation.clearGateMemos()
-    IvfIndex.clearMemos()
-    PqIndex.clearMemos()
-    Ranking.clearMemos()
-    Warehouse.clearMemos()
-    BloomSkip.clearMemos()
-    DocForget.clearMemos()
-    graft.streaming.ClusterStream.clearMemos()
-  }
 
   /** Driver-dispatch queries re-run with the dispatch budget zeroed,
     * so the DISTRIBUTED plan — the one that executes at 100 TB — gets

@@ -120,16 +120,6 @@ object BloomSkip {
       fids: Option[Set[Long]] = None): DataFrame =
     Layouts.readFiles(spark, versionPath, fids)
 
-  private val layoutMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Layouts.Once[(String, Long)]]
-
-  /** Forget memoized bloom layouts (tests, cold benching). */
-  def clearMemos(): Unit = {
-    layoutMemo.clear(); forgetMemo.clear(); dateLayoutMemo.clear()
-    datedForgetMemo.clear(); vacuumMemo.clear()
-    Layouts.clearManifestMemo()
-  }
-
   /** The served lineage log of a base layout: every version the
     * warehouse served for this layout family — the base build (v1,
     * committed idempotently: a restarted JVM re-running the
@@ -150,6 +140,15 @@ object BloomSkip {
       Seq(p, s"$p.bloomidx", s"$p.minmax", Layouts.manifestPath(p),
         Layouts.schemaPath(p))) :+ lineageLogOf(base)
 
+  /** Base layouts: slot the dir, version the orders fingerprint; a
+    * refresh retires the superseded layout trio and its served
+    * lineage. */
+  private[graft] val layoutMemo = new graft.Memo[String, Long, (String, Long)](
+    retire = (dir, stale) => graft.IndexGc.retire(s"bloomlayout:$dir",
+      stale.flatMap(x => Seq(x._1, s"${x._1}.bloomidx",
+        manifestPath(x._1), Layouts.schemaPath(x._1)) ++
+        lineagePathsOf(x._1))))
+
   /** The materialized bloom-indexed layout of the `orders` table for
     * `dir`: built on first request, fingerprint-keyed for the JVM
     * lifetime (the [[Warehouse.zlayoutCached]] discipline — a refresh
@@ -157,8 +156,7 @@ object BloomSkip {
     * reaper). Returns (layout path, nFiles). */
   def layoutCached(spark: SparkSession, dir: String): (String, Long) = {
     val fp = IvfIndex.dataFingerprint(dir, table = "orders")
-    val key = (dir, fp)
-    val v = layoutMemo.getOrElseUpdate(key, new Layouts.Once({
+    layoutMemo.get(dir, fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
         s"/graft-bloomlayout-$tag-f${java.lang.Long.toHexString(fp)}"
@@ -166,14 +164,7 @@ object BloomSkip {
         "o_custkey", "o_orderkey", p)
       Layouts.commitVersionIfAbsent(lineageLogOf(p), p)
       (p, nFiles)
-    })).value
-    val stale = layoutMemo.keys
-      .filter(k => k._1 == dir && k != key)
-      .flatMap(layoutMemo.remove).flatMap(_.peek).flatMap(x =>
-        Seq(x._1, s"${x._1}.bloomidx", manifestPath(x._1),
-          Layouts.schemaPath(x._1)) ++ lineagePathsOf(x._1)).toSeq
-    graft.IndexGc.retire(s"bloomlayout:$dir", stale)
-    v
+    }
   }
 
   /** Probe cap: a point-lookup API, not a bulk semi-join (that path is
@@ -282,15 +273,18 @@ object BloomSkip {
     Layouts.writeSchemaSidecar(layout, outDir)
   }
 
-  private val dateLayoutMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Layouts.Once[String]]
+  /** Date layouts, retired like [[layoutMemo]]'s. */
+  private[graft] val dateLayoutMemo = new graft.Memo[String, Long, String](
+    retire = (dir, stale) => graft.IndexGc.retire(s"datebloom:$dir",
+      stale.flatMap(p => Seq(p, s"$p.bloomidx", s"$p.minmax",
+        Layouts.manifestPath(p), Layouts.schemaPath(p)) ++
+        lineagePathsOf(p))))
 
   /** The materialized date-clustered, doubly-indexed orders layout for
     * `dir` — the [[layoutCached]] discipline. */
   def dateLayoutCached(spark: SparkSession, dir: String): String = {
     val fp = IvfIndex.dataFingerprint(dir, table = "orders")
-    val key = (dir, fp)
-    val v = dateLayoutMemo.getOrElseUpdate(key, new Layouts.Once({
+    dateLayoutMemo.get(dir, fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
         s"/graft-datebloom-$tag-f${java.lang.Long.toHexString(fp)}"
@@ -299,14 +293,7 @@ object BloomSkip {
           col("o_totalprice"), col("o_orderdate")), p)
       Layouts.commitVersionIfAbsent(lineageLogOf(p), p)
       p
-    })).value
-    val stale = dateLayoutMemo.keys
-      .filter(k => k._1 == dir && k != key)
-      .flatMap(dateLayoutMemo.remove).flatMap(_.peek).flatMap(p =>
-        Seq(p, s"$p.bloomidx", s"$p.minmax", Layouts.manifestPath(p),
-          Layouts.schemaPath(p)) ++ lineagePathsOf(p)).toSeq
-    graft.IndexGc.retire(s"datebloom:$dir", stale)
-    v
+    }
   }
 
   /** The files whose [dmin, dmax] interval overlaps [from, to], per
@@ -387,8 +374,10 @@ object BloomSkip {
     report
   }
 
-  private val datedForgetMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Long], Long), Layouts.Once[(String, DeleteReport)]]
+  /** Post-erasure date-layout versions, gated like [[forgetMemo]]. */
+  private[graft] val datedForgetMemo =
+    new graft.Memo[String, (Seq[Long], Long), (String, DeleteReport)](
+      gate = Layouts.withBuildGate)
 
   /** The post-erasure date-layout version for (dir, keys) — the
     * [[forgottenLayoutCached]] discipline (one cached version per dir,
@@ -397,36 +386,30 @@ object BloomSkip {
       keys: Seq[Long]): (String, DeleteReport) = {
     val ks = keys.distinct.sorted
     val fp = IvfIndex.dataFingerprint(dir, table = "orders")
-    val memoKey = (dir, ks, fp)
-    datedForgetMemo.getOrElseUpdate(memoKey, new Layouts.Once(
-      Layouts.withBuildGate {
-        val src = dateLayoutCached(spark, dir)
-        val tag =
-          if (ks.size == 1) ks.head.toString
-          else "b" + java.lang.Long.toHexString(
-            graft.functions.TextFunctions.md5LongScala(ks.mkString(",")))
-        val p = s"$src.forget$tag-p${ProcessHandle.current().pid()}" +
-          s"-g${forgetGen.incrementAndGet()}"
-        val report = deleteKeysFromDated(spark, src, p, ks)
-        Layouts.commitVersion(lineageLogOf(src), p)
-        // eviction + retention only under the build gate (see
-        // forgottenLayoutCached) — a memo hit never runs retention
-        datedForgetMemo.keys.filter(k => k._1 == dir && k != memoKey)
-          .foreach(datedForgetMemo.remove)
-        Layouts.vacuumRetain(spark, lineageLogOf(src),
-          retainPaths = Set(src, p), inlineDelete = false)
-        (p, report)
-      })).value
+    datedForgetMemo.get(dir, (ks, fp)) {
+      val src = dateLayoutCached(spark, dir)
+      val tag =
+        if (ks.size == 1) ks.head.toString
+        else "b" + java.lang.Long.toHexString(
+          graft.functions.TextFunctions.md5LongScala(ks.mkString(",")))
+      val p = s"$src.forget$tag-p${ProcessHandle.current().pid()}" +
+        s"-g${forgetGen.incrementAndGet()}"
+      val report = deleteKeysFromDated(spark, src, p, ks)
+      Layouts.commitVersion(lineageLogOf(src), p)
+      // retention only under the build gate (see
+      // forgottenLayoutCached) — a memo hit never runs retention
+      Layouts.vacuumRetain(spark, lineageLogOf(src),
+        retainPaths = Set(src, p), inlineDelete = false)
+      (p, report)
+    }
   }
 
   /** Whether the post-erasure date-layout version for (dir, keys) is
     * already built — a repeat request answers without the build gate. */
   def isDatedForgetMemoized(spark: SparkSession, dir: String,
-      keys: Seq[Long]): Boolean = {
-    val fp = IvfIndex.dataFingerprint(dir, table = "orders")
-    datedForgetMemo.get((dir, keys.distinct.sorted, fp))
-      .exists(_.peek.isDefined)
-  }
+      keys: Seq[Long]): Boolean =
+    datedForgetMemo.isBuilt(dir, (keys.distinct.sorted,
+      IvfIndex.dataFingerprint(dir, table = "orders")))
 
   /** q159: the post-erasure composed lookup — delete the key batch
     * through the bloom candidates (both indexes patched), then probe
@@ -538,8 +521,12 @@ object BloomSkip {
       outPath: String, key: Long, bits: Int = BloomBits): DeleteReport =
     deleteKeysFrom(spark, versionPath, outPath, Seq(key), bits)
 
-  private val forgetMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Long], Long), Layouts.Once[(String, DeleteReport)]]
+  /** Post-deletion versions: slot the dir (one cached version per
+    * dir), version (keys, fingerprint); builds and evictions are
+    * serialized under the build gate. */
+  private[graft] val forgetMemo =
+    new graft.Memo[String, (Seq[Long], Long), (String, DeleteReport)](
+      gate = Layouts.withBuildGate)
 
   /** Every forget BUILD lands in a fresh generation-suffixed path —
     * never reuse a path a prior build used: an evicted version's
@@ -570,28 +557,25 @@ object BloomSkip {
       keys: Seq[Long]): (String, DeleteReport) = {
     val ks = keys.distinct.sorted
     val fp = IvfIndex.dataFingerprint(dir, table = "orders")
-    val memoKey = (dir, ks, fp)
-    forgetMemo.getOrElseUpdate(memoKey, new Layouts.Once(
-      Layouts.withBuildGate {
-        val (src, _) = layoutCached(spark, dir)
-        val tag =
-          if (ks.size == 1) ks.head.toString
-          else "b" + java.lang.Long.toHexString(
-            graft.functions.TextFunctions.md5LongScala(ks.mkString(",")))
-        val p = s"$src.forget$tag-p${ProcessHandle.current().pid()}" +
-          s"-g${forgetGen.incrementAndGet()}"
-        val report = deleteKeysFrom(spark, src, p, ks)
-        Layouts.commitVersion(lineageLogOf(src), p)
-        // eviction + retention run ONLY here, serialized under the
-        // build gate with the commit they pair with: a memo HIT must
-        // never run retention (it would race a concurrent build and
-        // expire the freshly committed head out of the lineage)
-        forgetMemo.keys.filter(k => k._1 == dir && k != memoKey)
-          .foreach(forgetMemo.remove)
-        Layouts.vacuumRetain(spark, lineageLogOf(src),
-          retainPaths = Set(src, p), inlineDelete = false)
-        (p, report)
-      })).value
+    forgetMemo.get(dir, (ks, fp)) {
+      val (src, _) = layoutCached(spark, dir)
+      val tag =
+        if (ks.size == 1) ks.head.toString
+        else "b" + java.lang.Long.toHexString(
+          graft.functions.TextFunctions.md5LongScala(ks.mkString(",")))
+      val p = s"$src.forget$tag-p${ProcessHandle.current().pid()}" +
+        s"-g${forgetGen.incrementAndGet()}"
+      val report = deleteKeysFrom(spark, src, p, ks)
+      Layouts.commitVersion(lineageLogOf(src), p)
+      // retention (and the memo's eviction after it) run ONLY here,
+      // serialized under the build gate with the commit they pair
+      // with: a memo HIT must never run retention (it would race a
+      // concurrent build and expire the freshly committed head out
+      // of the lineage)
+      Layouts.vacuumRetain(spark, lineageLogOf(src),
+        retainPaths = Set(src, p), inlineDelete = false)
+      (p, report)
+    }
   }
 
   /** Time travel over the SERVED lineage: the q148 point lookup as of
@@ -649,8 +633,7 @@ object BloomSkip {
       "keepLast must be in 1..1024")
     val (base, _) = layoutCached(spark, dir)
     val vs = Layouts.versions(lineageLogOf(base))
-    val pinned = forgetMemo.keys.filter(_._1 == dir)
-      .flatMap(forgetMemo.get).flatMap(_.peek).map(_._1).toSet + base
+    val pinned = forgetMemo.built(dir).map(_._1).toSet + base
     val retain = vs.takeRight(keepLast).map(_._2).toSet ++ pinned
     val r = Layouts.vacuumRetain(spark, lineageLogOf(base), retain,
       inlineDelete = false)
@@ -663,14 +646,17 @@ object BloomSkip {
     * built and memoized — a repeat request can answer without paying
     * (or gating on) a copy-on-write build. */
   def isForgetMemoized(spark: SparkSession, dir: String,
-      keys: Seq[Long]): Boolean = {
-    val fp = IvfIndex.dataFingerprint(dir, table = "orders")
-    forgetMemo.get((dir, keys.distinct.sorted, fp))
-      .exists(_.peek.isDefined)
-  }
+      keys: Seq[Long]): Boolean =
+    forgetMemo.isBuilt(dir, (keys.distinct.sorted,
+      IvfIndex.dataFingerprint(dir, table = "orders")))
 
-  private val vacuumMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Long], Long), Layouts.Once[String]]
+  /** Private vacuumed lineages: slot the dir, version (keys,
+    * fingerprint); builds run under the build gate and a superseded
+    * lineage's root goes to the reaper. */
+  private[graft] val vacuumMemo = new graft.Memo[String, (Seq[Long], Long), String](
+    retire = (dir, stale) => graft.IndexGc.retire(s"vaclineage:$dir",
+      stale.map(p => new java.io.File(p).getParent)),
+    gate = Layouts.withBuildGate)
 
   /** q160: GDPR-COMPLETE erasure — forget the key batch, PROMOTE the
     * post-erasure version by committing it to the lineage's version
@@ -692,9 +678,7 @@ object BloomSkip {
     requireProbeKeys(probes)
     val ks = delKeys.distinct.sorted
     val fp = IvfIndex.dataFingerprint(dir, table = "orders")
-    val memoKey = (dir, ks, fp)
-    val v = vacuumMemo.getOrElseUpdate(memoKey, new Layouts.Once(
-      Layouts.withBuildGate {
+    val v = vacuumMemo.get(dir, (ks, fp)) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       // pid + generation: the per-JVM counter alone COLLIDES across
       // JVMs (a second process rebuilding lineage -g1 appends to the
@@ -717,12 +701,7 @@ object BloomSkip {
       Layouts.commitVersion(s"$base/log", v2)
       Layouts.vacuum(spark, s"$base/log", keepLast = 1)
       v2
-    })).value
-    val stale = vacuumMemo.keys
-      .filter(k => k._1 == dir && k != memoKey)
-      .flatMap(vacuumMemo.remove).flatMap(_.peek)
-      .map(p => new java.io.File(p).getParent).toSeq
-    graft.IndexGc.retire(s"vaclineage:$dir", stale)
+    }
     lookupIn(spark, v, probes)
   }
 

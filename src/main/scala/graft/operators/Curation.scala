@@ -23,12 +23,10 @@ import graft.functions.TextFunctions._
   */
 object Curation {
 
-  /** Per-JVM memo for [[corpusBuild]]'s three gate models, keyed on
-    * (dir, documents-file fingerprint) — see the train-once note at
-    * the use site. */
-  private val gateModelMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long),
-      (LangModel.BigramModel, Array[Long], LangModel.OddsModel)]
+  /** Per-JVM memo for [[corpusBuild]]'s three gate models: slot the
+    * dir, version the documents-file fingerprint. */
+  private[graft] val gateModelMemo = new graft.Memo[String, Long,
+    (LangModel.BigramModel, Array[Long], LangModel.OddsModel)]
 
   /** The frozen model-gate thresholds a reference corpus induces —
     * what a STREAM wires into [[graft.streaming.DocStream.curate]]'s
@@ -67,22 +65,22 @@ object Curation {
 
   private def gateModels(dir: String, scrubbed: DataFrame)
       : (LangModel.BigramModel, Array[Long], LangModel.OddsModel) = {
-    val fpKey = (dir, IvfIndex.dataFingerprint(dir, "documents"))
-    gateModelMemo.getOrElseUpdate(fpKey, {
-      gateModelMemo.keys.filter(_._1 == dir)
-        .foreach(gateModelMemo.remove)
+    gateModelMemo.get(dir, IvfIndex.dataFingerprint(dir, "documents"))(
       (LangModel.trainModelOn(scrubbed),
         Sampling.trainDsirOn(scrubbed, col("lang") === "en"),
-        LangModel.trainOddsOn(scrubbed))
-    })
+        LangModel.trainOddsOn(scrubbed)))
   }
 
   /** Per-JVM memo for the checkpointed per-doc signal relation, keyed
     * like the models — a deterministic function of the corpus files,
     * computed once per fingerprint (a repeated build, or cutoff
-    * training followed by a build, scores the corpus once). */
-  private val gateSignalMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), DataFrame]
+    * training followed by a build, scores the corpus once). An evicted
+    * (the corpus was rewritten in place) or cleared relation releases
+    * its checkpointed blocks instead of leaving them to RDD GC timing:
+    * no caller may hold an evicted frame — the fingerprint it was built
+    * from no longer exists on disk. */
+  private[graft] val gateSignalMemo = new graft.Memo[String, Long, DataFrame](
+    release = graft.Caches.releaseCheckpoint)
 
   /** Scrub → (memoized) model training → the ONE scan projection that
     * computes every text-derived signal — gate scores, dedup
@@ -98,15 +96,7 @@ object Curation {
     * final blocks stay persisted behind the returned lazy frames —
     * LRU-evictable, the connectedComponents convention. */
   private def gateSignals(spark: SparkSession, dir: String): DataFrame = {
-    val fpKey = (dir, IvfIndex.dataFingerprint(dir, "documents"))
-    gateSignalMemo.getOrElseUpdate(fpKey, {
-      // evicted = the corpus was rewritten in place: release the stale
-      // fingerprint's checkpointed blocks instead of leaving them to
-      // RDD GC timing (no caller may hold an evicted frame — the
-      // fingerprint it was built from no longer exists on disk)
-      gateSignalMemo.keys.filter(_._1 == dir)
-        .foreach(k => gateSignalMemo.remove(k)
-          .foreach(graft.Caches.releaseCheckpoint))
+    gateSignalMemo.get(dir, IvfIndex.dataFingerprint(dir, "documents")) {
       val scrubbed = graft.Caches.register(Tables.documents(spark, dir)
         .withColumn("text", Pii.redactText(col("text"))).cache())
       val (ppxM, dsirT, oddsM) = gateModels(dir, scrubbed)
@@ -124,7 +114,7 @@ object Curation {
         org.apache.spark.sql.graft.TextExpressions
           .minHashSig(col("text"), 3, 16).as("sig"))
         .localCheckpoint()
-    })
+    }
   }
 
   /** Exact order-statistic cutoffs over the checkpointed signal
@@ -244,27 +234,25 @@ object Curation {
     // IvfIndex.trainCached / gate-model discipline applied to the
     // build output itself. An in-place corpus rewrite changes the
     // fingerprint and forces a fresh build.
-    val key = (dir, IvfIndex.dataFingerprint(dir, "documents"),
+    val version = (IvfIndex.dataFingerprint(dir, "documents"),
       buildParamKey(minQuality, ppxKeepPct, dsirKeepPct, oddsKeepPct,
         nearThreshold, semThreshold, domainCap, packBudget, packBlocks))
-    manifestMemo.getOrElseUpdate(key, {
-      // release evicted manifests' checkpoint blocks eagerly (the
-      // gateSignalMemo eviction rule): a long-lived serving JVM that
-      // rebuilds after corpus rewrites must reclaim storage
-      // deterministically, not on RDD-GC timing
-      manifestMemo.keys.filter(_._1 == dir).filterNot(_ == key)
-        .foreach(k => manifestMemo.remove(k)
-          .foreach(graft.Caches.releaseCheckpoint))
+    manifestMemo.get(dir, version) {
       corpusBuildStages(spark, dir, minQuality, ppxKeepPct,
         dsirKeepPct, oddsKeepPct, nearThreshold, semThreshold,
         domainCap, packBudget, packBlocks)("manifest")
         .localCheckpoint()
-    })
+    }
   }
 
-  /** Per-JVM memo for the finished build manifest (see [[corpusBuild]]). */
-  private val manifestMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, String), DataFrame]
+  /** Per-JVM memo for the finished build manifest (see [[corpusBuild]]):
+    * slot the dir, version (fingerprint, build params). Evicted and
+    * cleared manifests release their checkpoint blocks eagerly (the
+    * gateSignalMemo rule): a long-lived serving JVM that rebuilds after
+    * corpus rewrites must reclaim storage deterministically, so a frame
+    * obtained before a clear must not be actioned again. */
+  private[graft] val manifestMemo = new graft.Memo[String, (Long, String), DataFrame](
+    release = graft.Caches.releaseCheckpoint)
 
   private def buildParamKey(minQuality: Double, ppxKeepPct: Int,
       dsirKeepPct: Int, oddsKeepPct: Int, nearThreshold: Double,
@@ -428,25 +416,6 @@ object Curation {
     loadBuild(spark, dir, outDir, minQuality, ppxKeepPct, dsirKeepPct,
       oddsKeepPct, nearThreshold, semThreshold, domainCap, packBudget,
       packBlocks)
-  }
-
-  /** Test hook: drop the memoized manifests (the IvfIndex.clearMemos
-    * convention) — the model/signal memos stay, they are fingerprint-
-    * safe on their own. Releases the dropped manifests' checkpoint
-    * blocks, so a frame obtained from [[corpusBuild]] before the clear
-    * must not be actioned again (rebuild instead). */
-  def clearManifestMemo(): Unit =
-    manifestMemo.keys.foreach(k => manifestMemo.remove(k)
-      .foreach(graft.Caches.releaseCheckpoint))
-
-  /** Cold-bench hook: drop the trained gate models AND the
-    * checkpointed per-doc signal relation (releasing its blocks), so
-    * the next build pays the full train+score cost — the memos are
-    * fingerprint-safe and never need this for correctness. */
-  def clearGateMemos(): Unit = {
-    gateModelMemo.clear()
-    gateSignalMemo.keys.foreach(k => gateSignalMemo.remove(k)
-      .foreach(graft.Caches.releaseCheckpoint))
   }
 
   /** [[corpusBuild]] with every intermediate stage observable — the

@@ -70,17 +70,20 @@ object DocForget {
     IvfIndex.dataFingerprint(dir, "documents") * 31L +
       IvfIndex.dataFingerprint(dir, "embeddings")
 
-  private val bundleMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Layouts.Once[Bundle]]
+  /** v1 bundles: slot the dir, version the corpus fingerprint; a
+    * corpus rewrite retires the whole superseded bundle root. */
+  private[graft] val bundleMemo = new graft.Memo[String, Long, Bundle](
+    retire = (dir, stale) =>
+      graft.IndexGc.retire(s"docbundle:$dir", stale.map(_.root)))
 
-  private val takedownMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Long], Long), Layouts.Once[Takedown]]
+  /** Takedown version families: slot the dir (one cached takedown per
+    * dir), version (ids, fingerprint); builds and evictions are
+    * serialized under the build gate. */
+  private[graft] val takedownMemo =
+    new graft.Memo[String, (Seq[Long], Long), Takedown](
+      gate = Layouts.withBuildGate)
 
   private val gen = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def clearMemos(): Unit = {
-    bundleMemo.clear(); takedownMemo.clear(); expansionMemo.clear()
-  }
 
   /** Write one layout + manifest + schema sidecar. `df` must carry a
     * `file_id` column. */
@@ -187,18 +190,12 @@ object DocForget {
     * and retires the whole superseded bundle root). */
   def bundleCached(spark: SparkSession, dir: String): Bundle = {
     val fp = fingerprintOf(dir)
-    val key = (dir, fp)
-    val v = bundleMemo.getOrElseUpdate(key, new Layouts.Once({
+    bundleMemo.get(dir, fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val root = sys.props("java.io.tmpdir") +
         s"/graft-docbundle-$tag-f${java.lang.Long.toHexString(fp)}"
       buildBundle(spark, dir, root)
-    })).value
-    val stale = bundleMemo.keys
-      .filter(k => k._1 == dir && k != key)
-      .flatMap(bundleMemo.remove).flatMap(_.peek).map(_.root).toSeq
-    graft.IndexGc.retire(s"docbundle:$dir", stale)
-    v
+    }
   }
 
   /** Rebuild the corpus fingerprint Bloom from the SURVIVING corpus
@@ -323,42 +320,36 @@ object DocForget {
     val ks = ids.distinct.sorted
     require(ks.nonEmpty && ks.size <= BloomSkip.MaxForgetKeys,
       s"takedown ids must be 1..${BloomSkip.MaxForgetKeys}")
-    val fp = fingerprintOf(dir)
-    val memoKey = (dir, ks, fp)
-    takedownMemo.getOrElseUpdate(memoKey, new Layouts.Once(
-      Layouts.withBuildGate {
-        val bundle = bundleCached(spark, dir)
-        val tag =
-          if (ks.size == 1) ks.head.toString
-          else "b" + java.lang.Long.toHexString(
-            md5LongScala(ks.mkString(",")))
-        val td = applyTakedown(spark, bundle, ks, tag)
-        // every artifact's version commits to its served lineage, and
-        // superseded takedowns expire by retain-set reference counting
-        // — the BloomSkip.forgottenLayoutCached discipline, applied
-        // symmetrically to the doc-bundle family; eviction + retention
-        // run ONLY here, serialized under the build gate
-        takedownMemo.keys.filter(k => k._1 == dir && k != memoKey)
-          .foreach(takedownMemo.remove)
-        Seq(bundle.corpus -> td.corpus, bundle.pack -> td.pack,
-          bundle.postings -> td.postings, bundle.ivf -> td.ivf)
-          .foreach { case (base, head) =>
-            Layouts.commitVersionIfAbsent(
-              BloomSkip.lineageLogOf(base), base)
-            Layouts.commitVersion(BloomSkip.lineageLogOf(base), head)
-            Layouts.vacuumRetain(spark, BloomSkip.lineageLogOf(base),
-              retainPaths = Set(base, head), inlineDelete = false)
-          }
-        td
-      })).value
+    takedownMemo.get(dir, (ks, fingerprintOf(dir))) {
+      val bundle = bundleCached(spark, dir)
+      val tag =
+        if (ks.size == 1) ks.head.toString
+        else "b" + java.lang.Long.toHexString(
+          md5LongScala(ks.mkString(",")))
+      val td = applyTakedown(spark, bundle, ks, tag)
+      // every artifact's version commits to its served lineage, and
+      // superseded takedowns expire by retain-set reference counting
+      // — the BloomSkip.forgottenLayoutCached discipline, applied
+      // symmetrically to the doc-bundle family; retention and the
+      // memo's eviction run ONLY here, serialized under the build gate
+      Seq(bundle.corpus -> td.corpus, bundle.pack -> td.pack,
+        bundle.postings -> td.postings, bundle.ivf -> td.ivf)
+        .foreach { case (base, head) =>
+          Layouts.commitVersionIfAbsent(
+            BloomSkip.lineageLogOf(base), base)
+          Layouts.commitVersion(BloomSkip.lineageLogOf(base), head)
+          Layouts.vacuumRetain(spark, BloomSkip.lineageLogOf(base),
+            retainPaths = Set(base, head), inlineDelete = false)
+        }
+      td
+    }
   }
 
   /** Whether the takedown for (dir, ids) is already built — the
     * serving layer's memoized bypass check. */
   def isTakedownMemoized(spark: SparkSession, dir: String,
       ids: Seq[Long]): Boolean =
-    takedownMemo.get((dir, ids.distinct.sorted, fingerprintOf(dir)))
-      .exists(_.peek.isDefined)
+    takedownMemo.isBuilt(dir, (ids.distinct.sorted, fingerprintOf(dir)))
 
   // ——— the served post-takedown reads (q161–q165) ———————————————————
 
@@ -470,8 +461,9 @@ object DocForget {
 
   // ——— cluster-cascade takedown (q166/q167) —————————————————————————
 
-  private val expansionMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Long], Long), Seq[(Long, Long)]]
+  /** Slot (dir, seeds), version the corpus fingerprint. */
+  private[graft] val expansionMemo =
+    new graft.Memo[(String, Seq[Long]), Long, Seq[(Long, Long)]]
 
   /** The (doc_id, comp) rows the seeds expand to — the shared core of
     * [[expandCluster]]/[[clusterExpansionCached]], memoized per
@@ -486,14 +478,14 @@ object DocForget {
     val seeds = seedIds.distinct.sorted
     require(seeds.nonEmpty && seeds.size <= BloomSkip.MaxForgetKeys,
       s"takedown seeds must be 1..${BloomSkip.MaxForgetKeys}")
-    expansionMemo.getOrElseUpdate((dir, seeds, fingerprintOf(dir)), {
+    expansionMemo.get((dir, seeds), fingerprintOf(dir)) {
       val out = clusterExpansion(spark, dir, seeds)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       require(out.size <= BloomSkip.MaxForgetKeys,
         s"cluster cascade expanded to ${out.size} docs — beyond the " +
           s"${BloomSkip.MaxForgetKeys} batch cap; split the request")
       out
-    })
+    }
   }
 
   /** Expand takedown seeds through their q60 near-dup clusters: the
@@ -513,8 +505,7 @@ object DocForget {
     * serving layer's gate check. */
   def isExpansionMemoized(spark: SparkSession, dir: String,
       seedIds: Seq[Long]): Boolean =
-    expansionMemo.contains(
-      (dir, seedIds.distinct.sorted, fingerprintOf(dir)))
+    expansionMemo.isBuilt((dir, seedIds.distinct.sorted), fingerprintOf(dir))
 
   /** q167: the cascade accounting — every (doc_id, cluster) the seeds
     * expand to, i.e. exactly what [[clusterTakedownScan]] will delete.

@@ -1,6 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions.cosineNative
@@ -135,16 +134,17 @@ object IvfIndex {
   // many searches against it; re-paying training + a full corpus rewrite
   // per query (as q56 did through round 5) hides the number that matters
   // at 100 TB — per-request search latency over the existing index. The
-  // memos are keyed on (dir, cells, iters, dataFingerprint): the
-  // fingerprint folds in every embedding file's (name, mtime, size), so
-  // an in-place rewrite of the source parquet (CDC refresh, compaction)
-  // changes the key and forces a fresh train + build instead of silently
-  // serving a stale index from a warm JVM. The memos live for the JVM
-  // session (Verify, Bench, HttpServer are all one-session hosts).
-  // Caches.releaseAll does NOT clear these: the index is durable state,
-  // not a per-query carrier.
-  private val trainMemo = TrieMap.empty[(String, Int, Int, Long), Centroids]
-  private val indexMemo = TrieMap.empty[(String, Int, Int, Long), String]
+  // memos' slot is (dir, cells, iters) and their version the
+  // dataFingerprint: it folds in every embedding file's (name, mtime,
+  // size), so an in-place rewrite of the source parquet (CDC refresh,
+  // compaction) forces a fresh train + build instead of silently
+  // serving a stale index from a warm JVM. Superseded index directories
+  // go to the deferred reaper (deleted one full refresh after their key
+  // leaves the memo — see IndexGc).
+  private[graft] val trainMemo = new graft.Memo[(String, Int, Int), Long, Centroids]
+  private[graft] val indexMemo = new graft.Memo[(String, Int, Int), Long, String](
+    retire = { case ((dir, cells, iters), stale) =>
+      graft.IndexGc.retire(s"ivf:$dir:$cells:$iters", stale) })
 
   /** Cheap change detector for the embeddings under `dir`: a hash over
     * each data file's (name, mtime, size) — one driver-side directory
@@ -165,25 +165,9 @@ object IvfIndex {
       }
   }
 
-  /** Insert-or-get under `key`, evicting other entries for the same
-    * (dir, cells, iters) whose fingerprint is superseded — a long-lived
-    * server that sees periodic data refreshes must not accrete one memo
-    * entry (and one Centroids object) per refresh forever. */
-  private def memoSwap[A](memo: TrieMap[(String, Int, Int, Long), A],
-      key: (String, Int, Int, Long),
-      onEvict: Seq[A] => Unit = (_: Seq[A]) => ())(build: => A): A = {
-    val v = memo.getOrElseUpdate(key, build)
-    val stale = memo.keys.filter(k =>
-      (k._1, k._2, k._3) == ((key._1, key._2, key._3)) && k != key)
-      .flatMap(memo.remove).toSeq
-    onEvict(stale)
-    v
-  }
-
   private def trainCachedFp(spark: SparkSession, dir: String, cells: Int,
       iters: Int, fp: Long): Centroids =
-    memoSwap(trainMemo, (dir, cells, iters, fp))(
-      train(spark, dir, cells, iters))
+    trainMemo.get((dir, cells, iters), fp)(train(spark, dir, cells, iters))
 
   /** [[train]], memoized per (dir, cells, iters, data fingerprint) for
     * the JVM lifetime. */
@@ -207,10 +191,7 @@ object IvfIndex {
       iters: Int = 3): (String, Centroids) = {
     val fp = dataFingerprint(dir)
     val cents = trainCachedFp(spark, dir, cells, iters, fp)
-    // superseded index directories go to the deferred reaper (deleted
-    // one full refresh after their key leaves the memo — see IndexGc)
-    val path = memoSwap(indexMemo, (dir, cells, iters, fp),
-      stale => graft.IndexGc.retire(s"ivf:$dir:$cells:$iters", stale)) {
+    val path = indexMemo.get((dir, cells, iters), fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
         s"/graft-ivf-$tag-c$cells-i$iters-f${java.lang.Long.toHexString(fp)}"
@@ -219,9 +200,6 @@ object IvfIndex {
     }
     (path, cents)
   }
-
-  /** Forget memoized training/index state (tests, data refresh). */
-  def clearMemos(): Unit = { trainMemo.clear(); indexMemo.clear() }
 
   /** Materialize the INVERTED FILE: the corpus rewritten cell-partitioned
     * (`cell=<c>/` directories). This is the real IVF storage layout — at

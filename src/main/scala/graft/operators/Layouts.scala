@@ -26,21 +26,6 @@ object Layouts {
   case class DeleteReport(filesTotal: Long, filesRewritten: Long,
       filesShared: Long, rowsDeleted: Long)
 
-  /** Build-once memo cell: `TrieMap.getOrElseUpdate` can race two
-    * builders on a cold key (round-14 advice — two concurrent
-    * requests both running a multi-second layout build into the SAME
-    * deterministic tmp path). Only one cell wins the CAS and its lazy
-    * val runs the builder exactly once; the loser blocks on the
-    * winner's cell. A builder that THROWS leaves the cell retryable
-    * (lazy-val failure semantics) — the copy-on-write writers
-    * delete-then-rebuild their target, so a retry over a torn
-    * directory is safe. */
-  private[graft] final class Once[V](builder: => V) {
-    @volatile private var done = false
-    lazy val value: V = { val v = builder; done = true; v }
-    def peek: Option[V] = if (done) Some(value) else None
-  }
-
   def manifestPath(versionPath: String): String = s"$versionPath.manifest"
 
   /** Schema sidecar of a layout version: an empty single-file parquet
@@ -59,11 +44,12 @@ object Layouts {
     * the mutual exclusion HERE — around the build itself — closes that
     * window for every caller. Reentrant, so a gated builder composing
     * another gated builder on the same thread never self-deadlocks. */
-  private val buildGate = new java.util.concurrent.locks.ReentrantLock()
-
-  def withBuildGate[A](body: => A): A = {
-    buildGate.lock()
-    try body finally buildGate.unlock()
+  val withBuildGate: graft.Memo.Gate = new graft.Memo.Gate {
+    private val lock = new java.util.concurrent.locks.ReentrantLock()
+    def apply[A](body: => A): A = {
+      lock.lock()
+      try body finally lock.unlock()
+    }
   }
 
   /** Write the version's schema sidecar (see [[schemaPath]]): an empty
@@ -73,15 +59,9 @@ object Layouts {
     layout.limit(0).repartition(1).write.mode("overwrite")
       .parquet(schemaPath(versionPath))
 
-  private val manifestMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Map[Long, String]]
-
-  private val manifestCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private[operators] def clearManifestMemo(): Unit = {
-    manifestMemo.clear(); manifestCountMemo.clear()
-  }
+  /** Driver-side manifest maps and file counts, per manifest path. */
+  private[graft] val manifestMemo = new graft.Memo[String, Unit, Map[Long, String]]
+  private[graft] val manifestCountMemo = new graft.Memo[String, Unit, Long]
 
   /** Measured dispatch for manifest access (round-15 "what's wrong"
     * #1): a manifest of up to this many files memoizes as a driver map
@@ -98,13 +78,12 @@ object Layouts {
   /** The manifest's file count WITHOUT materializing the map — parquet
     * row-count metadata when the map is not already memoized. */
   def manifestFileCount(spark: SparkSession, versionPath: String): Long =
-    manifestMemo.get(manifestPath(versionPath)).map(_.size.toLong)
-      .getOrElse(manifestCountMemo.getOrElseUpdate(
-        manifestPath(versionPath), {
-          val mf = new java.io.File(manifestPath(versionPath))
-          if (mf.exists()) spark.read.parquet(mf.getAbsolutePath).count()
-          else listFileDirs(new java.io.File(versionPath)).size.toLong
-        }))
+    manifestMemo.peek(manifestPath(versionPath), ()).map(_.size.toLong)
+      .getOrElse(manifestCountMemo.get(manifestPath(versionPath), ()) {
+        val mf = new java.io.File(manifestPath(versionPath))
+        if (mf.exists()) spark.read.parquet(mf.getAbsolutePath).count()
+        else listFileDirs(new java.io.File(versionPath)).size.toLong
+      })
 
   private def isDriverSized(spark: SparkSession, versionPath: String) =
     manifestFileCount(spark, versionPath) <= MaxDriverManifestFiles
@@ -135,14 +114,14 @@ object Layouts {
     * lifetime. Pre-manifest layouts (hand-built fixtures) fall back to
     * listing their own directory. */
   def manifestOf(spark: SparkSession, versionPath: String): Map[Long, String] =
-    manifestMemo.getOrElseUpdate(manifestPath(versionPath), {
+    manifestMemo.get(manifestPath(versionPath), ()) {
       val mf = new java.io.File(manifestPath(versionPath))
       if (mf.exists())
         spark.read.parquet(mf.getAbsolutePath)
           .select(col("file_id").cast("long"), col("path"))
           .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       else listFileDirs(new java.io.File(versionPath))
-    })
+    }
 
   private[operators] def writeManifest(spark: SparkSession,
       versionPath: String, entries: Map[Long, String]): Unit = {
@@ -150,8 +129,14 @@ object Layouts {
     entries.toSeq.sortBy(_._1).toDF("file_id", "path")
       .repartition(1).write.mode("overwrite")
       .parquet(manifestPath(versionPath))
-    manifestMemo.remove(manifestPath(versionPath))
-    manifestCountMemo.remove(manifestPath(versionPath))
+    forgetManifest(versionPath)
+  }
+
+  /** Drop the memoized map and count of a rewritten or expired
+    * manifest. */
+  private def forgetManifest(versionPath: String): Unit = {
+    manifestMemo.invalidate(manifestPath(versionPath))
+    manifestCountMemo.invalidate(manifestPath(versionPath))
   }
 
   /** The `file_id=N` directories physically under `root`. */
@@ -459,8 +444,7 @@ object Layouts {
         .foreach { side =>
           if (new java.io.File(side).exists()) remove(side)
         }
-      manifestMemo.remove(manifestPath(p))
-      manifestCountMemo.remove(manifestPath(p))
+      forgetManifest(p)
       java.nio.file.Files.deleteIfExists(
         new java.io.File(logDir, f"v$id%06d.txt").toPath)
     }
@@ -523,8 +507,7 @@ object Layouts {
           rewritten.toSeq.toDF("file_id", "path"))
         .repartition(1).sortWithinPartitions("file_id")
         .write.mode("overwrite").parquet(manifestPath(outPath))
-      manifestMemo.remove(manifestPath(outPath))
-      manifestCountMemo.remove(manifestPath(outPath))
+      forgetManifest(outPath)
     }
     // schema sidecar: an erasure can empty the manifest entirely (every
     // candidate file's every row deleted, nothing shared) — the sidecar

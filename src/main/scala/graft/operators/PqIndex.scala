@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions
@@ -92,20 +90,13 @@ object PqIndex {
     (0 until m).flatMap(s => (0 until k).flatMap(c => byKey((s, c))))
   }
 
-  // train-once memo, the IvfIndex deployment contract (keyed on the
-  // data fingerprint so an in-place refresh retrains)
-  private val memo =
-    TrieMap.empty[(String, Int, Int, Int, Long), SubCentroids]
+  // train-once memo, the IvfIndex deployment contract (versioned by the
+  // data fingerprint so an in-place refresh retrains and evicts)
+  private[graft] val memo = new graft.Memo[(String, Int, Int, Int), Long, SubCentroids]
   def trainCached(spark: SparkSession, dir: String, m: Int = M,
       k: Int = K, iters: Int = Iters): SubCentroids =
-    memo.getOrElseUpdate(
-      (dir, m, k, iters, IvfIndex.dataFingerprint(dir)),
+    memo.get((dir, m, k, iters), IvfIndex.dataFingerprint(dir))(
       train(spark, dir, m, k, iters))
-
-  /** Test/cold-bench hook: drop the trained codebooks (the
-    * IvfIndex.clearMemos convention — plain values, nothing to
-    * unpersist). */
-  def clearMemos(): Unit = memo.clear()
 
   /** q108: every vector's PQ codes — map-only encode under the trained
     * codebook, one row per (vector, subspace) (the q23 exploded-array

@@ -296,11 +296,13 @@ object Ranking {
     * while still pruning ~62/64 of the index for a 2-term phrase. */
   val PostingsBuckets: Int = 64
 
-  private val postingsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Long), String]
-
-  /** Forget memoized postings indexes (tests, cold benching). */
-  def clearMemos(): Unit = postingsMemo.clear()
+  /** Postings indexes: slot (dir, buckets), version the documents
+    * fingerprint. A refresh hands the superseded directory to the
+    * deferred reaper: deleted one full refresh later, so a scan that
+    * obtained the old path before the refresh keeps its files. */
+  private[graft] val postingsMemo = new graft.Memo[(String, Int), Long, String](
+    retire = { case ((dir, nBuckets), stale) =>
+      graft.IndexGc.retire(s"postings:$dir:$nBuckets", stale) })
 
   /** Materialize the POSITIONAL POSTINGS index: every (doc_id, pos,
     * term) row of the corpus, written partitioned by a crc32 term
@@ -339,22 +341,13 @@ object Ranking {
   def postingsFileCached(spark: SparkSession, dir: String,
       nBuckets: Int = PostingsBuckets): String = {
     val fp = IvfIndex.dataFingerprint(dir, table = "documents")
-    val key = (dir, nBuckets, fp)
-    val v = postingsMemo.getOrElseUpdate(key, {
+    postingsMemo.get((dir, nBuckets), fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
         s"/graft-postings-$tag-b$nBuckets-f${java.lang.Long.toHexString(fp)}"
       buildPostingsFile(spark, dir, p, nBuckets)
       p
-    })
-    // evict superseded-fingerprint keys AND hand their directories to
-    // the deferred reaper: deleted one full refresh later, so a scan
-    // that obtained the old path before this refresh keeps its files
-    val stale = postingsMemo.keys
-      .filter(k => (k._1, k._2) == ((dir, nBuckets)) && k != key)
-      .flatMap(postingsMemo.remove).toSeq
-    graft.IndexGc.retire(s"postings:$dir:$nBuckets", stale)
-    v
+    }
   }
 
   /** Incremental ingest: tokenize NEW documents and append their

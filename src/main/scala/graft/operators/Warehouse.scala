@@ -198,11 +198,13 @@ object Warehouse {
       df.sparkSession.read.parquet(outDir), outDir)
   }
 
-  private val zlayoutMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Long), Layouts.Once[String]]
-
-  /** Forget memoized z-layouts (tests, cold benching). */
-  def clearMemos(): Unit = { zlayoutMemo.clear(); zforgetMemo.clear() }
+  /** Z-layouts: slot (dir, shift), version the events fingerprint; a
+    * refresh retires the superseded layout and its served lineage. */
+  private[graft] val zlayoutMemo = new graft.Memo[(String, Int), Long, String](
+    retire = { case ((dir, shift), stale) =>
+      graft.IndexGc.retire(s"zlayout:$dir:$shift", stale.flatMap(p =>
+        Seq(p, Layouts.manifestPath(p), Layouts.schemaPath(p)) ++
+          BloomSkip.lineagePathsOf(p))) })
 
   /** The materialized z-order layout of the (user_id, item) event
     * space for `dir`: built on first request, reused for the JVM
@@ -213,8 +215,7 @@ object Warehouse {
   def zlayoutCached(spark: SparkSession, dir: String,
       shift: Int = ZShift): String = {
     val fp = IvfIndex.dataFingerprint(dir, table = "events")
-    val key = (dir, shift, fp)
-    val v = zlayoutMemo.getOrElseUpdate(key, new Layouts.Once({
+    zlayoutMemo.get((dir, shift), fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
         s"/graft-zlayout-$tag-s$shift-f${java.lang.Long.toHexString(fp)}"
@@ -226,14 +227,7 @@ object Warehouse {
         "user_id", "item", p, shift)
       Layouts.commitVersionIfAbsent(BloomSkip.lineageLogOf(p), p)
       p
-    })).value
-    val stale = zlayoutMemo.keys
-      .filter(k => (k._1, k._2) == ((dir, shift)) && k != key)
-      .flatMap(zlayoutMemo.remove).flatMap(_.peek)
-      .flatMap(p => Seq(p, Layouts.manifestPath(p),
-        Layouts.schemaPath(p)) ++ BloomSkip.lineagePathsOf(p)).toSeq
-    graft.IndexGc.retire(s"zlayout:$dir:$shift", stale)
-    v
+    }
   }
 
   /** Quadrant-enumeration cap for [[zorderScan]]: past this, the
@@ -394,8 +388,12 @@ object Warehouse {
       shift: Int = ZShift): Layouts.DeleteReport =
     zorderDeleteUsers(spark, versionPath, outPath, Seq(user), shift)
 
-  private val zforgetMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Long], Int, Long), Layouts.Once[(String, Layouts.DeleteReport)]]
+  /** Post-erasure versions: slot the dir (one cached version per dir),
+    * version (users, shift, fingerprint); builds and evictions are
+    * serialized under the build gate. */
+  private[graft] val zforgetMemo =
+    new graft.Memo[String, (Seq[Long], Int, Long), (String, Layouts.DeleteReport)](
+      gate = Layouts.withBuildGate)
 
   private val zforgetGen = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -410,37 +408,31 @@ object Warehouse {
       shift: Int = ZShift): (String, Layouts.DeleteReport) = {
     val us = users.distinct.sorted
     val fp = IvfIndex.dataFingerprint(dir, table = "events")
-    val memoKey = (dir, us, shift, fp)
-    zforgetMemo.getOrElseUpdate(memoKey, new Layouts.Once(
-      Layouts.withBuildGate {
-        val src = zlayoutCached(spark, dir, shift)
-        val tag =
-          if (us.size == 1) us.head.toString
-          else "b" + java.lang.Long.toHexString(
-            graft.functions.TextFunctions.md5LongScala(us.mkString(",")))
-        val p = s"$src.forget$tag-p${ProcessHandle.current().pid()}" +
-          s"-g${zforgetGen.incrementAndGet()}"
-        val report = zorderDeleteUsers(spark, src, p, us, shift)
-        Layouts.commitVersion(BloomSkip.lineageLogOf(src), p)
-        // eviction + retention only under the build gate (see
-        // BloomSkip.forgottenLayoutCached) — memo hits never vacuum
-        zforgetMemo.keys.filter(k => k._1 == dir && k != memoKey)
-          .foreach(zforgetMemo.remove)
-        Layouts.vacuumRetain(spark, BloomSkip.lineageLogOf(src),
-          retainPaths = Set(src, p), inlineDelete = false)
-        (p, report)
-      })).value
+    zforgetMemo.get(dir, (us, shift, fp)) {
+      val src = zlayoutCached(spark, dir, shift)
+      val tag =
+        if (us.size == 1) us.head.toString
+        else "b" + java.lang.Long.toHexString(
+          graft.functions.TextFunctions.md5LongScala(us.mkString(",")))
+      val p = s"$src.forget$tag-p${ProcessHandle.current().pid()}" +
+        s"-g${zforgetGen.incrementAndGet()}"
+      val report = zorderDeleteUsers(spark, src, p, us, shift)
+      Layouts.commitVersion(BloomSkip.lineageLogOf(src), p)
+      // retention only under the build gate (see
+      // BloomSkip.forgottenLayoutCached) — memo hits never vacuum
+      Layouts.vacuumRetain(spark, BloomSkip.lineageLogOf(src),
+        retainPaths = Set(src, p), inlineDelete = false)
+      (p, report)
+    }
   }
 
   /** Whether the post-erasure version for (dir, users) is already
     * built and memoized — a repeat request answers without the build
     * gate. */
   def isZforgetMemoized(spark: SparkSession, dir: String,
-      users: Seq[Long], shift: Int = ZShift): Boolean = {
-    val fp = IvfIndex.dataFingerprint(dir, table = "events")
-    zforgetMemo.get((dir, users.distinct.sorted, shift, fp))
-      .exists(_.peek.isDefined)
-  }
+      users: Seq[Long], shift: Int = ZShift): Boolean =
+    zforgetMemo.isBuilt(dir, (users.distinct.sorted, shift,
+      IvfIndex.dataFingerprint(dir, table = "events")))
 
   /** q155: the post-erasure z-order scan — delete `user`'s rows
     * through quadrant-candidate rewrites, then run the q145 rectangle

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextExpressions
-import graft.operators.{BloomSkip, Compact, Dedup, Layouts}
+import graft.operators.{BloomSkip, Compact, Dedup}
 
 /** Stream-maintained NEAR-DUP CLUSTER TABLE — incremental maintenance
   * of q60's MinHash-LSH cluster assignment under continuous ingest
@@ -554,12 +554,17 @@ object ClusterStream {
   val BuildEpochs = 3
 
   private val gen = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val tableMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long), Layouts.Once[String]]
-  private val forgetMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Seq[Long], Long), Layouts.Once[String]]
 
-  def clearMemos(): Unit = { tableMemo.clear(); forgetMemo.clear() }
+  /** Table stores: slot the dir, version the documents fingerprint; a
+    * corpus refresh hands the superseded store to the deferred reaper,
+    * so a long-lived server does not keep one store per refresh. */
+  private[graft] val tableMemo = new graft.Memo[String, Long, String](
+    retire = (dir, stale) => graft.IndexGc.retire(s"clustab:$dir", stale))
+
+  /** Post-takedown stores: slot (dir, ids), version the fingerprint. */
+  private[graft] val forgetMemo = new graft.Memo[(String, Seq[Long]), Long, String](
+    retire = { case ((dir, ks), stale) =>
+      graft.IndexGc.retire(s"clusforget:$dir:${ks.mkString(",")}", stale) })
 
   private def fingerprintOf(spark: SparkSession, dir: String): Long =
     graft.operators.IvfIndex.dataFingerprint(dir, "documents")
@@ -578,8 +583,7 @@ object ClusterStream {
   /** Whether the corpus's table store is already built — the serving
     * layer's load-shed gate check. */
   def isTableMemoized(spark: SparkSession, dir: String): Boolean =
-    tableMemo.get((dir, fingerprintOf(spark, dir)))
-      .exists(_.peek.isDefined)
+    tableMemo.isBuilt(dir, fingerprintOf(spark, dir))
 
   /** The (built-on-first-use, then memoized) table store for a test
     * corpus directory — what the HTTP `source=table` paths read. */
@@ -588,13 +592,12 @@ object ClusterStream {
 
   private def storeFor(spark: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    tableMemo.getOrElseUpdate((dir, fingerprintOf(spark, dir)),
-        new Layouts.Once({
-          val root = sys.props("java.io.tmpdir") +
-            s"/graft-clustab-$tag-p${ProcessHandle.current().pid()}" +
-            s"-g${gen.incrementAndGet()}"
-          buildStore(spark, dir, root)
-        })).value
+    tableMemo.get(dir, fingerprintOf(spark, dir)) {
+      val root = sys.props("java.io.tmpdir") +
+        s"/graft-clustab-$tag-p${ProcessHandle.current().pid()}" +
+        s"-g${gen.incrementAndGet()}"
+      buildStore(spark, dir, root)
+    }
   }
 
   /** q168: the incrementally maintained assignment over the corpus
@@ -617,16 +620,14 @@ object ClusterStream {
       ids: Seq[Long]): DataFrame = {
     val ks = ids.distinct.sorted
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = forgetMemo.getOrElseUpdate(
-        (dir, ks, fingerprintOf(spark, dir)),
-        new Layouts.Once({
-          val r = sys.props("java.io.tmpdir") +
-            s"/graft-clusforget-$tag-p${ProcessHandle.current().pid()}" +
-            s"-g${gen.incrementAndGet()}"
-          buildStore(spark, dir, r)
-          takedownClusters(spark, r, ks)
-          r
-        })).value
+    val root = forgetMemo.get((dir, ks), fingerprintOf(spark, dir)) {
+      val r = sys.props("java.io.tmpdir") +
+        s"/graft-clusforget-$tag-p${ProcessHandle.current().pid()}" +
+        s"-g${gen.incrementAndGet()}"
+      buildStore(spark, dir, r)
+      takedownClusters(spark, r, ks)
+      r
+    }
     assignmentTable(spark, root).orderBy("doc_id")
   }
 }

@@ -135,7 +135,7 @@ class CorpusBuildSpec extends SparkSpec {
       .map(_.toSeq).toSeq.sortBy(_.toString)
     val first = rows()
     assert(rows() == first)      // memo hit: the same checkpointed frame
-    Curation.clearManifestMemo()
+    Curation.manifestMemo.clear()
     assert(rows() == first)      // fresh build: deterministic artifact
     graft.Caches.releaseAll()
   }
@@ -179,8 +179,8 @@ class CorpusBuildSpec extends SparkSpec {
       Curation.corpusBuildPersistent(spark, corpus, out))
     assert(first.nonEmpty)
     // "another session": all per-JVM memos gone, embeddings gone
-    Curation.clearManifestMemo()
-    Curation.clearGateMemos()
+    Curation.manifestMemo.clear()
+    Curation.gateModelMemo.clear(); Curation.gateSignalMemo.clear()
     assert(new java.io.File(s"$corpus/embeddings.parquet").delete())
     assert(manifestRows(
       Curation.corpusBuildPersistent(spark, corpus, out)) == first)

@@ -16,6 +16,11 @@ class DocForgetSpec extends SparkSpec {
   private lazy val td = DocForget.takedownCached(spark, sf, delIds)
   private lazy val docs = graft.Tables.documents(spark, sf)
 
+  private def clearMemos(): Unit = {
+    DocForget.bundleMemo.clear(); DocForget.takedownMemo.clear()
+    DocForget.expansionMemo.clear()
+  }
+
   test("post-takedown corpus probe equals the plain filter with the " +
       "batch excluded") {
     val probes = delIds ++ Seq(7L, 100L)
@@ -273,13 +278,13 @@ class DocForgetSpec extends SparkSpec {
     assert(before.nonEmpty)
     // memo loss (a fresh JVM): the deterministic root already exists
     // and is complete — the rebuild must reuse it, byte-untouched
-    DocForget.clearMemos()
+    clearMemos()
     val b2 = DocForget.bundleCached(spark, sf)
     assert(b2.root == b.root && corpusFiles() == before,
       "a valid bundle root was rebuilt instead of reused")
     // a TORN root (crashed build: completion proof missing) is rebuilt
     // through a tmp + atomic publish; the torn root retires deferred
-    DocForget.clearMemos()
+    clearMemos()
     assert(new java.io.File(s"${b.root}/_bloom.bf").delete())
     val b3 = DocForget.bundleCached(spark, sf)
     assert(b3.root == b.root)

@@ -9,6 +9,10 @@ class IvfIndexSpec extends SparkSpec {
 
   private lazy val cents = IvfIndex.train(spark, sf, cells = 8, iters = 2)
 
+  private def clearMemos(): Unit = {
+    IvfIndex.trainMemo.clear(); IvfIndex.indexMemo.clear()
+  }
+
   test("train yields one centroid per cell with the right dimensionality") {
     assert(cents.length == 8)
     assert(cents.map(_._1).toSet == (0 until 8).toSet)
@@ -96,7 +100,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("train/build memo: one training, one index write per (dir,cells,iters)") {
-    IvfIndex.clearMemos()
+    clearMemos()
     val c1 = IvfIndex.trainCached(spark, sf, cells = 8, iters = 2)
     val c2 = IvfIndex.trainCached(spark, sf, cells = 8, iters = 2)
     assert(c1 eq c2, "second trainCached must return the memoized object")
@@ -110,7 +114,7 @@ class IvfIndexSpec extends SparkSpec {
     // different hyper-parameters must not alias the same index
     val (p3, c3) = IvfIndex.invertedFileCached(spark, sf, cells = 4, iters = 1)
     assert(p3 != p1 && c3.length == 4)
-    IvfIndex.clearMemos()
+    clearMemos()
   }
 
   test("memo invalidates when the embeddings data is rewritten in place") {
@@ -120,7 +124,7 @@ class IvfIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivfdata").toString
     graft.Tables.embeddings(spark, sf)
       .write.parquet(s"$dir/embeddings.parquet")
-    IvfIndex.clearMemos()
+    clearMemos()
     val c1 = IvfIndex.trainCached(spark, dir, cells = 4, iters = 1)
     assert(c1 eq IvfIndex.trainCached(spark, dir, cells = 4, iters = 1),
       "unchanged data must keep the memo")
@@ -138,12 +142,12 @@ class IvfIndexSpec extends SparkSpec {
     assert(new java.io.File(p2).exists(), "fresh index must be materialized")
     assert(new java.io.File(p1).listFiles().map(_.lastModified).max == m1,
       "the superseded index directory must be left untouched for readers")
-    IvfIndex.clearMemos()
+    clearMemos()
   }
 
   test("ivf GC: a superseded index directory is reaped one full " +
       "refresh after its key leaves the memo") {
-    graft.IndexGc.reset(); IvfIndex.clearMemos()
+    graft.IndexGc.reset(); clearMemos()
     // this test drives three refresh cycles in milliseconds — drop the
     // wall-clock fence so the generation fence alone is under test
     // try/finally: a mid-test failure must not leave the wall-clock
@@ -168,7 +172,7 @@ class IvfIndexSpec extends SparkSpec {
         "current index unaffected by the reap")
     } finally {
       graft.IndexGc.graceMs = grace0
-      IvfIndex.clearMemos(); graft.IndexGc.reset()
+      clearMemos(); graft.IndexGc.reset()
     }
   }
 

@@ -20,6 +20,10 @@ class ManifestDispatchSpec extends SparkSpec {
     d
   }
 
+  private def clearManifestMemo(): Unit = {
+    Layouts.manifestMemo.clear(); Layouts.manifestCountMemo.clear()
+  }
+
   private def withThreshold[A](t: Long)(body: => A): A = {
     val t0 = Layouts.MaxDriverManifestFiles
     Layouts.MaxDriverManifestFiles = t
@@ -78,7 +82,7 @@ class ManifestDispatchSpec extends SparkSpec {
     }
     val (repA, rowsA) = erase("A")
     val (repB, rowsB) = withThreshold(1L) {
-      Layouts.clearManifestMemo()
+      clearManifestMemo()
       erase("B")
     }
     assert(repB == repA, s"reports diverge: $repB vs $repA")
@@ -115,7 +119,7 @@ class ManifestDispatchSpec extends SparkSpec {
     val repA = Layouts.vacuum(spark, logA, keepLast = 1)
     val (rootB, logB) = buildLineage("B")
     val repB = withThreshold(1L) {
-      Layouts.clearManifestMemo()
+      clearManifestMemo()
       Layouts.vacuum(spark, logB, keepLast = 1)
     }
     assert(repB == repA, s"reports diverge: $repB vs $repA")
@@ -145,7 +149,7 @@ class ManifestDispatchSpec extends SparkSpec {
       (id, real.getOrElse(id, s"$vp/file_id=$id")))
     entries.toDF("file_id", "path").repartition(1)
       .write.mode("overwrite").parquet(Layouts.manifestPath(vp))
-    Layouts.clearManifestMemo()
+    clearManifestMemo()
     assert(Layouts.manifestFileCount(spark, vp) == 200000L)
     val t0 = System.nanoTime()
     val got = Layouts.manifestEntriesFor(spark, vp,
@@ -167,7 +171,7 @@ class ManifestDispatchSpec extends SparkSpec {
     withThreshold(1L) {
       // evict the memoized map so the relational arm is genuinely
       // resolving from the manifest parquet
-      Layouts.clearManifestMemo()
+      clearManifestMemo()
       assert(Layouts.manifestEntriesFor(spark, layout,
         Set(1L, 5L, 999L)) == want)
       assert(Layouts.manifestFileCount(spark, layout) == all.size.toLong)

@@ -136,7 +136,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("q131 postings GC: a superseded index dies one full refresh " +
       "after its key leaves the memo; current readers are unaffected") {
-    graft.IndexGc.reset(); Ranking.clearMemos()
+    graft.IndexGc.reset(); Ranking.postingsMemo.clear()
     // refresh cycles run in milliseconds here — drop the wall-clock
     // fence so the generation fence alone is under test
     // try/finally: a mid-test failure must not leave the wall-clock
@@ -175,7 +175,7 @@ class RetrievalSpec extends SparkSpec {
       assert(got == Seq(1L))
     } finally {
       graft.IndexGc.graceMs = grace0
-      Ranking.clearMemos(); graft.IndexGc.reset()
+      Ranking.postingsMemo.clear(); graft.IndexGc.reset()
     }
   }
 

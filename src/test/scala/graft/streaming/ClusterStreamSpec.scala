@@ -249,4 +249,39 @@ class ClusterStreamSpec extends SparkSpec {
     val got = asg(ClusterStream.assignmentTable(spark, outDir))
     assert(got == Set(3L -> 3L, 4L -> 3L), s"$got")
   }
+
+  test("table GC: a superseded store is reaped one full refresh after " +
+      "its key leaves the memo") {
+    graft.IndexGc.reset(); ClusterStream.tableMemo.clear()
+    // three refresh cycles in milliseconds — drop the wall-clock fence
+    // so the generation fence alone is under test; try/finally so a
+    // mid-test failure cannot leave it disabled for later tests
+    val grace0 = graft.IndexGc.graceMs; graft.IndexGc.graceMs = 0L
+    try {
+      val dir = Files.createTempDirectory("clusgc").toString
+      def rewrite(n: Int): Unit = graft.Tables.documents(spark, sf)
+        .select("doc_id", "text").orderBy("doc_id").limit(n)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      rewrite(60)
+      val p1 = ClusterStream.tableFor(spark, dir)
+      assert(ClusterStream.tableFor(spark, dir) == p1, "memo hit rebuilt")
+      rewrite(40)
+      val p2 = ClusterStream.tableFor(spark, dir)
+      assert(p2 != p1 && new java.io.File(p1).exists(),
+        "first refresh condemns only — in-flight readers keep p1")
+      rewrite(20)
+      val p3 = ClusterStream.tableFor(spark, dir)
+      assert(p3 != p2)
+      assert(!new java.io.File(p1).exists(), "p1 must be reaped now")
+      assert(new java.io.File(p2).exists(), "p2 gets its grace refresh")
+      val want = asg(ClusterStream.batchAssignmentOn(
+        graft.Tables.documents(spark, dir)))
+      assert(want.size == 20)
+      assert(asg(ClusterStream.assignmentTable(spark, p3)) == want,
+        "current store damaged by the reap")
+    } finally {
+      graft.IndexGc.graceMs = grace0
+      ClusterStream.tableMemo.clear(); graft.IndexGc.reset()
+    }
+  }
 }
