@@ -1,10 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graft.{CosineSimilarity, GramHashes, Int8Quantize, MinHashSig, ShingleSet, SimHashSig}
+import graft.serving.Ops
+import graft.serving.Ops.SqlParams
 
 /** SQL surface for the engine's native expressions AND operator
   * families, registered through the standard `SparkSessionExtensions`
@@ -18,8 +20,9 @@ import org.apache.spark.sql.graft.{CosineSimilarity, GramHashes, Int8Quantize, M
   *
   * Scalar expressions bind directly; the parameterizable operator
   * families are TABLE-VALUED functions (Spark's table-function
-  * registry, the `range(...)` mechanism) that read the corpus
-  * directory registered by [[GraftSession.sqlSurface]] and expand to
+  * registry, the `range(...)` mechanism): the entries of
+  * [[graft.serving.Ops]] that have a SQL name. Each reads the corpus
+  * directory registered by [[GraftSession.sqlSurface]] and expands to
   * the same logical plan the Scala registry function builds —
   *
   *   SELECT * FROM phrase_search('query big part')
@@ -29,47 +32,8 @@ import org.apache.spark.sql.graft.{CosineSimilarity, GramHashes, Int8Quantize, M
   * (PublisherMapperImpl.java:65-109) re-expressed as SQL over
   * Catalyst plans. Literal arguments only (they parameterize plan
   * CONSTRUCTION, exactly like the ES DSL's request body); omitted
-  * trailing arguments take the operator's Scala defaults. */
+  * trailing arguments take the table's defaults, the same as HTTP's. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intArg(e: Expression, fn: String): Int = e match {
-    case Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal int argument, got $other")
-  }
-
-  private def strArg(e: Expression, fn: String): String = e match {
-    case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-      v.toString
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal string argument, got $other")
-  }
-
-  private def longArg(e: Expression, fn: String): Long = e match {
-    case Literal(v: Int, _) => v.toLong
-    case Literal(v: Long, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a literal integer argument, got $other")
-  }
-
-  /** `args(i)` parsed by `f`, or `dflt` when the trailing argument was
-    * omitted — TVF arguments mirror the Scala defaults. */
-  private def at[A](args: Seq[Expression], i: Int,
-      f: Expression => A, dflt: A): A =
-    if (args.length > i) f(args(i)) else dflt
-
-  private def registerTvf(ext: SparkSessionExtensions, name: String)
-      (build: (SparkSession, String, Seq[Expression]) => DataFrame): Unit =
-    ext.injectTableFunction((new FunctionIdentifier(name),
-      new ExpressionInfo(classOf[GraftExtensions].getName, name),
-      (args: Seq[Expression]) => {
-        val spark = SparkSession.active
-        val dir = spark.conf.getOption(GraftSession.SqlDirKey).getOrElse(
-          throw new IllegalArgumentException(
-            s"$name: no corpus registered for the SQL surface — call " +
-              "GraftSession.sqlSurface(spark, dir) first"))
-        build(spark, dir, args).queryExecution.logical
-      }: LogicalPlan))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -83,213 +47,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((
       new FunctionIdentifier("shingle_set"),
       new ExpressionInfo(classOf[ShingleSet].getName, "shingle_set"),
-      (args: Seq[Expression]) =>
-        ShingleSet(args(0), intArg(args(1), "shingle_set"))))
+      (args: Seq[Expression]) => ShingleSet(args(0),
+        new SqlParams("shingle_set", args.tail).int("k", required = true))))
     ext.injectFunction((
       new FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (args: Seq[Expression]) => MinHashSig(args(0),
-        intArg(args(1), "minhash_sig"), intArg(args(2), "minhash_sig"))))
+      (args: Seq[Expression]) => {
+        val p = new SqlParams("minhash_sig", args.tail)
+        MinHashSig(args(0), p.int("k", required = true),
+          p.int("numHashes", required = true))
+      }))
     ext.injectFunction((
       new FunctionIdentifier("simhash_sig"),
       new ExpressionInfo(classOf[SimHashSig].getName, "simhash_sig"),
-      (args: Seq[Expression]) =>
-        SimHashSig(args(0), intArg(args(1), "simhash_sig"))))
+      (args: Seq[Expression]) => SimHashSig(args(0),
+        new SqlParams("simhash_sig", args.tail).int("bits", required = true))))
     ext.injectFunction((
       new FunctionIdentifier("gram_hashes"),
       new ExpressionInfo(classOf[GramHashes].getName, "gram_hashes"),
-      (args: Seq[Expression]) =>
-        GramHashes(args(0), intArg(args(1), "gram_hashes"))))
+      (args: Seq[Expression]) => GramHashes(args(0),
+        new SqlParams("gram_hashes", args.tail).int("k", required = true))))
 
     // ---- table-valued operator families (GraftSession.sqlSurface) ----
-    import graft.operators._
-    registerTvf(ext, "phrase_search")((s, d, a) =>
-      if (a.isEmpty) Ranking.phraseSearch(s, d)
-      else Ranking.phraseSearch(s, d,
-        strArg(a(0), "phrase_search").trim.split("\\s+").toSeq))
-    registerTvf(ext, "phrase_search_indexed")((s, d, a) =>
-      if (a.isEmpty) Ranking.phraseSearchIndexed(s, d)
-      else Ranking.phraseSearchIndexed(s, d,
-        strArg(a(0), "phrase_search_indexed").trim.split("\\s+").toSeq))
-    registerTvf(ext, "more_like_this")((s, d, a) =>
-      Ranking.moreLikeThis(s, d,
-        at(a, 0, longArg(_, "more_like_this"), 1L),
-        at(a, 1, intArg(_, "more_like_this"), 10),
-        at(a, 2, intArg(_, "more_like_this"), 20)))
-    registerTvf(ext, "bm25_search")((s, d, a) =>
-      Ranking.bm25Rank(s, d,
-        terms = at(a, 0, strArg(_, "bm25_search").trim.split("\\s+").toSeq,
-          Seq("spark", "vector")),
-        topN = at(a, 1, intArg(_, "bm25_search"), 50)))
-    registerTvf(ext, "basket_lift")((s, d, a) =>
-      Sessionize.basketLift(s, d,
-        at(a, 0, longArg(_, "basket_lift"), 5L),
-        at(a, 1, intArg(_, "basket_lift"), 100)))
-    registerTvf(ext, "basket_rules")((s, d, a) =>
-      Sessionize.basketRules(s, d,
-        at(a, 0, longArg(_, "basket_rules"), 5L),
-        at(a, 1, intArg(_, "basket_rules"), 100)))
-    registerTvf(ext, "ann_topk")((s, d, a) =>
-      Similarity.topK(s, d,
-        at(a, 0, longArg(_, "ann_topk"), 0L),
-        at(a, 1, intArg(_, "ann_topk"), 10)))
-    registerTvf(ext, "fuzzy_link")((s, d, a) =>
-      FuzzyJoin.fuzzyLink(s, d, at(a, 0, intArg(_, "fuzzy_link"), 2)))
-    registerTvf(ext, "page_rank")((s, d, a) =>
-      GraphRank.pageRank(s, d, at(a, 0, intArg(_, "page_rank"), 10)))
-    registerTvf(ext, "funnel")((s, d, a) =>
-      if (a.isEmpty) Sessionize.funnel(s, d)
-      else Sessionize.funnel(s, d, a.map(strArg(_, "funnel"))))
-    registerTvf(ext, "bfs_hops")((s, d, a) =>
-      GraphRank.bfsHops(s, d,
-        at(a, 0, longArg(_, "bfs_hops"), 0L),
-        at(a, 1, intArg(_, "bfs_hops"), 6)))
-    registerTvf(ext, "next_items")((s, d, a) =>
-      GraphRank.nextItems(s, d, at(a, 0, intArg(_, "next_items"), 3)))
-    registerTvf(ext, "personalized_rank")((s, d, a) =>
-      GraphRank.personalizedRank(s, d,
-        at(a, 0, longArg(_, "personalized_rank"), 0L),
-        at(a, 1, intArg(_, "personalized_rank"), 10)))
-    registerTvf(ext, "hll_users")((s, d, _) => Sketches.hllUsers(s, d))
-    registerTvf(ext, "hll_daily")((s, d, _) => Sketches.hllUsersDaily(s, d))
-    registerTvf(ext, "hll_range")((s, d, a) =>
-      Sketches.hllUsersRange(s, d,
-        at(a, 0, strArg(_, "hll_range"), Sketches.DefaultRangeFrom),
-        at(a, 1, strArg(_, "hll_range"), Sketches.DefaultRangeTo)))
-    registerTvf(ext, "heavy_hitters")((s, d, a) =>
-      Sketches.heavyHitters(s, d,
-        at(a, 0, longArg(_, "heavy_hitters"), Sketches.DefaultPhiPpm),
-        at(a, 1, intArg(_, "heavy_hitters"), Sketches.DefaultMgK)))
-    registerTvf(ext, "zorder_layout")((s, d, a) =>
-      Warehouse.zorderLayout(s, d,
-        at(a, 0, intArg(_, "zorder_layout"), Warehouse.ZShift)))
-    registerTvf(ext, "concurrent_orders")((s, d, a) =>
-      IntervalJoin.concurrentOrders(s, d,
-        at(a, 0, longArg(_, "concurrent_orders"),
-          IntervalJoin.OrderCellDays)))
-    registerTvf(ext, "hist_quantiles")((s, d, _) =>
-      Sketches.histQuantiles(s, d))
-    registerTvf(ext, "quality_report")((s, d, _) =>
-      Checks.qualityReport(s, d))
-    registerTvf(ext, "hll_overlap")((s, d, _) => Sketches.hllOverlap(s, d))
-    registerTvf(ext, "kmv_users")((s, d, _) => Sketches.kmvUsers(s, d))
-    registerTvf(ext, "kmv_overlap")((s, d, _) => Sketches.kmvOverlap(s, d))
-    registerTvf(ext, "kmv_range_overlap")((s, d, a) =>
-      Sketches.kmvOverlapRange(s, d,
-        at(a, 0, strArg(_, "kmv_range_overlap"), Sketches.DefaultRangeFrom),
-        at(a, 1, strArg(_, "kmv_range_overlap"), Sketches.DefaultRangeTo)))
-    registerTvf(ext, "cms_counts")((s, d, _) => Sketches.cmsCounts(s, d))
-    registerTvf(ext, "price_quantiles")((s, d, _) =>
-      Sketches.priceQuantiles(s, d))
-    registerTvf(ext, "bloom_lookup")((s, d, a) =>
-      BloomSkip.pointLookup(s, d, a.map(longArg(_, "bloom_lookup"))))
-    registerTvf(ext, "forget_key")((s, d, a) => {
-      val keys = a.map(longArg(_, "forget_key"))
-      require(keys.size >= 2, "forget_key(delKey, probeKey, ...)")
-      BloomSkip.forgetKey(s, d, keys.head, keys.tail)
-    })
-    // batched erasure: delete keys, then 0, then probe keys — the 0
-    // separator can never be a custkey (keys are 1-based)
-    registerTvf(ext, "forget_batch")((s, d, a) => {
-      val keys = a.map(longArg(_, "forget_batch"))
-      val sep = keys.indexOf(0L)
-      require(sep > 0 && sep < keys.size - 1,
-        "forget_batch(delKey..., 0, probeKey...)")
-      BloomSkip.forgetKeys(s, d, keys.take(sep), keys.drop(sep + 1))
-    })
-    registerTvf(ext, "media_neardup")((s, d, _) =>
-      Multimodal.mediaNearDup(s, d))
-    registerTvf(ext, "zorder_scan")((s, d, a) =>
-      Warehouse.zorderScan(s, d,
-        at(a, 0, longArg(_, "zorder_scan"), 0L),
-        at(a, 1, longArg(_, "zorder_scan"), 0L),
-        at(a, 2, longArg(_, "zorder_scan"), 0L),
-        at(a, 3, longArg(_, "zorder_scan"), 0L)))
-    registerTvf(ext, "composed_lookup")((s, d, a) => {
-      require(a.size >= 3, "composed_lookup(from, to, key, ...)")
-      BloomSkip.lookupKeysInRange(s, d,
-        a.drop(2).map(longArg(_, "composed_lookup")),
-        strArg(a(0), "composed_lookup"), strArg(a(1), "composed_lookup"))
-    })
-    registerTvf(ext, "zorder_forget")((s, d, a) => {
-      require(a.size == 5, "zorder_forget(user, uLo, uHi, iLo, iHi)")
-      val v = a.map(longArg(_, "zorder_forget"))
-      Warehouse.zorderForgetScan(s, d, v(0), v(1), v(2), v(3), v(4))
-    })
-    // batched: users..., -1, uLo, uHi, iLo, iHi (-1 separates — user
-    // ids are non-negative, unlike the custkey TVFs' 0 sentinel,
-    // because user 0 exists in the events corpus)
-    registerTvf(ext, "zorder_forget_batch")((s, d, a) => {
-      val v = a.map(longArg(_, "zorder_forget_batch"))
-      val sep = v.indexOf(-1L)
-      require(sep > 0 && v.size - sep - 1 == 4,
-        "zorder_forget_batch(user..., -1, uLo, uHi, iLo, iHi)")
-      val b = v.drop(sep + 1)
-      Warehouse.zorderForgetScanBatch(s, d, v.take(sep),
-        b(0), b(1), b(2), b(3))
-    })
-    registerTvf(ext, "vacuumed_forget")((s, d, a) => {
-      val keys = a.map(longArg(_, "vacuumed_forget"))
-      val sep = keys.indexOf(0L)
-      require(sep > 0 && sep < keys.size - 1,
-        "vacuumed_forget(delKey..., 0, probe...)")
-      BloomSkip.vacuumedForget(s, d, keys.take(sep), keys.drop(sep + 1))
-    })
-    registerTvf(ext, "composed_forget")((s, d, a) => {
-      require(a.size >= 4, "composed_forget(from, to, delKey..., 0, probe...)")
-      val keys = a.drop(2).map(longArg(_, "composed_forget"))
-      val sep = keys.indexOf(0L)
-      require(sep > 0 && sep < keys.size - 1,
-        "composed_forget(from, to, delKey..., 0, probe...)")
-      BloomSkip.forgetKeysInRange(s, d, keys.take(sep),
-        keys.drop(sep + 1), strArg(a(0), "composed_forget"),
-        strArg(a(1), "composed_forget"))
-    })
-    // document-corpus takedown family (q161–q165). Doc ids start at 0,
-    // so the batched separator is -1 (the zorder_forget_batch rule)
-    registerTvf(ext, "doc_takedown")((s, d, a) => {
-      val v = a.map(longArg(_, "doc_takedown"))
-      val sep = v.indexOf(-1L)
-      require(sep > 0 && sep < v.size - 1,
-        "doc_takedown(delId..., -1, probe...)")
-      DocForget.takedownScan(s, d, v.take(sep), v.drop(sep + 1))
-    })
-    registerTvf(ext, "takedown_pack")((s, d, a) =>
-      DocForget.takedownPack(s, d, a.map(longArg(_, "takedown_pack"))))
-    registerTvf(ext, "takedown_phrase")((s, d, a) => {
-      require(a.size >= 2, "takedown_phrase('the phrase', delId...)")
-      DocForget.takedownPhrase(s, d,
-        a.tail.map(longArg(_, "takedown_phrase")),
-        strArg(a(0), "takedown_phrase").trim.split("\\s+").toSeq)
-    })
-    registerTvf(ext, "takedown_ann")((s, d, a) => {
-      require(a.size >= 2, "takedown_ann(queryId, delId...)")
-      DocForget.takedownAnn(s, d, a.tail.map(longArg(_, "takedown_ann")),
-        queryId = longArg(a(0), "takedown_ann"))
-    })
-    registerTvf(ext, "takedown_report")((s, d, a) =>
-      DocForget.takedownReport(s, d, a.map(longArg(_, "takedown_report"))))
-    registerTvf(ext, "cluster_takedown")((s, d, a) => {
-      val v = a.map(longArg(_, "cluster_takedown"))
-      val sep = v.indexOf(-1L)
-      require(sep > 0 && sep < v.size - 1,
-        "cluster_takedown(seedId..., -1, probe...)")
-      DocForget.clusterTakedownScan(s, d, v.take(sep), v.drop(sep + 1))
-    })
-    registerTvf(ext, "cluster_expansion")((s, d, a) =>
-      DocForget.clusterExpansion(s, d,
-        a.map(longArg(_, "cluster_expansion"))))
-    // incremental near-dup cluster table (q168/q169): the assignment
-    // maintained by the streaming fold, and the same table after an
-    // in-place cluster takedown of the given ids
-    registerTvf(ext, "cluster_assign")((s, d, a) => {
-      require(a.isEmpty, "cluster_assign()")
-      graft.streaming.ClusterStream.assignmentFor(s, d)
-    })
-    registerTvf(ext, "cluster_forget")((s, d, a) => {
-      require(a.nonEmpty, "cluster_forget(delId...)")
-      graft.streaming.ClusterStream.forgottenAssignmentFor(s, d,
-        a.map(longArg(_, "cluster_forget")))
-    })
+    for (op <- Ops.table; name <- op.sql)
+      ext.injectTableFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        (args: Seq[Expression]) => {
+          val spark = SparkSession.active
+          val dir = spark.conf.getOption(GraftSession.SqlDirKey).getOrElse(
+            throw new IllegalArgumentException(
+              s"$name: no corpus registered for the SQL surface — call " +
+                "GraftSession.sqlSurface(spark, dir) first"))
+          val p = new SqlParams(name, args)
+          val df = op.build(new Ops.Ctx(spark, dir), p)
+          p.finish()
+          df.queryExecution.logical
+        }: LogicalPlan))
   }
 }

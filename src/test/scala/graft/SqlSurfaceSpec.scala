@@ -182,4 +182,37 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(e2.getMessage.contains("literal"),
       s"wrong message: ${e2.getMessage}")
   }
+
+  test("the SQL surface enforces the HTTP surface's bounds, with the " +
+      "message HTTP returns as a 400") {
+    surface
+    val terms17 = (1 to 17).map(i => s"t$i")
+    val steps9 = Seq.fill(9)("view")
+    val cases = Seq(
+      "more_like_this(1, 10, 5000)" -> "/moreLikeThis?docId=1&m=10&topN=5000",
+      s"bm25_search('${terms17.mkString(" ")}')" ->
+        s"/searchRanked?q=${terms17.mkString("+")}",
+      s"funnel(${steps9.map(s => s"'$s'").mkString(", ")})" ->
+        s"/funnel?steps=${steps9.mkString(",")}",
+      "phrase_search('  ')" -> "/phraseSearch?q=+")
+    val srv = new serving.HttpServer(spark, sf).start()
+    try for ((call, route) <- cases) {
+      val conn = new java.net.URL(s"http://127.0.0.1:${srv.boundPort}$route")
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      val code = conn.getResponseCode
+      val body = scala.io.Source.fromInputStream(
+        if (code < 400) conn.getInputStream else conn.getErrorStream, "UTF-8")
+        .mkString
+      conn.disconnect()
+      val httpMsg = "\\{\"error\":\"(.*)\"\\}".r.findFirstMatchIn(body)
+        .map(_.group(1)).getOrElse(fail(s"$route: $code $body"))
+      assert(code == 400, s"$route: $code $body")
+      val e = intercept[Exception](spark.sql(s"SELECT * FROM $call").collect())
+      val sqlMsg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).collectFirst {
+          case iae: IllegalArgumentException => iae.getMessage
+        }
+      assert(sqlMsg.contains(httpMsg), s"$call: $sqlMsg, HTTP: $httpMsg")
+    } finally { srv.stop(); graft.Caches.releaseAll() }
+  }
 }

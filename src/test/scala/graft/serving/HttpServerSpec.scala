@@ -563,4 +563,50 @@ class HttpServerSpec extends SparkSpec {
         "rebuild from the same upstream moved the served estimates")
     } finally { srv.stop(); graft.Caches.releaseAll() }
   }
+
+  test("/rerankSearch bounds shortlist: an oversized one is a 400 and the " +
+      "server keeps serving") {
+    val srv = new HttpServer(spark, sf).start()
+    val base = s"http://127.0.0.1:${srv.boundPort}"
+    try {
+      val (c1, err) = get(s"$base/rerankSearch?vecId=0&shortlist=500000000")
+      assert(c1 == 400 && err.contains("shortlist"), err)
+      val (c2, dau) = get(s"$base/dauRealtime?td=2024-01-15")
+      assert(c2 == 200 && dau.contains("\"dau_td\""), dau.take(200))
+    } finally srv.stop()
+  }
+
+  test("an operator on both surfaces answers a parameterless GET exactly " +
+      "like its zero-argument SQL call") {
+    graft.GraftSession.sqlSurface(spark, sf)
+    val srv = new HttpServer(spark, sf).start()
+    val base = s"http://127.0.0.1:${srv.boundPort}"
+    try {
+      val both = for (op <- Ops.table; path <- op.path; name <- op.sql)
+        yield (path, name)
+      val answered = both.count { case (path, name) =>
+        val (code, body) = get(s"$base$path")
+        val viaSql = scala.util.Try(
+          try HttpServer.asJson(spark.sql(s"SELECT * FROM $name()"))
+          finally graft.Caches.releaseAll())
+        viaSql match {
+          case scala.util.Success(rows) =>
+            assert(code == 200 && body == rows,
+              s"$path vs $name(): ${body.take(200)} / ${rows.take(200)}")
+            true
+          case scala.util.Failure(e) =>
+            // only a required parameter may fail the zero-argument call,
+            // and the route must fail alike
+            val msg = Iterator.iterate[Throwable](e)(_.getCause)
+              .takeWhile(_ != null).collectFirst {
+                case iae: IllegalArgumentException => iae.getMessage
+              }.getOrElse(throw e)
+            assert(msg.endsWith(" required") && code == 400 &&
+              body == s"""{"error":"$msg"}""", s"$path vs $name(): $body / $msg")
+            false
+        }
+      }
+      assert(answered >= 7, s"only $answered of ${both.size} answered")
+    } finally srv.stop()
+  }
 }
