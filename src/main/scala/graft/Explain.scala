@@ -1,10 +1,52 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 /** Dev tool: dump formatted physical plans (runMain graft.Explain [q..]),
   * or with "--scan" print a one-line plan-smell summary per query:
-  * cartesian products, nested-loop joins, row counts of exchanges.
+  * cartesian products, nested-loop joins, and the [[keyedExchanges]]
+  * count that `PlanAuditSpec` gates. Each query is planned from a clean
+  * cache, as the audit plans it.
   */
 object Explain {
+
+  /** Keyed (hash or range) shuffles in a physical plan, each counted
+    * once. An adaptive plan is read through its initial plan, subqueries
+    * are descended into, and a cached relation's build plan is counted
+    * once per plan however often the query refers to it.
+    *
+    * Counting `Exchange hashpartitioning` in the printed plan does not
+    * work: every reference to a cached carrier prints the carrier's whole
+    * build plan again, and a materialized adaptive carrier prints it
+    * twice (final and initial plan). So the printed count depends on what
+    * the session ran before; this one does not.
+    */
+  def keyedExchanges(plan: SparkPlan): Int = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Int = {
+      val own = p match {
+        case e: ShuffleExchangeExec => e.outputPartitioning match {
+          case _: HashPartitioning | _: RangePartitioning => 1
+          case _                                          => 0
+        }
+        case _ => 0
+      }
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
+        case i: InMemoryTableScanExec if seen.add(i.relation.cachedPlan) =>
+          walk(i.relation.cachedPlan)
+        case _ => 0
+      }
+      own + inner + p.children.map(walk).sum + p.subqueries.map(walk).sum
+    }
+    walk(plan)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -18,17 +60,19 @@ object Explain {
       if (args.filterNot(_ == "--scan").nonEmpty) args.filterNot(_ == "--scan").toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     wanted.foreach { q =>
+      // a carrier left materialized by an earlier query carries real
+      // size statistics, which can flip its joins to broadcasts
+      spark.catalog.clearCache()
       val df = SparkEntry.queries(q)(spark, d)
-      val plan = df.queryExecution.executedPlan.toString()
       if (scan) {
+        val executed = df.queryExecution.executedPlan
+        val plan = executed.toString()
         val smells = Seq(
           "CartesianProduct" -> plan.contains("CartesianProduct"),
           "BroadcastNestedLoopJoin" -> plan.contains("BroadcastNestedLoopJoin"),
-          "SortMergeJoin" -> plan.contains("SortMergeJoin"),
-          "shuffles" -> false).collect { case (n, true) => n }
-        val nShuffle = "Exchange (?:hash|range)partitioning".r
-          .findAllIn(plan).length
-        println(f"$q%-26s shuffles=$nShuffle ${smells.mkString(",")}")
+          "SortMergeJoin" -> plan.contains("SortMergeJoin"))
+          .collect { case (n, true) => n }
+        println(f"$q%-26s shuffles=${keyedExchanges(executed)} ${smells.mkString(",")}")
       } else {
         println(s"========== $q ==========")
         df.explain("formatted")

@@ -3,7 +3,10 @@ package graft
 /** Plan-shape regression gate: every SparkEntry query's physical plan is
   * audited for (a) no CartesianProduct ever, (b) BroadcastNestedLoopJoin
   * only where a deliberate 1-row query-vector broadcast makes it benign,
-  * (c) shuffle (Exchange) count at or under its recorded baseline.
+  * (c) keyed (hash/range) shuffle count at or under its recorded
+  * baseline. The count is [[Explain.keyedExchanges]], structural and
+  * taken from a clean cache, so a query reads the same alone (`-z`) and
+  * anywhere in the suite.
   *
   * The point (round-2 verdict item 7): a regression like q38's 13-shuffle
   * lineage explosion gets caught by `sbt test`, not discovered in the
@@ -62,8 +65,10 @@ class PlanAuditSpec extends SparkSpec {
     // q156: q147's pair product over the range sketches
     "q156_kmv_range_overlap")
 
-  /** Max Exchange nodes allowed per query (recorded from the audited
-    * plans at sf0.001 — see `runMain graft.Explain --scan`). */
+  /** Max keyed (hash/range) exchanges allowed per query, counted by
+    * [[Explain.keyedExchanges]] from a clean cache (recorded at sf0.001
+    * with `SPARK_GRAFT_SF_DIR=… runMain graft.Explain --scan`, which
+    * applies the same count). */
   private val shuffleBaseline = Map(
     // q03: same 3 exchanges as q01 — the next-day shadow rows are
     // emitted map-side BEFORE the daily aggregate, so day-over-day
@@ -116,10 +121,10 @@ class PlanAuditSpec extends SparkSpec {
     "q56_ivf_file_search" -> 0,
     // q57: map-only repetition stats; the one exchange is the output sort
     "q57_repetition" -> 1,
-    // q64: tf agg + per-doc score agg + output sort, plus the cached
-    // token carrier's exchange printing per reference; vocab broadcasts
-    // under the measured guard, total rides a 1-row BNLJ crossJoin
-    "q64_unigram_rarity" -> 4,
+    // q64: the token-keyed tf agg inside the cached carrier + the
+    // per-doc score agg + output sort; vocab broadcasts under the
+    // measured guard, total rides a 1-row BNLJ crossJoin
+    "q64_unigram_rarity" -> 3,
     // q58: bench-shingle distinct + per-doc overlap count + output sort —
     // the corpus-sized side only shuffles on doc_id
     "q58_decontaminate" -> 3,
@@ -233,11 +238,11 @@ class PlanAuditSpec extends SparkSpec {
     // measured 0.83→0.56 s at sf0.1, 8.4–12→3.9 s at sf1. Token-key
     // shuffles throughout, text never leaves the scan
     "q94_lm_langid" -> 13,
-    // q95: the q22 counting-join skeleton (hot-df agg + the self-join's
-    // two token exchanges + the pair groupBy); the directed explode and
-    // threshold filter are map-side on the aggregated pairs, and AQE
-    // folds the tiny output sort
-    "q95_containment_pairs" -> 4,
+    // q95: the prefix arm — the df agg inside the cached dfRel carrier,
+    // the candidate distinct and the output sort. The prefix × full
+    // candidate join and both verify joins broadcast (measured guard),
+    // and the directed explode and threshold filter are map-side
+    "q95_containment_pairs" -> 3,
     // q96: map-only integer rule flags, output sort only
     "q96_gopher_rules" -> 1,
     // q97: the fixed-size bucket-distribution agg (≤8192 rows,
@@ -261,11 +266,10 @@ class PlanAuditSpec extends SparkSpec {
     // then the two clone-group expansion joins and the output sort on
     // the full relation
     "q102_fuzzy_pairs" -> 19,
-    // q103: the (doc,tok) tf carrier agg + the token-keyed model agg +
-    // 1-row totals collapse + the weight-table broadcast-join scoring
-    // pass + the per-doc re-agg + output sort (the carrier's cached
-    // build plan prints its exchanges into the audit too)
-    "q103_odds_quality" -> 10,
+    // q103: the token-keyed model agg (once in the scoring pass, once
+    // behind the 1-row totals collapse) + the per-doc re-agg + output
+    // sort; the weight table broadcasts into the scoring pass
+    "q103_odds_quality" -> 4,
     // q104: the audited plan is the measured DRIVER path (the graph
     // builds eagerly at plan time; the returned frame is a sorted local
     // relation); the distributed loop's rounds are checkpoint-truncated
@@ -318,13 +322,11 @@ class PlanAuditSpec extends SparkSpec {
     // agg (the join back reuses its exchange), the per-doc agg, the
     // output sort; shingle hashing is map-only on the scan
     "q118_ngram_novelty" -> 3,
-    // q119: the count is inflated by PRINTING — the cached deg/o
-    // carriers' build plans (und distinct + degree agg + orientation
-    // joins) print once per reference (deg ×3, o ×3) though each
-    // builds once at runtime; the executed work is the two carrier
-    // builds + wedge join + closing join + corner agg + final join +
-    // sort
-    "q119_triangles" -> 34,
+    // q119: the cached carriers' builds (degree agg; und distinct +
+    // its user-keyed edge join) + the degree join's re-exchange + the
+    // wedge and closing joins' exchanges + the corner agg + sort, each
+    // carrier counted once however often the plan refers to it
+    "q119_triangles" -> 10,
     // q120: the (type, hour) bucket agg, the type-keyed trailing
     // window, the output sort — corpus collapses to buckets before
     // anything sorts
@@ -351,14 +353,11 @@ class PlanAuditSpec extends SparkSpec {
     // q127: two word-count aggs + the two vocab-keyed joins + the
     // top-k sort; the 1-row totals ride broadcasts
     "q127_pmi_collocations" -> 5,
-    // q128: the EXECUTED shape is q102's single-pass machinery (side-
-    // tagged: one df agg, one cached prefix/variant carrier) + the
-    // best-match window + linkback; the high count is a PRINT artifact
-    // — unlike q102, whose cached carriers scan raw tables (0 nested
-    // exchanges), q128's probe carrier is the mention-count AGG, and
-    // its one exchange reprints inside every nested InMemoryRelation
-    // reference. Carriers are cached; execution is single-pass.
-    "q128_fuzzy_link" -> 68,
+    // q128: q102's single-pass machinery (side-tagged: one df agg, one
+    // cached prefix/variant carrier) — the mention-count carrier agg,
+    // the name distinct, the (p_name, d_name) pair distinct — + the
+    // best-match agg on mention + the output sort
+    "q128_fuzzy_link" -> 5,
     // q129: the postings carrier is built map-side (in-array position
     // filter — no explode-then-shuffle), every positional join
     // broadcasts or reuses the carrier: match agg + output sort only
@@ -380,12 +379,10 @@ class PlanAuditSpec extends SparkSpec {
     // checkpoint settled set + output sort (per-round keyed join +
     // anti-join shuffles run during construction, bounded by depth)
     "q134_bfs_hops" -> 1,
-    // q135: user window → (src,dst) agg into the CACHED edge carrier,
-    // then out-weight agg (broadcast back), src window, output sort.
-    // The count over 6 is the q128 print artifact: the carrier's two
-    // build exchanges reprint inside each nested InMemoryRelation
-    // reference; execution builds the carrier once.
-    "q135_next_items" -> 7,
+    // q135: user window → (src,dst) agg into the CACHED edge carrier
+    // (two exchanges), then out-weight agg (broadcast back), src
+    // window, output sort
+    "q135_next_items" -> 5,
     // q136: q104's audited shape (the measured driver path collects;
     // the distributed loop's per-round shuffles run during
     // construction behind checkpoints)
@@ -469,11 +466,10 @@ class PlanAuditSpec extends SparkSpec {
     // copy-on-write build, not part of this plan)
     "q155_zorder_forget" -> 1,
     // q154: q45's banded-join shape over the cached dHash cluster
-    // carrier (cluster agg + band self-join + pair distinct + sort);
-    // the dHash itself is map-side — payload bytes never shuffle. The
-    // cached carrier's agg exchange PRINTS in three branches (the
-    // dup-cluster report + both band-join sides) but runs once
-    "q154_media_neardup" -> 6,
+    // carrier (cluster agg + pair distinct; the band self-join
+    // broadcasts) + the pair list's own sort + the output sort of the
+    // union; the dHash itself is map-side — payload bytes never shuffle
+    "q154_media_neardup" -> 4,
     // q161: q151's pruned-scan + sort shape over the post-takedown
     // CORPUS layout (the four-artifact takedown is a memoized
     // copy-on-write build, not part of this plan)
@@ -512,13 +508,11 @@ class PlanAuditSpec extends SparkSpec {
     "q170_canonical_table" -> 5)
 
   // Audited shapes must not depend on which specs ran before this one
-  // in the JVM: a cache entry left by another spec (same carrier,
-  // different params) substitutes an InMemoryRelation whose stored
-  // build plan — exchanges included — prints inside the audited plan
-  // string and shifts the count. Baselines are recorded from a fresh
-  // session's sequential sweep (`Explain --scan`); resetting here,
-  // BEFORE this spec's own full-sweep tests repopulate the caches in
-  // query order, reproduces that state no matter the suite order.
+  // in the JVM: a carrier another spec left cached (and materialized)
+  // carries real size statistics that can flip this spec's joins to
+  // broadcasts. Resetting here starts the full-sweep tests below from
+  // the same state whatever the suite order; each per-query audit then
+  // clears again before it plans, as `Explain --scan` does.
   test("audit precondition: start from a cache-clean session") {
     spark.catalog.clearCache()
   }
@@ -597,13 +591,17 @@ class PlanAuditSpec extends SparkSpec {
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name plan: no cartesian, no stray NLJ, shuffles within baseline") {
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString()
+      // plan from a clean cache: a carrier an earlier test materialized
+      // carries real size statistics that can flip its joins to broadcasts
+      spark.catalog.clearCache()
+      val executed = fn(spark, sf).queryExecution.executedPlan
+      val plan = executed.toString()
       assert(!plan.contains("CartesianProduct"),
         s"$name plan contains CartesianProduct")
       if (!bnljAllowed(name))
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"$name plan contains an unexpected BroadcastNestedLoopJoin")
-      val n = "Exchange (?:hash|range)partitioning".r.findAllIn(plan).length
+      val n = Explain.keyedExchanges(executed)
       val limit = shuffleBaseline.getOrElse(name, 0)
       assert(n <= limit,
         s"$name shuffles regressed: $n > baseline $limit")
