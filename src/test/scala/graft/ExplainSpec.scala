@@ -15,7 +15,7 @@ class ExplainSpec extends SparkSpec {
   private val q95 = SparkEntry.queries("q95_containment_pairs")
 
   private def q95Count(): Int =
-    Explain.keyedExchanges(q95(spark, sf).queryExecution.executedPlan)
+    Explain.keyedExchanges(q95(spark, sf).queryExecution.executedPlan).size
 
   test("q95 keyed exchanges: 3 when planned from a clean cache") {
     spark.catalog.clearCache()
