@@ -109,11 +109,9 @@ private[graft] object TextKernel {
 }
 
 /** The k rarest elements of a per-row gram multiset under the GLOBAL
-  * (df, gram) order — the ED-Join prefix, selected MAP-SIDE against a
-  * dictionary that ships inside the serialized expression (the
-  * [[SortedLongSetContains]] pattern: `grams` sorted ascending with
-  * `dfs` aligned, both driver-collected under the same cap that
-  * justified broadcasting the df relation). Replaces the
+  * (df, gram) order — the ED-Join prefix, selected MAP-SIDE against
+  * `dfs`, a [[Dict.sortedPairs]] of (gram, df) collected under the cap
+  * that justified broadcasting the df relation. Replaces the
   * explode→join(df)→row_number-window→filter chain of the fuzzy-join
   * prefix build: the window shuffled and SORTED the full gram
   * relation per (side, name) group, while this is one pass over the
@@ -125,16 +123,13 @@ private[graft] object TextKernel {
   * path's inner join (unreachable when df is computed over the same
   * relation, by construction). Emitted sorted by (df, g) —
   * deterministic row content for the cached carrier. */
-case class RarestKGrams(child: Expression, k: Int,
-    grams: IndexedSeq[Long], dfs: IndexedSeq[Long])
+case class RarestKGrams(child: Expression, k: Int, dfs: Dict)
     extends UnaryExpression with CodegenFallback {
   require(k >= 1, "k must be >= 1")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "rarest_k_grams"
-  @transient private lazy val gArr: Array[Long] = grams.toArray
-  @transient private lazy val dArr: Array[Long] = dfs.toArray
   override def nullSafeEval(input: Any): Any = new GenericArrayData(
-    RarestSelect.rarest(input.asInstanceOf[ArrayData], k, gArr, dArr))
+    RarestSelect.rarest(input.asInstanceOf[ArrayData], k, dfs))
   override protected def withNewChildInternal(c: Expression): RarestKGrams =
     copy(child = c)
 }
@@ -144,8 +139,9 @@ private[graft] object RarestSelect {
   /** The `take` smallest (df, g) pairs of the row's multiset, looked up
     * in the aligned sorted dictionary; elements absent from the
     * dictionary are skipped (≡ the window path's inner df join). */
-  def rarest(gs: ArrayData, take: Int, gArr: Array[Long],
-      dArr: Array[Long]): Array[Any] = {
+  def rarest(gs: ArrayData, take: Int, dfs: Dict): Array[Any] = {
+    val gArr = dfs.longs
+    val dArr = dfs.values
     val n = gs.numElements()
     val g = new Array[Long](n)
     val d = new Array[Long](n)
@@ -183,23 +179,19 @@ private[graft] object RarestSelect {
   * ≥ ⌈t·n⌉ elements with one side's set, which cannot all hide in that
   * side's last ⌈t·n⌉ − 1 positions — so it shares one with this prefix
   * (floor instead of ceil only LENGTHENS the prefix: strictly a
-  * superset, never a miss). Dictionary ships inside the expression
-  * under the caller's measured cap ([[RarestKGrams]] pattern). */
+  * superset, never a miss). `dfs` as in [[RarestKGrams]]. */
 case class ContainmentPrefixGrams(child: Expression, tMarginPpm: Long,
-    grams: IndexedSeq[Long], dfs: IndexedSeq[Long])
-    extends UnaryExpression with CodegenFallback {
+    dfs: Dict) extends UnaryExpression with CodegenFallback {
   require(tMarginPpm >= 1 && tMarginPpm <= 1000000L,
     "tMarginPpm must be in [1, 1e6]")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "containment_prefix_grams"
-  @transient private lazy val gArr: Array[Long] = grams.toArray
-  @transient private lazy val dArr: Array[Long] = dfs.toArray
   override def nullSafeEval(input: Any): Any = {
     val gs = input.asInstanceOf[ArrayData]
     val n = gs.numElements().toLong
     val owed = tMarginPpm * n / 1000000L // floor ≤ ⌈tMargin·n⌉
     val p = (n - owed + 1L).toInt
-    new GenericArrayData(RarestSelect.rarest(gs, p, gArr, dArr))
+    new GenericArrayData(RarestSelect.rarest(gs, p, dfs))
   }
   override protected def withNewChildInternal(c: Expression)
       : ContainmentPrefixGrams = copy(child = c)
@@ -536,23 +528,19 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 }
 
 /** Native BPE encode: whitespace-tokenize, segment each word with the
-  * learned `merges` applied in rank order (the exact
+  * learned merges applied in rank order (the exact
   * [[graft.operators.BpeKernel]] arithmetic the trainer used), emit the
   * concatenated subword array (final symbols keep their `</w>`
-  * markers). The merge table is a constructor param — it ships inside
-  * the serialized expression once per executor, not per row — and
+  * markers). `merges` maps `"left right"` to the merge's rank; it ships
+  * inside the serialized expression once per executor, not per row, and
   * `encoded` memoizes per-instance: natural text repeats word forms
   * heavily, so each distinct form pays the merge loop once per
   * partition (the cache is bounded by the partition's distinct forms;
   * transient, rebuilt after deserialization). */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
+case class BpeEncode(child: Expression, merges: Dict)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "bpe_encode"
-  @transient private lazy val rank: Map[(String, String), Int] =
-    merges.zipWithIndex.toMap
-  @transient private lazy val pairs: IndexedSeq[(String, String)] =
-    merges.toIndexedSeq
   @transient private lazy val encoded =
     new java.util.HashMap[String, Array[UTF8String]]()
   override def nullSafeEval(input: Any): Any = {
@@ -563,7 +551,8 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
     toks.foreach { w =>
       var subs = encoded.get(w)
       if (subs == null) {
-        subs = BpeKernel.encodeWord(w, rank, pairs)
+        subs = BpeKernel.encodeWord(w,
+          (l, r) => merges.get(l + " " + r, Long.MaxValue))
           .map(UTF8String.fromString(_)).toArray
         encoded.put(w, subs)
       }
@@ -578,25 +567,22 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
 /** Count of tokens whose md5-60 identity is in a STATIC sorted ban
   * set — the scan kernel of the blocklist filter (q92). Reuses the
   * byte-level tokenizer ([[TextKernel.tokenize]]) and per-token region
-  * hashing, probes with binary search over a long[] that ships inside
-  * the serialized expression ([[SortedLongSetContains]] pattern):
-  * map-only, no explode, no broadcast join — the banned set is an
-  * artifact like the BPE merge table. Hash-identity probing is exact
-  * up to md5-60 collisions (2^-60), same contract as every hashed
+  * hashing, probes `set` (a [[Dict.sortedLongs]]) by binary search:
+  * map-only, no explode, no broadcast join. Hash-identity probing is
+  * exact up to md5-60 collisions (2^-60), same contract as every hashed
   * kernel here. */
-case class BannedTokenCount(child: Expression, set: IndexedSeq[Long])
+case class BannedTokenCount(child: Expression, set: Dict)
     extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "banned_token_count"
-  @transient private lazy val arr: Array[Long] = set.toArray
   override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[UTF8String].getBytes
     val tk = TextKernel.tokenize(bytes)
     var n = 0L
     var i = 0
     while (i < tk.n) {
-      if (java.util.Arrays.binarySearch(arr,
+      if (java.util.Arrays.binarySearch(set.longs,
           TextKernel.hashGram(bytes, tk, i, 1)) >= 0) n += 1
       i += 1
     }
@@ -658,7 +644,7 @@ case class CdcSegments(child: Expression, p: Int)
   * the CDC segments ([[CdcSegments]] boundaries, same one-pass walk)
   * that are either globally UNIQUE or are their hash's canonical
   * (globally first) occurrence. The dup dictionary ships inside the
-  * expression as two parallel arrays — ascending segment hashes and,
+  * expression as a [[Dict.sortedPairs]] — ascending segment hashes and,
   * aligned, the packed canonical occurrence `doc_id·10⁶ + seg_idx` —
   * so the keep decision is a binary search plus one compare, and the
   * reassembly is map-only: document text NEVER shuffles (the q83
@@ -668,17 +654,12 @@ case class CdcSegments(child: Expression, p: Int)
   * Packing contract: seg_idx < 10⁶ (a million CDC segments ≈ 16M
   * tokens in ONE document — far past any real document), enforced. */
 case class CdcFirstOccurrenceText(left: Expression, right: Expression,
-    p: Int, hashes: IndexedSeq[Long], canonPacked: IndexedSeq[Long])
-    extends BinaryExpression with CodegenFallback {
+    p: Int, canon: Dict) extends BinaryExpression with CodegenFallback {
   require(p >= 2, s"CDC modulus must be >= 2 (got $p)")
-  require(hashes.length == canonPacked.length,
-    "dictionary arrays must align")
   override def dataType: DataType = StructType(Seq(
     StructField("clean_text", StringType, nullable = false),
     StructField("n_dropped", LongType, nullable = false)))
   override def prettyName: String = "cdc_first_occurrence_text"
-  @transient private lazy val hArr: Array[Long] = hashes.toArray
-  @transient private lazy val cArr: Array[Long] = canonPacked.toArray
   override def nullSafeEval(text: Any, docId: Any): Any = {
     val bytes = text.asInstanceOf[UTF8String].getBytes
     val id = docId.asInstanceOf[Long]
@@ -693,10 +674,10 @@ case class CdcFirstOccurrenceText(left: Expression, right: Expression,
       if (TextKernel.hashGram(bytes, tk, i, 1) % p == 0 || i == n - 1) {
         val len = i - start + 1
         val h = TextKernel.hashGram(bytes, tk, start, len)
-        val pos = java.util.Arrays.binarySearch(hArr, h)
+        val pos = java.util.Arrays.binarySearch(canon.longs, h)
         require(segIdx < 1000000L,
           s"document $id exceeds 10^6 CDC segments")
-        val keep = pos < 0 || cArr(pos) == id * 1000000L + segIdx
+        val keep = pos < 0 || canon.values(pos) == id * 1000000L + segIdx
         if (keep) {
           var t = start
           while (t < start + len) {
@@ -719,29 +700,26 @@ case class CdcFirstOccurrenceText(left: Expression, right: Expression,
 
 /** Map-side DSIR importance score — the STREAMING/serving twin of the
   * join-based batch scorer (`graft.operators.Sampling.dsirWeights`,
-  * q97). The trained per-bucket score table (score6 micros, dense
-  * array indexed by bucket — fixed size, the hashing trick's whole
-  * point) ships inside the serialized expression once per executor
-  * (the [[PerplexityMicros]] artifact-in-expression pattern; at 8192
-  * longs it is orders of magnitude under the broadcast sizes that
-  * pattern already carries). Same one-pass byte-level feature walk as
-  * [[DsirFeatureBuckets]]; the exact integer mean of bucket scores is
-  * IDENTICAL to the batch join+agg (sums of the same Long multiset).
-  * Returns NULL for docs with zero features (the batch scorer omits
-  * those rows). */
-case class DsirScoreMicros(child: Expression, scores: IndexedSeq[Long])
+  * q97). The trained per-bucket score table (score6 micros, a dense
+  * [[Dict.longs]] indexed by bucket — fixed size, the hashing trick's
+  * whole point) ships in the expression. Same one-pass byte-level
+  * feature walk as [[DsirFeatureBuckets]]; the exact integer mean of
+  * bucket scores is IDENTICAL to the batch join+agg (sums of the same
+  * Long multiset). Returns NULL for docs with zero features (the batch
+  * scorer omits those rows). */
+case class DsirScoreMicros(child: Expression, scores: Dict)
     extends UnaryExpression with CodegenFallback {
-  require(scores.nonEmpty, "empty DSIR score table")
+  require(scores.size > 0, "empty DSIR score table")
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "dsir_score_micros"
-  @transient private lazy val arr: Array[Long] = scores.toArray
   override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[UTF8String].getBytes
     val tk = TextKernel.tokenize(bytes)
     val n = tk.n
     if (n == 0) null
     else {
+      val arr = scores.longs
       val b = arr.length
       var sum = 0L
       var cnt = 0L
@@ -766,9 +744,8 @@ case class DsirScoreMicros(child: Expression, scores: IndexedSeq[Long])
 
 /** Map-side bigram-LM perplexity proxy — the STREAMING/serving twin of
   * the join-based batch scorer (`graft.operators.LangModel
-  * .perplexityScore`, q87). The model (unigram counts, bigram counts
-  * keyed `"w1 w2"`, vocab size) ships inside the serialized expression
-  * once per executor (the [[BpeEncode]] constructor-param pattern) —
+  * .perplexityScore`, q87). The model (unigram and `"w1 w2"` bigram
+  * count [[Dict.strings]], vocab size) ships in the expression —
   * the CCNet production shape, where the trained model is distributed
   * to workers and scoring is embarrassingly parallel. Integer
   * arithmetic is IDENTICAL to the batch scorer: summing the per-
@@ -776,22 +753,11 @@ case class DsirScoreMicros(child: Expression, scores: IndexedSeq[Long])
   * `ip * tf`, so both paths agree bit-for-bit (spec-pinned). Returns
   * NULL for docs with fewer than two tokens (nothing to score — the
   * batch scorer omits those rows). */
-case class PerplexityMicros(child: Expression, uni: Map[String, Long],
-    bi: Map[String, Long], v: Long)
-    extends UnaryExpression with CodegenFallback {
+case class PerplexityMicros(child: Expression, uni: Dict, bi: Dict,
+    v: Long) extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "perplexity_micros"
-  @transient private lazy val jUni = {
-    val m = new java.util.HashMap[String, java.lang.Long](uni.size * 2)
-    uni.foreach { case (k, c) => m.put(k, c) }
-    m
-  }
-  @transient private lazy val jBi = {
-    val m = new java.util.HashMap[String, java.lang.Long](bi.size * 2)
-    bi.foreach { case (k, c) => m.put(k, c) }
-    m
-  }
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[UTF8String].toString
       .split("\\s+").filter(_.nonEmpty)
@@ -800,11 +766,9 @@ case class PerplexityMicros(child: Expression, uni: Map[String, Long],
       var sum = 0L
       var i = 0
       while (i < toks.length - 1) {
-        val c1 = jUni.get(toks(i))
-        val c2 = jBi.get(toks(i) + " " + toks(i + 1))
-        val c1v = if (c1 == null) 0L else c1.longValue()
-        val c2v = if (c2 == null) 0L else c2.longValue()
-        sum += ((c1v + v) * 1000000L) / (c2v + 1L)
+        val c1 = uni.get(toks(i), 0L)
+        val c2 = bi.get(toks(i) + " " + toks(i + 1), 0L)
+        sum += ((c1 + v) * 1000000L) / (c2 + 1L)
         i += 1
       }
       sum / (toks.length - 1L)
@@ -815,28 +779,21 @@ case class PerplexityMicros(child: Expression, uni: Map[String, Long],
 }
 
 /** Membership of a Long key in a STATIC sorted set — binary search over
-  * a long[] that ships INSIDE the serialized expression once per
-  * executor (the [[BpeEncode]] constructor-param pattern), with full
-  * whole-stage codegen. The map-side half of broadcast-a-dictionary
-  * plans (boilerplate-chunk removal): the alternatives are an
-  * `array_contains` over a literal array (O(|set|) per probe) or a UDF
-  * over a broadcast HashSet (no codegen, boxing per row).
-  * `set` must be sorted ascending and distinct — callers build it with
-  * `.sorted` on a collected key column. */
-case class SortedLongSetContains(child: Expression, set: IndexedSeq[Long])
+  * `set`, a [[Dict.sortedLongs]], with full whole-stage codegen. The
+  * map-side half of broadcast-a-dictionary plans (boilerplate-chunk
+  * removal): the alternatives are an `array_contains` over a literal
+  * array (O(|set|) per probe) or a UDF over a broadcast HashSet (no
+  * codegen, boxing per row). */
+case class SortedLongSetContains(child: Expression, set: Dict)
     extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "sorted_long_set_contains"
-  // case-class equality over IndexedSeq is structural (plan
-  // canonicalization / subexpression elimination stay correct); the
-  // lookup array is derived once per (de)serialized instance
-  @transient private lazy val arr: Array[Long] = set.toArray
   override def nullSafeEval(input: Any): Any =
-    java.util.Arrays.binarySearch(arr, input.asInstanceOf[Long]) >= 0
+    java.util.Arrays.binarySearch(set.longs, input.asInstanceOf[Long]) >= 0
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode = {
-    val ref = ctx.addReferenceObj("sortedSet", arr, "long[]")
+    val ref = ctx.addReferenceObj("sortedSet", set.longs, "long[]")
     nullSafeCodeGen(ctx, ev, v =>
       s"${ev.value} = java.util.Arrays.binarySearch($ref, $v) >= 0;")
   }
@@ -956,8 +913,7 @@ object GopherRepetitionStats {
   * result and the join-based batch plan is reproduced bit-for-bit on
   * any corpus whose tokens the model has seen. Unseen tokens take
   * `default` (the trained zero-count weight). NULL for empty docs. */
-case class OddsScoreMicros(child: Expression,
-    weights: Map[String, Long], default: Long)
+case class OddsScoreMicros(child: Expression, weights: Dict, default: Long)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
@@ -970,7 +926,7 @@ case class OddsScoreMicros(child: Expression,
       var sum = 0L
       var i = 0
       while (i < toks.length) {
-        sum += weights.getOrElse(toks(i), default)
+        sum += weights.get(toks(i), default)
         i += 1
       }
       sum / toks.length
@@ -1091,28 +1047,27 @@ object TextExpressions {
   def gopherRepetitionStats(text: Column): Column =
     ExpressionUtils.column(
       GopherRepetitionStats(ExpressionUtils.expression(text)))
-  def oddsScoreMicros(text: Column, weights: Map[String, Long],
-      default: Long): Column =
+  def oddsScoreMicros(text: Column, weights: Dict, default: Long): Column =
     ExpressionUtils.column(
       OddsScoreMicros(ExpressionUtils.expression(text), weights, default))
-  def sortedLongSetContains(key: Column, set: IndexedSeq[Long]): Column =
+  def sortedLongSetContains(key: Column, set: Dict): Column =
     ExpressionUtils.column(
       SortedLongSetContains(ExpressionUtils.expression(key), set))
+  /** `merges` in rank order. */
   def bpeEncode(text: Column, merges: Seq[(String, String)]): Column =
-    ExpressionUtils.column(
-      BpeEncode(ExpressionUtils.expression(text), merges))
+    ExpressionUtils.column(BpeEncode(ExpressionUtils.expression(text),
+      Dict.strings(merges.zipWithIndex.map { case ((l, r), i) =>
+        s"$l $r" -> i.toLong })))
   def shingleSet(text: Column, k: Int): Column =
     ExpressionUtils.column(ShingleSet(ExpressionUtils.expression(text), k))
   def termFreqs(text: Column): Column =
     ExpressionUtils.column(TermFreqs(ExpressionUtils.expression(text)))
-  def rarestKGrams(gs: Column, k: Int, grams: IndexedSeq[Long],
-      dfs: IndexedSeq[Long]): Column =
-    ExpressionUtils.column(
-      RarestKGrams(ExpressionUtils.expression(gs), k, grams, dfs))
+  def rarestKGrams(gs: Column, k: Int, dfs: Dict): Column =
+    ExpressionUtils.column(RarestKGrams(ExpressionUtils.expression(gs), k, dfs))
   def containmentPrefixGrams(gs: Column, tMarginPpm: Long,
-      grams: IndexedSeq[Long], dfs: IndexedSeq[Long]): Column =
+      dfs: Dict): Column =
     ExpressionUtils.column(ContainmentPrefixGrams(
-      ExpressionUtils.expression(gs), tMarginPpm, grams, dfs))
+      ExpressionUtils.expression(gs), tMarginPpm, dfs))
   def shingleHashSet(text: Column, k: Int): Column =
     ExpressionUtils.column(
       ShingleHashSet(ExpressionUtils.expression(text), k))
@@ -1121,16 +1076,16 @@ object TextExpressions {
   def dsirFeatureBuckets(text: Column, buckets: Int): Column =
     ExpressionUtils.column(
       DsirFeatureBuckets(ExpressionUtils.expression(text), buckets))
-  def dsirScoreMicros(text: Column, scores: IndexedSeq[Long]): Column =
+  def dsirScoreMicros(text: Column, scores: Dict): Column =
     ExpressionUtils.column(
       DsirScoreMicros(ExpressionUtils.expression(text), scores))
   def cdcSegments(text: Column, p: Int): Column =
     ExpressionUtils.column(CdcSegments(ExpressionUtils.expression(text), p))
   def cdcFirstOccurrenceText(text: Column, docId: Column, p: Int,
-      hashes: IndexedSeq[Long], canonPacked: IndexedSeq[Long]): Column =
+      canon: Dict): Column =
     ExpressionUtils.column(CdcFirstOccurrenceText(
       ExpressionUtils.expression(text), ExpressionUtils.expression(docId),
-      p, hashes, canonPacked))
+      p, canon))
   def minHashSig(text: Column, k: Int, numHashes: Int): Column =
     ExpressionUtils.column(
       MinHashSig(ExpressionUtils.expression(text), k, numHashes))
@@ -1139,11 +1094,10 @@ object TextExpressions {
   def sortedIntersectCount(a: Column, b: Column): Column =
     ExpressionUtils.column(SortedIntersectCount(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-  def perplexityMicros(text: Column, uni: Map[String, Long],
-      bi: Map[String, Long], v: Long): Column =
+  def perplexityMicros(text: Column, uni: Dict, bi: Dict, v: Long): Column =
     ExpressionUtils.column(
       PerplexityMicros(ExpressionUtils.expression(text), uni, bi, v))
-  def bannedTokenCount(text: Column, set: IndexedSeq[Long]): Column =
+  def bannedTokenCount(text: Column, set: Dict): Column =
     ExpressionUtils.column(
       BannedTokenCount(ExpressionUtils.expression(text), set))
 }

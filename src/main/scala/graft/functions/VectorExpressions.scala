@@ -181,10 +181,9 @@ case class Int8Quantize(child: Expression)
   * ~1k nodes (fine); at the 157 cells a corpus-relative cell count
   * picks at sf1, analysis + codegen of the ~40k-node tree pinned the
   * single-threaded driver for >10 minutes (measured, round 8). This
-  * kernel is ONE expression node — the flattened row-major matrix
-  * ships inside the serialized expression once per executor (the
-  * [[graft]] constructor-param pattern) — so plan work is
-  * cell-count-independent and the per-row loop is the same arithmetic.
+  * kernel is ONE expression node — the flattened row-major matrix is
+  * one [[Dict]] — so plan work is cell-count-independent and the
+  * per-row loop is the same arithmetic.
   *
   * Bitwise parity contract (what keeps the q38/q56/q82 oracles green):
   * per cell, accumulate dot/nx/ny in ascending element order exactly
@@ -202,18 +201,17 @@ case class Int8Quantize(child: Expression)
   * null-embedding row into cell 0 at scale. No gated table contains
   * null embeddings, so the oracles see no difference; the spec pins
   * both behaviors. */
-case class CellArgmax(child: Expression, matrix: IndexedSeq[Double],
-    cells: Int) extends UnaryExpression with ExpectsInputTypes {
-  require(cells > 0 && matrix.length % cells == 0,
-    s"matrix length ${matrix.length} not divisible into $cells cells")
+case class CellArgmax(child: Expression, matrix: Dict, cells: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(cells > 0 && matrix.size % cells == 0,
+    s"matrix length ${matrix.size} not divisible into $cells cells")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(
     ArrayType(FloatType), ArrayType(DoubleType), ArrayType(LongType)))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "cell_argmax"
 
-  private def dim: Int = matrix.length / cells
-  @transient private lazy val m: Array[Double] = matrix.toArray
+  private def dim: Int = matrix.size / cells
 
   private def elem: DataType = child.dataType match {
     case ArrayType(t, _) => t
@@ -229,6 +227,7 @@ case class CellArgmax(child: Expression, matrix: IndexedSeq[Double],
       case _          => x.getFloat(i).toDouble
     }
     val n = math.min(x.numElements(), dim)
+    val m = matrix.doubles
     var best = 0; var bestSim = Double.NaN; var first = true
     var c = 0
     while (c < cells) {
@@ -251,7 +250,7 @@ case class CellArgmax(child: Expression, matrix: IndexedSeq[Double],
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode = {
-    val ref = ctx.addReferenceObj("centroidMatrix", m, "double[]")
+    val ref = ctx.addReferenceObj("centroidMatrix", matrix.doubles, "double[]")
     nullSafeCodeGen(ctx, ev, x => {
       val n = ctx.freshName("n"); val c = ctx.freshName("c")
       val i = ctx.freshName("i"); val off = ctx.freshName("off")
@@ -309,18 +308,17 @@ case class CellArgmax(child: Expression, matrix: IndexedSeq[Double],
   * joins); a width mismatch raises — same loud guard as the composed
   * form's `raise_error` branch, an embedding table with ragged widths
   * is corrupt input, not data. */
-case class HyperplaneSig(child: Expression, matrix: IndexedSeq[Double],
-    planes: Int) extends UnaryExpression with ExpectsInputTypes {
-  require(planes > 0 && planes <= 64 && matrix.length % planes == 0,
-    s"matrix length ${matrix.length} not divisible into $planes planes")
+case class HyperplaneSig(child: Expression, matrix: Dict, planes: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(planes > 0 && planes <= 64 && matrix.size % planes == 0,
+    s"matrix length ${matrix.size} not divisible into $planes planes")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(
     ArrayType(FloatType), ArrayType(DoubleType)))
   override def dataType: DataType = LongType
   override def prettyName: String = "hyperplane_sig"
 
-  private def dim: Int = matrix.length / planes
-  @transient private lazy val m: Array[Double] = matrix.toArray
+  private def dim: Int = matrix.size / planes
 
   private def elem: DataType = child.dataType match {
     case ArrayType(t, _) => t
@@ -337,6 +335,7 @@ case class HyperplaneSig(child: Expression, matrix: IndexedSeq[Double],
       case DoubleType => x.getDouble(i)
       case _          => x.getFloat(i).toDouble
     }
+    val m = matrix.doubles
     var sig = 0L
     var j = 0
     while (j < planes) {
@@ -352,7 +351,7 @@ case class HyperplaneSig(child: Expression, matrix: IndexedSeq[Double],
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
       : ExprCode = {
-    val ref = ctx.addReferenceObj("planeMatrix", m, "double[]")
+    val ref = ctx.addReferenceObj("planeMatrix", matrix.doubles, "double[]")
     nullSafeCodeGen(ctx, ev, x => {
       val j = ctx.freshName("j"); val i = ctx.freshName("i")
       val off = ctx.freshName("off"); val d = ctx.freshName("d")
@@ -390,14 +389,13 @@ case class HyperplaneSig(child: Expression, matrix: IndexedSeq[Double],
   * `dim/m` components; each subspace gets the id of its nearest (L2)
   * sub-centroid — ties to the lowest id. `matrix` is flattened
   * subspace-major then cell-major: entry (s, c, i) at
-  * `((s·k + c)·subDim) + i`. One pass, map-only; the codebook ships
-  * inside the expression (m·k·subDim doubles — a few KB), the q83
-  * artifact-in-expression discipline. NULL array → NULL codes. */
-case class PqAssign(child: Expression, matrix: IndexedSeq[Double],
-    m: Int, k: Int) extends UnaryExpression with ExpectsInputTypes
-    with CodegenFallback {
-  require(m > 0 && k > 0 && matrix.length % (m * k) == 0,
-    s"matrix length ${matrix.length} not divisible into $m x $k cells")
+  * `((s·k + c)·subDim) + i`. One pass, map-only; the codebook
+  * (m·k·subDim doubles, a few KB) ships in the expression. NULL array
+  * → NULL codes. */
+case class PqAssign(child: Expression, matrix: Dict, m: Int, k: Int)
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  require(m > 0 && k > 0 && matrix.size % (m * k) == 0,
+    s"matrix length ${matrix.size} not divisible into $m x $k cells")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(TypeCollection(
     ArrayType(FloatType), ArrayType(DoubleType)))
@@ -405,8 +403,7 @@ case class PqAssign(child: Expression, matrix: IndexedSeq[Double],
     ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_assign"
 
-  private def subDim: Int = matrix.length / (m * k)
-  @transient private lazy val mat: Array[Double] = matrix.toArray
+  private def subDim: Int = matrix.size / (m * k)
 
   private def elem: DataType = child.dataType match {
     case ArrayType(t, _) => t
@@ -421,6 +418,7 @@ case class PqAssign(child: Expression, matrix: IndexedSeq[Double],
       case _          => x.getFloat(i).toDouble
     }
     val d = subDim
+    val mat = matrix.doubles
     // loud-failure contract (the other kernels' discipline): a short or
     // ragged vector must not encode to a plausible code via silent
     // zero-padding — the oracle's list_zip would NULL out there, and a
@@ -464,17 +462,16 @@ case class PqAssign(child: Expression, matrix: IndexedSeq[Double],
   * contract, since the oracle folds the same doubles the same way.
   * The table (m·k doubles) is computed once per query on the driver
   * and ships in the expression. */
-case class PqAdcScore(child: Expression, table: IndexedSeq[Double],
-    k: Int) extends UnaryExpression with ExpectsInputTypes
-    with CodegenFallback {
-  require(k > 0 && table.length % k == 0,
-    s"table length ${table.length} not divisible by k=$k")
+case class PqAdcScore(child: Expression, table: Dict, k: Int)
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
+  require(k > 0 && table.size % k == 0,
+    s"table length ${table.size} not divisible by k=$k")
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(IntegerType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc_score"
-  @transient private lazy val t: Array[Double] = table.toArray
   override def nullSafeEval(input: Any): Any = {
+    val t = table.doubles
     val codes = input.asInstanceOf[ArrayData]
     var sum = 0.0
     var s = 0
@@ -501,28 +498,24 @@ object VectorExpressions {
 
   /** Column API for the native argmax-cell assignment. `matrix` is
     * row-major (cell-major) flattened centroids. */
-  def cellArgmaxNative(emb: Column, matrix: IndexedSeq[Double],
-      cells: Int): Column =
+  def cellArgmaxNative(emb: Column, matrix: Dict, cells: Int): Column =
     ExpressionUtils.column(
       CellArgmax(ExpressionUtils.expression(emb), matrix, cells))
 
   /** Column API for the native hyperplane-LSH signature. `matrix` is
     * plane-major flattened weight rows. */
-  def hyperplaneSigNative(emb: Column, matrix: IndexedSeq[Double],
-      planes: Int): Column =
+  def hyperplaneSigNative(emb: Column, matrix: Dict, planes: Int): Column =
     ExpressionUtils.column(
       HyperplaneSig(ExpressionUtils.expression(emb), matrix, planes))
 
   /** Column API for the PQ code assignment. `matrix` is flattened
     * (subspace, cell)-major sub-centroids. */
-  def pqAssignNative(emb: Column, matrix: IndexedSeq[Double],
-      m: Int, k: Int): Column =
+  def pqAssignNative(emb: Column, matrix: Dict, m: Int, k: Int): Column =
     ExpressionUtils.column(
       PqAssign(ExpressionUtils.expression(emb), matrix, m, k))
 
   /** Column API for ADC scoring against a per-query distance table. */
-  def pqAdcScoreNative(codes: Column, table: IndexedSeq[Double],
-      k: Int): Column =
+  def pqAdcScoreNative(codes: Column, table: Dict, k: Int): Column =
     ExpressionUtils.column(
       PqAdcScore(ExpressionUtils.expression(codes), table, k))
 }

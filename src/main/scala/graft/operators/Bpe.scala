@@ -198,24 +198,24 @@ object BpeKernel {
     * round merges the lowest-ranked pair present, everywhere in the
     * word) — reproduces the training segmentation exactly for every
     * word the trainer saw, because training applied the same merges in
-    * the same global order. */
-  def encodeWord(word: String,
-      rank: collection.Map[(String, String), Int],
-      pairs: IndexedSeq[(String, String)]): Vector[String] = {
+    * the same global order. `rank(l, r)` is the merge's rank, or
+    * `Long.MaxValue` for a pair that is not a merge. */
+  def encodeWord(word: String, rank: (String, String) => Long)
+      : Vector[String] = {
     var syms = wordSymbols(word)
     var continue = syms.length > 1
     while (continue) {
-      var best = Int.MaxValue
+      var best = Long.MaxValue
+      var at = -1
       var i = 0
       while (i < syms.length - 1) {
-        val rk = rank.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
-        if (rk < best) best = rk
+        val rk = rank(syms(i), syms(i + 1))
+        if (rk < best) { best = rk; at = i }
         i += 1
       }
-      if (best == Int.MaxValue) continue = false
+      if (at < 0) continue = false
       else {
-        val (l, r) = pairs(best)
-        syms = applyMerge(syms, l, r)
+        syms = applyMerge(syms, syms(at), syms(at + 1))
         if (syms.length < 2) continue = false
       }
     }

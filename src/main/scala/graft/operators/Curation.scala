@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Dict
 import graft.Tables
 import graft.functions.TextFunctions._
 
@@ -108,7 +109,7 @@ object Curation {
         gopherRepetitionKeep(col("text")).as("g_rep"),
         LangModel.scoreColumn(ppxM, col("text")).as("ppx"),
         org.apache.spark.sql.graft.TextExpressions
-          .dsirScoreMicros(col("text"), dsirT.toIndexedSeq).as("dsir"),
+          .dsirScoreMicros(col("text"), Dict.longs(dsirT)).as("dsir"),
         LangModel.oddsScoreColumn(oddsM, col("text")).as("odds"),
         fingerprint(col("text")).as("fp"),
         org.apache.spark.sql.graft.TextExpressions

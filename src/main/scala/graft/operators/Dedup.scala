@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.graft.TextExpressions
+import org.apache.spark.sql.graft.{Dict, TextExpressions}
 
 /** Deduplication family for the training-data pipeline (north-star
   * extensions, SURVEY §7.2 step 8): exact, near-dup via n-gram Jaccard,
@@ -338,22 +338,19 @@ object Dedup {
   /** [[cdcDedup]] with the cap injectable for specs. */
   private[operators] def cdcDedupOn(docs: DataFrame, p: Int,
       maxDict: Int): DataFrame = {
-    val dictRows = cdcSegmentRelation(docs, p)
+    val dict = Dict.sortedPairs(cdcSegmentRelation(docs, p)
       .groupBy("seg_h")
       .agg(min(col("doc_id") * lit(1000000L) + col("seg_idx"))
         .as("canon"), count(lit(1)).as("cnt"))
       .where(col("cnt") >= 2)
       .select("seg_h", "canon")
-      .limit(maxDict + 1).collect()
-    require(dictRows.length <= maxDict,
+      .limit(maxDict + 1))
+    require(dict.size <= maxDict,
       s"cdcDedup: more than $maxDict duplicated segments — run " +
         "boilerplate/chunk dedup first (q83) or raise MaxCdcDict " +
         "with the executor memory to back it")
-    val sorted = dictRows.map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
     val res = TextExpressions.cdcFirstOccurrenceText(
-      col("text"), col("doc_id"), p,
-      sorted.map(_._1).toIndexedSeq, sorted.map(_._2).toIndexedSeq)
+      col("text"), col("doc_id"), p, dict)
     docs
       .select(col("doc_id"), res.as("r"))
       .select(col("doc_id"), col("r.clean_text").as("clean_text"),
@@ -533,19 +530,11 @@ object Dedup {
         // The quadratic term drops from Σ df² to Σ pdf·df — at t=0.8
         // the prefix is ~a fifth of each doc — while the verify joins
         // ride the q73 measured-broadcast guard.
-        val rows = kept.collect() // bounded by the cap just measured
-        java.util.Arrays.sort(rows, new java.util.Comparator[
-            org.apache.spark.sql.Row] {
-          override def compare(a: org.apache.spark.sql.Row,
-              b: org.apache.spark.sql.Row): Int =
-            java.lang.Long.compare(a.getLong(0), b.getLong(0))
-        })
-        val gArr = rows.map(_.getLong(0)).toIndexedSeq
-        val dArr = rows.map(_.getLong(1)).toIndexedSeq
+        val dfs = Dict.sortedPairs(kept) // bounded by the cap just measured
         val tPpm = math.max(1L, (tMargin * 1000000L).toLong - 1)
         val pfx = capped.select(col("doc_id").as("pid"),
           explode(TextExpressions.containmentPrefixGrams(
-            col("toks"), tPpm, gArr, dArr)).as("token"))
+            col("toks"), tPpm, dfs)).as("token"))
         val full = capped.select(col("doc_id").as("fid"),
           explode(col("toks")).as("token"))
         val cand = pfx.join(full,
@@ -1478,7 +1467,7 @@ object Dedup {
     val dict = dictDf.limit(maxDict + 1).collect()
       .map(_.getLong(0))
     if (dict.length <= maxDict) {
-      val sorted = dict.sorted.toIndexedSeq
+      val sorted = Dict.sortedLongs(dict)
       ScanPar.spread(docs)
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(col("doc_id"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.FuzzyExpressions
+import org.apache.spark.sql.graft.{Dict, FuzzyExpressions}
 import graft.Tables
 
 /** Edit-distance fuzzy self-join — the record-linkage / entity-
@@ -74,7 +74,7 @@ object FuzzyJoin {
     * relation carrying `keys…` plus the sorted gram array `gs`.
     *
     * Common arm (gram dictionary within `maxBroadcastGrams`): the df
-    * table driver-collects into two aligned sorted arrays — the SAME
+    * table driver-collects into a sorted (gram, df) `Dict` — the SAME
     * bound that previously justified `broadcast(df)` — and the prefix
     * is selected MAP-SIDE per row by [[TextExpressions.rarestKGrams]]
     * over the cached info relation: the gram explode→df join→
@@ -96,19 +96,11 @@ object FuzzyJoin {
     val df = grams.groupBy("g").agg(count(lit(1)).as("df"))
     val nGrams = df.count()
     if (nGrams <= maxBroadcastGrams) {
-      val rows = df.collect() // bounded by the cap just measured
-      java.util.Arrays.sort(rows, new java.util.Comparator[
-          org.apache.spark.sql.Row] {
-        override def compare(a: org.apache.spark.sql.Row,
-            b: org.apache.spark.sql.Row): Int =
-          java.lang.Long.compare(a.getLong(0), b.getLong(0))
-      })
-      val gArr = rows.map(_.getLong(0)).toIndexedSeq
-      val dArr = rows.map(_.getLong(1)).toIndexedSeq
+      val dfs = Dict.sortedPairs(df) // bounded by the cap just measured
       // exchange-free map work over the cached info relation —
       // recompute per self-join branch beats a cache barrier here
       info.select(keyCols :+ explode(TextExpressions.rarestKGrams(
-        col("gs"), prefixLen, gArr, dArr)).as("g"): _*)
+        col("gs"), prefixLen, dfs)).as("g"): _*)
     } else {
       System.err.println(
         s"[graft] fuzzy prefix: $nGrams distinct grams (> cap " +

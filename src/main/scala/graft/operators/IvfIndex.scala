@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Dict
 import org.apache.spark.sql.graft.VectorExpressions.cosineNative
 import graft.Tables
 import graft.functions.TextFunctions.roundStable
@@ -56,7 +57,7 @@ object IvfIndex {
     val sorted = cents.sortBy(_._1)
     require(sorted.zipWithIndex.forall { case ((c, _), i) => c == i },
       s"cells must be contiguous 0..${cents.size - 1}")
-    val flat = sorted.flatMap(_._2).toIndexedSeq
+    val flat = Dict.doubles(sorted.flatMap(_._2).toArray)
     org.apache.spark.sql.graft.VectorExpressions
       .cellArgmaxNative(emb, flat, cents.size).as("cell")
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Dict, TextExpressions}
 import graft.Tables
 import graft.functions.TextFunctions._
 
@@ -104,8 +105,8 @@ object LangModel {
     * equals summing per-distinct-bigram ip·tf; integer div). NULL for
     * docs with fewer than two tokens. */
   def scoreColumn(model: BigramModel, text: Column): Column =
-    org.apache.spark.sql.graft.TextExpressions
-      .perplexityMicros(text, model.uni, model.bi, model.v)
+    TextExpressions.perplexityMicros(text,
+      Dict.strings(model.uni), Dict.strings(model.bi), model.v)
 
   /** q94: language identification BY language model — the CCNet
     * composition this family exists for: train one bigram model per
@@ -440,6 +441,6 @@ object LangModel {
     * bit-identical to the q103 join plan wherever the model's
     * vocabulary covers the doc. NULL for empty docs. */
   def oddsScoreColumn(model: OddsModel, text: Column): Column =
-    org.apache.spark.sql.graft.TextExpressions
-      .oddsScoreMicros(text, model.weights, model.default)
+    TextExpressions.oddsScoreMicros(text, Dict.strings(model.weights),
+      model.default)
 }

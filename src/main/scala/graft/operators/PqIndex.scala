@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.VectorExpressions
+import org.apache.spark.sql.graft.{Dict, VectorExpressions}
 import graft.Tables
 
 /** Product quantization (Jégou et al., PAMI 2011) — the memory side of
@@ -55,7 +55,7 @@ object PqIndex {
       }.toIndexedSeq
     for (_ <- 1 to iters) {
       val codes = VectorExpressions
-        .pqAssignNative(col("embedding"), flatten(cents, m, k, d), m, k)
+        .pqAssignNative(col("embedding"), flatten(cents, m, k), m, k)
       // codes projects BELOW the explode (own select): as a sibling of
       // the generator it would land in the Project above Generate and
       // re-run the m·k·d assignment per exploded row — the IvfIndex
@@ -84,10 +84,42 @@ object PqIndex {
   }
 
   /** Flatten to the (subspace, cell)-major layout [[PqAssign]] wants. */
-  private def flatten(cents: SubCentroids, m: Int, k: Int,
-      d: Int): IndexedSeq[Double] = {
+  private def flatten(cents: SubCentroids, m: Int, k: Int): Dict = {
     val byKey = cents.toMap
-    (0 until m).flatMap(s => (0 until k).flatMap(c => byKey((s, c))))
+    Dict.doubles((0 until m).flatMap(s =>
+      (0 until k).flatMap(c => byKey((s, c)))).toArray)
+  }
+
+  /** ADC top-`topK` of the `cands` embeddings for query `q`: its
+    * squared-L2 table to every sub-centroid, (subspace, cell)-major, each
+    * distance folded in ascending position (the engine-parity order),
+    * ships inside the scoring expression; candidates score with `m`
+    * lookups each, smaller = closer. Output (vec_id, adist) — the
+    * approximate distance, rounded AFTER the raw-double ordering picks
+    * the top k. */
+  private def adcTopK(cands: DataFrame, cents: SubCentroids, q: Seq[Double],
+      topK: Int, m: Int, k: Int): DataFrame = {
+    val byKey = cents.toMap
+    val d = cents.head._2.length
+    val table = Dict.doubles((0 until m).flatMap { s =>
+      (0 until k).map { c =>
+        val cent = byKey((s, c))
+        var dist = 0.0
+        var i = 0
+        while (i < d) {
+          val diff = q(s * d + i) - cent(i); dist += diff * diff; i += 1
+        }
+        dist
+      }
+    }.toArray)
+    val codes = VectorExpressions.pqAssignNative(col("embedding"),
+      flatten(cents, m, k), m, k)
+    cands.select(col("vec_id"),
+        VectorExpressions.pqAdcScoreNative(codes, table, k).as("raw"))
+      .orderBy(col("raw"), col("vec_id"))
+      .limit(topK)
+      .select(col("vec_id"),
+        (floor(col("raw") * 1e6 + lit(0.5)) / 1e6).as("adist"))
   }
 
   // train-once memo, the IvfIndex deployment contract (versioned by the
@@ -104,11 +136,10 @@ object PqIndex {
   def pqCodes(spark: SparkSession, dir: String, m: Int = M, k: Int = K,
       iters: Int = Iters): DataFrame = {
     val cents = trainCached(spark, dir, m, k, iters)
-    val d = cents.head._2.length
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         posexplode(VectorExpressions.pqAssignNative(col("embedding"),
-          flatten(cents, m, k, d), m, k)))
+          flatten(cents, m, k), m, k)))
       .select(col("vec_id"), col("pos").cast("long").as("s"),
         col("col").cast("long").as("code"))
       .orderBy("vec_id", "s")
@@ -130,7 +161,6 @@ object PqIndex {
       m: Int = M, k: Int = K, iters: Int = Iters): DataFrame = {
     val coarse = IvfIndex.trainCached(spark, dir, cells, ivfIters)
     val cents = trainCached(spark, dir, m, k, iters)
-    val d = cents.head._2.length
     val q = Tables.embeddings(spark, dir)
       .where(col("vec_id") === queryId)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble)
@@ -145,70 +175,22 @@ object PqIndex {
     val probes = coarse.map { case (cell, c) => (cell, cos(c)) }
       .sortBy { case (cell, sim) => (-sim, cell) }
       .take(nprobe).map(_._1)
-    val byKey = cents.toMap
-    val table = (0 until m).flatMap { s =>
-      (0 until k).map { c =>
-        val cent = byKey((s, c))
-        var dist = 0.0
-        var i = 0
-        while (i < d) {
-          val diff = q(s * d + i) - cent(i); dist += diff * diff; i += 1
-        }
-        dist
-      }
-    }
-    val codes = VectorExpressions.pqAssignNative(col("embedding"),
-      flatten(cents, m, k, d), m, k)
-    Tables.embeddings(spark, dir)
+    adcTopK(Tables.embeddings(spark, dir)
       .where(col("vec_id") =!= queryId)
       .where(IvfIndex.cellExpr(coarse, col("embedding"))
-        .isin(probes: _*))
-      .select(col("vec_id"),
-        VectorExpressions.pqAdcScoreNative(codes, table, k).as("raw"))
-      .orderBy(col("raw"), col("vec_id"))
-      .limit(topK)
-      .select(col("vec_id"),
-        (floor(col("raw") * 1e6 + lit(0.5)) / 1e6).as("adist"))
+        .isin(probes: _*)), cents, q, topK, m, k)
   }
 
-  /** q109: ADC top-`topK` for the query vector `queryId` — the
-    * per-subspace squared-L2 table to every sub-centroid is computed
-    * once on the driver (ascending-position folds, the engine-parity
-    * order) and ships inside the scoring expression; candidates score
-    * with `m` lookups each, smaller = closer. Output
-    * (vec_id, adist) — the approximate distance, rounded for the gate
-    * AFTER the raw-double ordering picks the top k. */
+  /** q109: ADC top-`topK` ([[adcTopK]]) for the query vector `queryId`
+    * over every other vector. */
   def pqSearch(spark: SparkSession, dir: String, queryId: Long = 0L,
       topK: Int = 10, m: Int = M, k: Int = K,
       iters: Int = Iters): DataFrame = {
     val cents = trainCached(spark, dir, m, k, iters)
-    val d = cents.head._2.length
     val q = Tables.embeddings(spark, dir)
       .where(col("vec_id") === queryId)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble)
-    val byKey = cents.toMap
-    val table = (0 until m).flatMap { s =>
-      (0 until k).map { c =>
-        val cent = byKey((s, c))
-        var dist = 0.0
-        var i = 0
-        while (i < d) {
-          val diff = q(s * d + i) - cent(i)
-          dist += diff * diff
-          i += 1
-        }
-        dist
-      }
-    }
-    val codes = VectorExpressions.pqAssignNative(col("embedding"),
-      flatten(cents, m, k, d), m, k)
-    Tables.embeddings(spark, dir)
-      .where(col("vec_id") =!= queryId)
-      .select(col("vec_id"),
-        VectorExpressions.pqAdcScoreNative(codes, table, k).as("raw"))
-      .orderBy(col("raw"), col("vec_id"))
-      .limit(topK)
-      .select(col("vec_id"),
-        (floor(col("raw") * 1e6 + lit(0.5)) / 1e6).as("adist"))
+    adcTopK(Tables.embeddings(spark, dir).where(col("vec_id") =!= queryId),
+      cents, q, topK, m, k)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions.roundStable
 import graft.functions.VectorFunctions._
+import org.apache.spark.sql.graft.Dict
 import org.apache.spark.sql.graft.VectorExpressions.cosineNative
 
 /** Similarity search over the `embeddings` table (north-star extension):
@@ -367,7 +368,8 @@ object Similarity {
     * bad row. Bitwise-equal to [[bucketSignatureComposed]]
     * (HyperplaneSigSpec pins it on the real corpus). */
   private[operators] def bucketSignature(planes: Int, dim: Int = 64) = {
-    val flat = planeWeights(planes, dim).flatten.map(_.toDouble)
+    val flat = Dict.doubles(
+      planeWeights(planes, dim).flatten.map(_.toDouble).toArray)
     org.apache.spark.sql.graft.VectorExpressions.hyperplaneSigNative(
       col("embedding"), flat, planes)
   }

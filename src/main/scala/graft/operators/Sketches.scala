@@ -244,25 +244,30 @@ object Sketches {
   def hllOverlap(spark: SparkSession, dir: String): DataFrame =
     hllOverlapOn(Tables.events(spark, dir))
 
+  /** Unordered event-type pairs (`type_a` < `type_b`) of `regs`: the
+    * vocab-sized type list is collected once by a global aggregate (no
+    * keyed exchange) and exploded against itself. */
+  private def typePairs(regs: DataFrame): DataFrame =
+    regs.agg(collect_set(col("event_type")).as("ts"))
+      .select(explode(col("ts")).as("type_a"), col("ts"))
+      .select(col("type_a"), explode(col("ts")).as("type_b"))
+      .where(col("type_a") < col("type_b"))
+
   /** [[hllOverlap]] over an explicit (event_type, user_id) relation. */
   def hllOverlapOn(events: DataFrame): DataFrame = {
     val ev = events.select(col("event_type"),
       col("user_id").cast("string").as("uid"))
     val regs = graft.Caches.register(
       hllRegisters(ev, Seq("event_type"), col("uid")).cache())
-    val types = regs.select(col("event_type")).distinct()
-    // unordered type pairs — a broadcast product of two vocab-sized
-    // relations (benign BNLJ, the 1-row-total pattern's cousin)
-    val pairs = types.select(col("event_type").as("type_a"))
-      .crossJoin(broadcast(types.select(col("event_type").as("type_b"))))
-      .where(col("type_a") < col("type_b"))
-    val membership = pairs.select(col("type_a"), col("type_b"),
+    val membership = typePairs(regs).select(col("type_a"), col("type_b"),
       explode(array(col("type_a"), col("type_b"))).as("event_type"))
     val unionRegs = membership.join(regs, Seq("event_type"))
       .groupBy("type_a", "type_b", "j").agg(max(col("rho")).as("rho"))
     val estU = hllEstimate(unionRegs, Seq("type_a", "type_b"))
       .withColumnRenamed("est_distinct", "union_est")
-    val est1 = hllEstimate(regs, Seq("event_type"))
+    // cached: read under two aliases, built once
+    val est1 = graft.Caches.register(
+      hllEstimate(regs, Seq("event_type")).cache())
     val estA = est1.select(col("event_type").as("type_a"),
       col("est_distinct").as("est_a"))
     val estB = est1.select(col("event_type").as("type_b"),
@@ -779,12 +784,7 @@ object Sketches {
     * rescan ([[graft.streaming.SketchStream.kmvTableOverlap]] serves
     * exactly this over the streamed sink). */
   def kmvOverlapFromRegs(regs: DataFrame, k: Int = DefaultKmvK): DataFrame = {
-    val types = regs.select(col("event_type")).distinct()
-    // unordered type pairs — broadcast product of two vocab-sized sides
-    val pairs = types.select(col("event_type").as("type_a"))
-      .crossJoin(broadcast(types.select(col("event_type").as("type_b"))))
-      .where(col("type_a") < col("type_b"))
-    val membership = pairs.select(col("type_a"), col("type_b"),
+    val membership = typePairs(regs).select(col("type_a"), col("type_b"),
       explode(array(col("type_a"), col("type_b"))).as("event_type"))
     val ku = kmvTopK(
       membership.join(regs, Seq("event_type"))
@@ -831,8 +831,8 @@ object Sketches {
       .agg(count(lit(1)).as("overlap_exact"))
     // count over the distinct membership ≡ countDistinct over the raw
     // events — one cache read instead of a second two-phase agg scan
-    val exd = m.groupBy("event_type")
-      .agg(count(lit(1)).as("ed"))
+    val exd = graft.Caches.register(m.groupBy("event_type")
+      .agg(count(lit(1)).as("ed")).cache()) // read as ea and eb
     val exdA = exd.select(col("event_type").as("type_a"), col("ed").as("ea"))
     val exdB = exd.select(col("event_type").as("type_b"), col("ed").as("eb"))
     stats
@@ -902,10 +902,11 @@ object Sketches {
       col("user_id").cast("string").as("uid"))
     // the day-grain sketch table (what a warehouse persists)
     val daily = graft.Caches.register(kmvRegistersDaily(ev, k).cache())
-    val rangeRegs = kmvTopK(
+    // cached: the theta algebra reads it five times
+    val rangeRegs = graft.Caches.register(kmvTopK(
       daily.where(col("dt").between(from, to))
         .select(col("event_type"), col("h")),
-      Seq("event_type"), k)
+      Seq("event_type"), k).cache())
     overlapWithAudit(kmvOverlapFromRegs(rangeRegs, k),
       ev.where(col("dt").between(from, to))
         .select(col("event_type"), col("uid")))

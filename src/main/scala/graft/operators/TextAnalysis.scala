@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Dict, TextExpressions}
 import graft.Tables
 import graft.functions.TextFunctions._
 
@@ -343,12 +344,11 @@ object TextAnalysis {
     * (threshold policies — any-hit, ratio — are one `where` on top). */
   def blocklistScan(spark: SparkSession, dir: String,
       terms: Seq[String] = DefaultBlocklist): DataFrame = {
-    val set = terms.distinct.map(md5LongScala).sorted.toIndexedSeq
+    val set = Dict.sortedLongs(terms.map(md5LongScala).toArray)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         tokenCount(col("text")).cast("long").as("n_tokens"),
-        org.apache.spark.sql.graft.TextExpressions
-          .bannedTokenCount(col("text"), set).as("n_banned"))
+        TextExpressions.bannedTokenCount(col("text"), set).as("n_banned"))
       .withColumn("keep",
         when(col("n_banned") === 0L, lit(1L)).otherwise(lit(0L)))
       .orderBy("doc_id")

@@ -9,39 +9,26 @@ import org.apache.spark.sql.functions._
   *
   *  - session-entry filter (T8, :74-76)           → `filter`
   *  - per-day distinct on mid via Redis SADD (J5, :86-111)
-  *       → `withWatermark(..).dropDuplicates(keys incl. dt)`
+  *       → `withWatermark(..).dropDuplicatesWithinWatermark(key, dt)`
   *  - dim enrichment via Redis GET (J1/J2, :115-180)
   *       → stream-static broadcast joins
   *  - daily ES index, doc id = mid (K2, :186-204)
-  *       → dt-partitioned parquet append; within-batch rows are already
-  *         unique by (dt, mid) so the append is idempotent per epoch
+  *       → keyed idempotent upsert into dt-partitioned parquet
   *  - `revertState` ES read-back (S4, :209-233) → obsolete: the dedup
   *    state lives in the checkpoint and survives restart.
   *
-  * State sizing at scale: dropDuplicates keys (dt, key) — state is one
-  * compact row per active user per day; the 25 h watermark (> the 24 h
-  * reference TTL) lets Spark evict a finished day's state wholesale.
+  * State sizing at scale: one compact row per active user per day; the
+  * 25 h watermark (> the 24 h reference TTL) evicts a finished day's
+  * state.
   */
 object DauStream {
 
   /** First event per (day, key): the streaming per-day distinct. Input
-    * must carry an event-time column `ts` (TimestampType). */
-  def firstVisits(events: DataFrame, key: String = "user_id",
-      entryFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    val filtered = entryFilter.map(events.where).getOrElse(events)
-    filtered
-      .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
-      .withColumn("hr", date_format(col("ts"), "HH"))
-      .withWatermark("ts", "25 hours")
-      .dropDuplicates(key, "dt")
-  }
-
-  /** State-EVICTING variant: `dropDuplicates(key, dt)` never frees its
-    * store (the event-time column is not part of the key), so state
-    * accretes one row per (user, day) forever — fine for a test, fatal
-    * at 100 TB. `dropDuplicatesWithinWatermark` dedups rows whose event
-    * times fall within the watermark delay of the first arrival and
-    * EVICTS expired keys. With a 25 h delay and a day-keyed composite
+    * must carry an event-time column `ts` (TimestampType).
+    * `dropDuplicatesWithinWatermark` dedups rows whose event times fall
+    * within the watermark delay of the first arrival and EVICTS expired
+    * keys (a plain `dropDuplicates(key, dt)` would keep one row per
+    * (user, day) forever). With a 25 h delay and a day-keyed composite
     * key this matches the reference's per-day distinct (same-day rows
     * are always < 24 h apart); an extremely late same-day duplicate
     * (> 25 h) would re-emit — absorbed by the keyed idempotent sink. */
@@ -60,13 +47,6 @@ object DauStream {
   def enrich(firstVisits: DataFrame, dims: DataFrame,
       joinKey: String): DataFrame =
     firstVisits.join(broadcast(dims), Seq(joinKey), "left")
-
-  /** K2-equivalent sink for foreachBatch: dt-partitioned append.
-    * NOTE: append alone is only exactly-once while epochs never replay;
-    * use [[idempotentSinkEachBatch]] for the reference's doc-id
-    * idempotence under foreachBatch retry. */
-  def sinkEachBatch(outDir: String)(batch: DataFrame, epochId: Long): Unit =
-    batch.write.mode("append").partitionBy("dt").parquet(outDir)
 
   /** K2 idempotent sink: last-wins upsert keyed on `keys` — the Spark-
     * native form of the reference's "ES doc id = mid" dedup-on-write

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Dict, TextExpressions}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.TextFunctions._
 
@@ -139,13 +140,11 @@ object DocStream {
           graft.operators.Curation.gopherRepetitionKeep(col("text")))
       else gated01
     val gated1 = blocklist.fold(gated0) { terms =>
-      val set = terms.distinct.map(md5LongScala).sorted.toIndexedSeq
-      gated0.where(org.apache.spark.sql.graft.TextExpressions
-        .bannedTokenCount(col("text"), set) === 0L)
+      val set = Dict.sortedLongs(terms.map(md5LongScala).toArray)
+      gated0.where(TextExpressions.bannedTokenCount(col("text"), set) === 0L)
     }
     val gated2 = dsirScores.fold(gated1) { scores =>
-      val w = org.apache.spark.sql.graft.TextExpressions
-        .dsirScoreMicros(col("text"), scores.toIndexedSeq)
+      val w = TextExpressions.dsirScoreMicros(col("text"), Dict.longs(scores))
       gated1.where(w.isNull || w >= minDsirMicros)
     }
     val gated = oddsModel.fold(gated2) { m =>
@@ -355,13 +354,11 @@ object DocStream {
       .where(col("cnt") >= 2)
       .select("seg_h", "canon")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val dict = (confirmed.map(h => (h, -1L)) ++
+    val dict = Dict.sortedPairs(confirmed.map(h => (h, -1L)) ++
       intra.filterNot { case (h, _) => confirmedSet(h) })
-      .sortBy(_._1)
 
-    val res = org.apache.spark.sql.graft.TextExpressions
-      .cdcFirstOccurrenceText(col("text"), col("doc_id"), p,
-        dict.map(_._1).toIndexedSeq, dict.map(_._2).toIndexedSeq)
+    val res = TextExpressions.cdcFirstOccurrenceText(
+      col("text"), col("doc_id"), p, dict)
     val rows = docs
       .select(col("doc_id"), res.as("r"))
       .select(col("doc_id"), col("r.clean_text").as("text"),

@@ -54,13 +54,7 @@ class PlanAuditSpec extends SparkSpec {
     // q132/q133: the 1-row kept-user-count broadcast (same pattern)
     "q132_basket_lift", "q133_basket_rules",
     // q139: the 1-row occurrence-total broadcast (q64's total pattern)
-    "q139_heavy_hitters",
-    // q144: the vocab-sized type-pair product (5×5 broadcast)
-    "q144_hll_overlap",
-    // q147: the same vocab-sized type-pair product as q144
-    "q147_kmv_overlap",
-    // q156: q147's pair product over the range sketches
-    "q156_kmv_range_overlap")
+    "q139_heavy_hitters")
 
   /** Max keyed (hash/range) exchanges allowed per query, counted by
     * [[Explain.keyedExchanges]] from a clean cache (recorded at sf0.001
@@ -417,14 +411,13 @@ class PlanAuditSpec extends SparkSpec {
     "q142_hist_quantiles" -> 7,
     // q143: three 1-row table aggs + two anti-join orphan counts
     "q143_quality_report" -> 4,
-    // q144: register agg (cached), the two type-list distincts of the
-    // broadcast pair product, the per-type estimate agg under each of
-    // est_a/est_b, the exact audit's (type, uid) distinct (cached) and
-    // pair-overlap agg, the estimate side's re-exchange for the
-    // sort-merge audit join, and the output sort. The per-pair union
-    // re-agg and its estimate ride the type_a partitioning, and the uid
-    // self-join broadcasts
-    "q144_hll_overlap" -> 9,
+    // q144: register agg (cached), the per-pair union re-agg on
+    // (type_a, type_b, j) and its estimate agg, the per-type estimate
+    // agg (cached, read as est_a and est_b), the exact audit's
+    // (type, uid) distinct (cached) and pair-overlap agg, and the output
+    // sort. The type pairs explode one collected type list (a global
+    // aggregate, not keyed) and the uid self-join broadcasts
+    "q144_hll_overlap" -> 7,
     // q145: pruned layout scan + exact filter + output sort — the
     // layout build is a memoized write job, not part of this plan
     "q145_zorder_scan" -> 1,
@@ -435,14 +428,13 @@ class PlanAuditSpec extends SparkSpec {
     // audit (per-type two-level distinct, global distinct on uid) and
     // the output sort; at 100 TB only the sketch/estimate path runs
     "q146_kmv_users" -> 8,
-    // q147: the sketch build's two exchanges (cached), the two type-list
-    // distincts of the broadcast vocab×vocab pair product (the benign
-    // BNLJ), the per-pair theta agg on (type_a, type_b) — the union
-    // re-top-k rides the type_a partitioning and the membership joins
-    // broadcast — and the exact audit: the (type, uid) distinct
-    // (cached), the pair-overlap agg, the per-type counts under ea/eb,
-    // and the output sort
-    "q147_kmv_overlap" -> 10,
+    // q147: the sketch build's two exchanges (cached), the per-pair union
+    // re-top-k's (type_a, type_b, h) distinct and window (the theta agg
+    // rides its partitioning; the membership joins broadcast, the type
+    // pairs explode one collected type list), and the exact audit: the
+    // (type, uid) distinct (cached), the pair-overlap agg, the per-type
+    // counts (cached, read as ea and eb), and the output sort
+    "q147_kmv_overlap" -> 8,
     // q148: pruned layout scan + exact filter + output sort — the
     // bloom probe join runs driver-side at plan build (candidate
     // collection), like q145's quadrant computation
@@ -467,13 +459,12 @@ class PlanAuditSpec extends SparkSpec {
     "q153_forget_batch" -> 1,
     // q156: q147's sketch algebra over the range sketch. The day-grain
     // build's two exchanges (cached), the range re-top-k's (type, h)
-    // distinct and per-type window, counted at each of its five
-    // references (type lists a/b, the union membership, in_a, in_b —
-    // the range relation is not cached), the per-pair theta agg, the
-    // exact audit (as in q147) and the output sort. Every estimator
-    // exchange runs over sketch-sized rows (≤ types × days × k); the
-    // exact audit drops at 100 TB
-    "q156_kmv_range_overlap" -> 18,
+    // distinct and per-type window (cached, read five times), the
+    // per-pair union re-top-k's distinct and window, the exact audit
+    // (as in q147) and the output sort. Every estimator exchange runs
+    // over sketch-sized rows (≤ types × days × k); the exact audit
+    // drops at 100 TB
+    "q156_kmv_range_overlap" -> 10,
     // q157: the q148 pruned-scan shape over the intersected candidate
     // set of the date-clustered layout (both index probes run at plan
     // build, driver-side)

@@ -254,7 +254,8 @@ class AsofSamplingSpec extends SparkSpec {
     // the serving/streaming twin: trainDsir freezes the bucket table,
     // dsirScoreMicros replays the scoring map-side — on the training
     // corpus itself both paths must agree bit-for-bit
-    val table = Sampling.trainDsir(spark, sf).toIndexedSeq
+    val table =
+      org.apache.spark.sql.graft.Dict.longs(Sampling.trainDsir(spark, sf))
     val mapSide = graft.Tables.documents(spark, sf)
       .select(col("doc_id"),
         org.apache.spark.sql.graft.TextExpressions

@@ -39,7 +39,9 @@ class BpeSpec extends SparkSpec {
       ("widest", 3L), ("wides", 1L))
     val merges = Bpe.trainOn(words, numMerges = 8)
     val pairs = merges.map(m => (m.left, m.right)).toIndexedSeq
-    val rank = pairs.zipWithIndex.toMap
+    val rankOf = pairs.zipWithIndex.toMap
+    val rank = (l: String, r: String) =>
+      rankOf.get((l, r)).fold(Long.MaxValue)(_.toLong)
     // training's own final segmentation: apply the merges in order
     var vocab = words.map { case (w, c) => (BpeKernel.wordSymbols(w), c) }
     merges.foreach { m =>
@@ -47,11 +49,11 @@ class BpeSpec extends SparkSpec {
         (BpeKernel.applyMerge(s, m.left, m.right), c) }
     }
     words.map(_._1).zip(vocab.map(_._1)).foreach { case (w, trained) =>
-      assert(BpeKernel.encodeWord(w, rank, pairs) == trained,
+      assert(BpeKernel.encodeWord(w, rank) == trained,
         s"encode($w) diverged from training segmentation")
     }
     // an unseen word still encodes (falls back toward characters)
-    val unseen = BpeKernel.encodeWord("lowest", rank, pairs)
+    val unseen = BpeKernel.encodeWord("lowest", rank)
     assert(unseen.mkString("") == "lowest</w>")
   }
 

@@ -557,12 +557,13 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("sorted-long-set kernel: membership ≡ Set, null-safe") {
     import spark.implicits._
-    import org.apache.spark.sql.graft.TextExpressions
+    import org.apache.spark.sql.graft.{Dict, TextExpressions}
     val set = IndexedSeq(-9L, -1L, 0L, 7L, 42L, Long.MaxValue)
     val probe = Seq[java.lang.Long](-10L, -9L, -1L, 0L, 1L, 7L, 41L, 42L,
       Long.MaxValue, Long.MinValue, null)
     val got = probe.toDF("v")
-      .select(TextExpressions.sortedLongSetContains(col("v"), set))
+      .select(TextExpressions.sortedLongSetContains(col("v"),
+        Dict.sortedLongs(set.toArray)))
       .collect().map(r => if (r.isNullAt(0)) null else r.getBoolean(0))
     val want = probe.map(v =>
       if (v == null) null else Boolean.box(set.contains(v.longValue())))

@@ -42,7 +42,8 @@ class PqIndexSpec extends SparkSpec {
     val cents = PqIndex.train(spark, sf)
     val m = cents.map(_._1._1).max + 1
     val k = cents.map(_._1._2).max + 1
-    val flat = cents.sortBy(_._1).flatMap(_._2).toIndexedSeq
+    val flat = org.apache.spark.sql.graft.Dict.doubles(
+      cents.sortBy(_._1).flatMap(_._2).toArray)
     val bad = Seq((1L, Array(0.5f, -1.5f))).toDF("vec_id", "embedding")
     val e = intercept[Exception] {
       bad.select(org.apache.spark.sql.graft.VectorExpressions

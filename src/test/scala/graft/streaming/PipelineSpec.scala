@@ -485,7 +485,8 @@ class PipelineSpec extends SparkSpec {
     // under the table is what the gate saw)
     val goodW = Seq(good).toDF("text")
       .select(org.apache.spark.sql.graft.TextExpressions
-        .dsirScoreMicros(col("text"), arr.toIndexedSeq))
+        .dsirScoreMicros(col("text"),
+          org.apache.spark.sql.graft.Dict.longs(arr)))
       .collect()(0).getLong(0)
     assert(goodW >= 500000L, s"good doc scored $goodW")
   }

@@ -77,7 +77,7 @@ class RocksDBStateSpec extends SparkSpec {
       val cp = Files.createTempDirectory("rocksdb-dau").toString
       val mem = MemoryStream[(Long, java.sql.Timestamp)]
       val df = mem.toDF().toDF("user_id", "ts")
-      val q = DauStream.firstVisits(df).writeStream
+      val q = DauStream.firstVisitsEvicting(df).writeStream
         .format("memory").queryName("rocks_dau")
         .outputMode("update")
         .option("checkpointLocation", cp)

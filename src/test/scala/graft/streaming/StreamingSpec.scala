@@ -155,8 +155,9 @@ class StreamingSpec extends SparkSpec {
     val out = tmpDir("dau")
     val mem = MemoryStream[(Long, java.sql.Timestamp)]
     val df = mem.toDF().toDF("user_id", "ts")
-    val q = DauStream.firstVisits(df).writeStream
-      .foreachBatch(DauStream.sinkEachBatch(out) _)
+    val q = DauStream.firstVisitsEvicting(df).writeStream
+      .foreachBatch(DauStream.idempotentSinkEachBatch(out,
+        Seq("user_id", "dt")) _)
       .option("checkpointLocation", s"$out/_cp")
       .outputMode("update")
       .start()
@@ -183,7 +184,8 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String, java.sql.Timestamp)]
     val df = mem.toDF().toDF("user_id", "page", "ts")
     val pipeline = DauStream.enrich(
-      DauStream.firstVisits(df, entryFilter = Some(col("page") === "home")),
+      DauStream.firstVisitsEvicting(df,
+        entryFilter = Some(col("page") === "home")),
       dims, "user_id")
     val q = pipeline.writeStream
       .foreachBatch(DauStream.idempotentSinkEachBatch(out,
@@ -455,7 +457,7 @@ class StreamingSpec extends SparkSpec {
     val pages = LogDemux.pages(parsed)
       .withColumn("ts_t", timestamp_millis(col("ts")))
       .drop("ts").withColumnRenamed("ts_t", "ts")
-    val dau = DauStream.firstVisits(pages, key = "mid",
+    val dau = DauStream.firstVisitsEvicting(pages, key = "mid",
       entryFilter = Some(col("last_page_id").isNull))
     val q = dau.writeStream
       .foreachBatch(DauStream.idempotentSinkEachBatch(s"$base/dau",
