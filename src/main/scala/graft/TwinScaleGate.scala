@@ -39,8 +39,7 @@ object TwinScaleGate {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     def partDirs(dir: String): Int =
-      Option(new java.io.File(dir).list()).toSeq.flatten
-        .count(_.startsWith("epoch="))
+      graft.streaming.EpochStore(spark, dir).epochs().size
 
     // ---- GraphStream vs batch q104 --------------------------------
     // per-user event-time-monotone arrival across batches is the

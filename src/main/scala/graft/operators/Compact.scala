@@ -3,16 +3,17 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-/** Small-file compaction for epoch-keyed streaming sinks.
+/** OFFLINE small-file compaction for a stopped epoch-keyed sink.
   *
   * Micro-batch sinks produce one directory (and ≥1 file) per epoch; at a
   * 5 s trigger that is ~17k directories/day/topic — death by file
-  * listing long before the data is big. Compaction rewrites a topic
-  * directory into `targetPartitions` files and atomically swaps it in,
-  * dropping the `epoch` partition column (it was a sink-idempotence
-  * artifact, not data). Run it out-of-band (the streaming writer keeps
-  * appending new epochs while old ones are being compacted only if the
-  * swap is coordinated — here: stop-the-world swap, the simple variant).
+  * listing long before the data is big. [[compactEpochs]] rewrites a
+  * topic directory into `targetPartitions` flat files and atomically
+  * swaps it in, dropping the `epoch` partition column (it was a
+  * sink-idempotence artifact, not data). A LIVE sink folds in-band
+  * instead, from its own foreachBatch, through
+  * [[graft.streaming.EpochStore]] — the one owner of the accumulated
+  * sinks' epoch layout, fold cadence, crash healing and rewrites.
   */
 object Compact {
 
@@ -24,10 +25,10 @@ object Compact {
     * the swap; a change aborts the compaction and leaves the directory
     * untouched (the racer's epoch included). The remaining
     * check-to-rename window is microseconds — a misuse detector, not a
-    * coordination protocol; a LIVE sink compacts from its own
-    * foreachBatch via [[compactAccumulated]], where single-writerness
-    * is structural. `beforeSwap` is a test seam for injecting the
-    * race. */
+    * coordination protocol; a LIVE sink folds from its own
+    * foreachBatch via [[graft.streaming.EpochStore.fold]], where
+    * single-writerness is structural. `beforeSwap` is a test seam for
+    * injecting the race. */
   def compactEpochs(spark: SparkSession, dir: String,
       targetPartitions: Int = 1,
       beforeSwap: () => Unit = () => ()): Unit = {
@@ -51,92 +52,8 @@ object Compact {
         s"compactEpochs: a writer raced the compaction of $dir " +
           s"(epochs changed: ${(after -- before) ++ (before -- after)}); " +
           "aborted, directory untouched — stop the stream first, or " +
-          "compact from the sink's own foreachBatch via compactAccumulated")
+          "fold from the sink's own foreachBatch via EpochStore.fold")
     }
     graft.AtomicSwap.publish(tmp, dir)
   }
-
-  /** Epoch id of the folded BASE partition of an accumulated sink.
-    * Real epoch ids are Spark batch ids (always >= 0), so the base can
-    * never collide with a replayed epoch's overwrite. */
-  val BaseEpoch: Long = -1L
-
-  /** Compact an ACCUMULATED epoch-partitioned sink directory
-    * ([[graft.streaming.GraphStream]] edges/nodes,
-    * [[graft.streaming.BasketStream]] pairs,
-    * [[graft.streaming.DocStream]] corpus dirs) — the unbounded term
-    * of the accumulated-sink story: one `epoch=<id>` directory per
-    * micro-batch is ~17k directories/day/topic at a 5 s trigger, and
-    * every snapshot re-lists and re-reads all of them.
-    *
-    * Folds every epoch partition EXCEPT `keepEpoch` (the in-flight
-    * epoch — the only one a crash can replay, because batch N starts
-    * only after batch N-1 committed) into the single `epoch=-1` base
-    * partition via `fold` (sum partials for additive relations,
-    * `identity` for exactly-once row sets), then atomically swaps the
-    * rebuilt directory in ([[graft.AtomicSwap]] — a committed copy
-    * exists at every instant; call [[recoverAccumulated]] before
-    * reading if a writer may have crashed mid-swap). Non-epoch regular
-    * files beside the partitions (the DocStream rolling sketches
-    * `_bloom.bf` / `_segbloom.bf`) are carried into the new layout
-    * unchanged.
-    *
-    * Replay interaction (the subtle part, spec-pinned): a compacted
-    * base no longer has the folded epochs' directories, but the only
-    * replayable epoch is `keepEpoch`, which is NEVER folded — its
-    * partition survives verbatim, so a replayed batch overwrites it
-    * exactly as in the uncompacted layout and snapshots converge
-    * bit-equal. Run from the sink's own foreachBatch (single writer —
-    * no epoch can land between the listing and the swap); snapshots
-    * racing the swap's rename pair can briefly see the directory
-    * absent, the documented AtomicSwap window. */
-  /** Optional `sortWithin`: cluster the folded base's rows by these
-    * columns INSIDE each written partition (applied after the
-    * repartition, so it survives into the parquet row groups) — for
-    * sinks whose readers skip on column statistics
-    * ([[graft.streaming.BloomStream]]'s `file_id`), where an unsorted
-    * fold would smear every row group's min/max across the whole
-    * domain and disable the skipping the sink exists for. */
-  def compactAccumulated(spark: SparkSession, dir: String,
-      keepEpoch: Long, fold: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame,
-      targetPartitions: Int = 1,
-      sortWithin: Seq[String] = Nil): Unit = {
-    import java.io.File
-    graft.AtomicSwap.recover(dir)
-    val root = new File(dir)
-    if (!root.exists()) return
-    val entries = Option(root.listFiles()).toSeq.flatten
-    val epochDirs = entries.filter(f =>
-      f.isDirectory && f.getName.startsWith("epoch="))
-    val foldable = epochDirs.filterNot(_.getName == s"epoch=$keepEpoch")
-    // fewer than two foldable partitions: the fold would only rewrite
-    // the base it already has
-    if (foldable.size < 2) return
-    val tmp = new File(s"$dir.compact.tmp")
-    if (tmp.exists()) graft.AtomicSwap.deleteRecursively(tmp)
-    val folded = fold(
-      spark.read.parquet(foldable.map(_.getAbsolutePath): _*))
-    val placed = folded.repartition(targetPartitions)
-    val clustered =
-      if (sortWithin.isEmpty) placed
-      else placed.sortWithinPartitions(sortWithin.map(col): _*)
-    clustered.write
-      .mode("overwrite").parquet(s"$tmp/epoch=$BaseEpoch")
-    val keep = new File(root, s"epoch=$keepEpoch")
-    if (keep.exists())
-      spark.read.parquet(keep.getAbsolutePath)
-        .write.mode("overwrite").parquet(s"$tmp/epoch=$keepEpoch")
-    // carry the sibling metadata files (rolling sketches) verbatim
-    entries.filter(_.isFile).foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new File(tmp, f.getName).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    graft.AtomicSwap.publish(tmp.getPath, dir)
-  }
-
-  /** Heal a crashed [[compactAccumulated]] swap — call before reading
-    * an accumulated sink directory whose writer may have died. */
-  def recoverAccumulated(dir: String): Unit = graft.AtomicSwap.recover(dir)
 }

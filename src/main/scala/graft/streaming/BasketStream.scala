@@ -94,24 +94,17 @@ object BasketStream {
   /** foreachBatch sink: append this epoch's new (user, item) pairs
     * under `outDir`, overwriting its own epoch partition (replay-safe).
     * Usage: `.writeStream.foreachBatch(BasketStream.basketSinkEachBatch(dir) _)`.
-    *
-    * `compactEvery > 0` folds the committed epoch partitions into the
-    * `epoch=-1` base every that-many epochs
-    * ([[graft.operators.Compact.compactAccumulated]], identity fold —
-    * the delta stream emits each (user, item) pair exactly once across
-    * batches, so the base is a plain concatenation). The in-flight
-    * epoch is never folded: crash-replay overwrites its own partition
-    * and [[liftSnapshot]] converges (spec-pinned). */
+    * `compactEvery` folds by identity: the delta stream emits each
+    * (user, item) pair exactly once across batches. */
   def basketSinkEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: Dataset[BasketEvent], epochId: Long): Unit = {
-    SingleWriter.assertOwner(batch.sparkSession, s"$outDir/pairs",
-      "basket pair sink")
-    batch.toDF()
-      .write.mode("overwrite").parquet(s"$outDir/pairs/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        s"$outDir/pairs", epochId, identity)
+    val store = pairs(batch.sparkSession, outDir)
+    store.write(epochId, batch.toDF())
+    store.fold(epochId, compactEvery)(identity)
   }
+
+  private def pairs(spark: SparkSession, outDir: String): EpochStore =
+    EpochStore(spark, s"$outDir/pairs", "basket pair store")
 
   /** Market-basket lift over everything streamed into `outDir` so far
     * — bit-identical to [[graft.operators.Sessionize.basketLiftOn]]
@@ -121,10 +114,8 @@ object BasketStream {
   def liftSnapshot(spark: SparkSession, outDir: String,
       minCount: Long = 5L, topK: Int = 100,
       maxBasket: Int = graft.operators.Sessionize.MaxBasket): DataFrame = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/pairs")
     graft.operators.Sessionize.basketLiftOn(
-      spark.read.parquet(s"$outDir/pairs")
-        .select(col("user_id"), col("k")),
+      pairs(spark, outDir).read().select(col("user_id"), col("k")),
       minCount, topK, maxBasket)
   }
 
@@ -158,11 +149,6 @@ object BasketStream {
       maxBasket: Int = graft.operators.Sessionize.MaxBasket): Unit = {
     import org.apache.spark.sql.expressions.Window
     require(maxBasket >= 2, "rebuildRetained needs maxBasket >= 2")
-    val pairsDir = s"$outDir/pairs"
-    SingleWriter.assertOwner(spark, pairsDir, "rebuildBasketPairs")
-    graft.operators.Compact.recoverAccumulated(pairsDir)
-    graft.AtomicSwap.recover(pairsDir,
-      Seq(s"$outDir/.pairs.rebuild.tmp"), s"$outDir/.pairs.old")
     val firsts = events
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").cast("long").as("k"),
@@ -170,13 +156,10 @@ object BasketStream {
       .where(col("k").isNotNull)
       .groupBy("user_id", "k")
       .agg(min(struct(col("ts"), col("event_id"))).as("first"))
-    val rebuilt = firsts
+    pairs(spark, outDir).rebuild(firsts
       .withColumn("rk", row_number().over(Window.partitionBy("user_id")
         .orderBy(col("first.ts"), col("first.event_id"))))
       .where(col("rk") <= maxBasket + 1)
-      .select(col("user_id"), col("k"))
-    val tmp = s"$outDir/.pairs.rebuild.tmp"
-    rebuilt.write.mode("overwrite").parquet(s"$tmp/epoch=-1")
-    graft.AtomicSwap.publish(tmp, pairsDir, s"$outDir/.pairs.old")
+      .select(col("user_id"), col("k")))
   }
 }

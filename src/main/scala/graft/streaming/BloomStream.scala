@@ -15,10 +15,10 @@ import graft.operators.BloomSkip
   * discipline every streaming warehouse converges on) and appends one
   * sketch-sized index partial `(file_id, bitpos)` under
   * `bloomidx/epoch=<id>`. The merged index is just the union of
-  * partials — [[graft.operators.Compact.compactAccumulated]] folds
-  * committed epochs with a plain `distinct` (set union is idempotent,
-  * so the fold is replay-immune at the algebra level, like the KMV/HLL
-  * sinks and unlike additive counters). Lookups run the SAME probe join
+  * partials — [[EpochStore.fold]] folds committed epochs with a
+  * plain `distinct` (set union is idempotent, so the fold is
+  * replay-immune at the algebra level, like the KMV/HLL sinks and
+  * unlike additive counters). Lookups run the SAME probe join
   * as batch q148 ([[BloomSkip.candidateFilesOn]]) over the accumulated
   * index; the `file_id IN (candidates)` predicate pushes into the
   * layout scan (row-group skipping on the sorted-by-write column — the
@@ -39,13 +39,11 @@ object BloomStream {
 
   /** foreachBatch sink over an orders-shaped stream (`o_orderkey`,
     * `o_custkey`, `o_totalprice`): epoch-scoped layout files plus the
-    * epoch's Bloom index partial. `compactEvery > 0` folds committed
-    * epochs of BOTH directories into their `epoch=-1` bases (identity
-    * fold for the row data, distinct for the index); the in-flight
-    * epoch is never folded. */
+    * epoch's Bloom index partial. `compactEvery` folds BOTH stores
+    * (identity for the row data, distinct for the index). */
   def sinkEachBatch(outDir: String, filesPerEpoch: Long = FilesPerEpoch,
       compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit = {
-    val spark = batch.sparkSession
+    val (idxStore, layoutStore) = stores(batch.sparkSession, outDir)
     val layout = batch
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .withColumn("file_id",
@@ -59,29 +57,24 @@ object BloomStream {
     // the reverse order would let a concurrent snapshotLookup see
     // layout rows whose file is not yet indexed and silently prune
     // them — a wrong answer, not a late one.
-    BloomSkip.bloomIndexOn(layout, "o_custkey")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$outDir/bloomidx/epoch=$epochId")
-    layout.repartition(col("file_id"))
-      .sortWithinPartitions("file_id")
-      .write.mode("overwrite")
-      .parquet(s"$outDir/bloomlayout/epoch=$epochId")
+    idxStore.write(epochId,
+      BloomSkip.bloomIndexOn(layout, "o_custkey").repartition(1))
+    layoutStore.write(epochId,
+      layout.repartition(col("file_id")).sortWithinPartitions("file_id"))
     layout.unpersist()
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L) {
-      // same ordering under compaction: rebuild the index base first.
-      // The layout fold keeps rows verbatim but re-clusters them by
-      // file_id inside the written base (sortWithin), preserving the
-      // row-group statistics the pruned scan skips on — an unsorted
-      // fold would smear every row group's file_id min/max across the
-      // whole domain and turn lookups into full scans of settled data
-      graft.operators.Compact.compactAccumulated(spark,
-        s"$outDir/bloomidx", epochId,
-        df => df.select(col("file_id"), col("bitpos")).distinct())
-      graft.operators.Compact.compactAccumulated(spark,
-        s"$outDir/bloomlayout", epochId, identity,
-        sortWithin = Seq("file_id"))
-    }
+    // same ordering under compaction: rebuild the index base first.
+    // The layout fold re-clusters rows by file_id inside the base,
+    // keeping the row-group statistics the pruned scan skips on
+    idxStore.fold(epochId, compactEvery)(
+      _.select(col("file_id"), col("bitpos")).distinct())
+    layoutStore.fold(epochId, compactEvery, sortWithin = Seq("file_id"))(
+      identity)
   }
+
+  private def stores(spark: SparkSession, outDir: String)
+      : (EpochStore, EpochStore) =
+    (EpochStore(spark, s"$outDir/bloomidx", "bloom index store"),
+      EpochStore(spark, s"$outDir/bloomlayout", "bloom layout store"))
 
   /** Point lookup over everything streamed into `outDir` so far: the
     * SAME probe join as batch q148 over the accumulated index, then the
@@ -93,17 +86,15 @@ object BloomStream {
       keys: Seq[Long]): DataFrame = {
     require(keys.nonEmpty && keys.size <= BloomSkip.MaxProbeKeys,
       s"probe keys must be 1..${BloomSkip.MaxProbeKeys}")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/bloomlayout")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/bloomidx")
+    val (idxStore, layoutStore) = stores(spark, outDir)
     // ORDER MATTERS under live ingest: snapshot the LAYOUT's file
     // listing first, then read the index — the sink commits each
     // epoch's index partial before its layout files, so every file
     // visible in this listing is already indexed and the candidate set
     // covers it (the reverse order could prune rows of an epoch that
     // landed between the two reads)
-    val layout = spark.read.parquet(s"$outDir/bloomlayout")
-    val idx = spark.read.parquet(s"$outDir/bloomidx")
-      .select(col("file_id"), col("bitpos"))
+    val layout = layoutStore.read()
+    val idx = idxStore.read().select(col("file_id"), col("bitpos"))
     val cands = BloomSkip.candidateFilesOn(idx, keys)
     val pruned =
       if (cands.isEmpty) layout.where(lit(false))
@@ -118,9 +109,8 @@ object BloomStream {
     * spec's pruning assertions. */
   def snapshotCandidates(spark: SparkSession, outDir: String,
       keys: Seq[Long]): Seq[Long] = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/bloomidx")
     BloomSkip.candidateFilesOn(
-      spark.read.parquet(s"$outDir/bloomidx")
+      stores(spark, outDir)._1.read()
         .select(col("file_id"), col("bitpos")), keys)
   }
 }

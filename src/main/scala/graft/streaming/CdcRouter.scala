@@ -92,15 +92,16 @@ object CdcRouter {
           concat(lit("DWD_"), upper(col("table")), lit("_"), upper(col("op"))))
           .otherwise(lit(null).cast(StringType)))
 
-  /** foreachBatch fan-out: facts land under `factDir/<topic>/epoch=<id>`
-    * with OVERWRITE (K1) — a replayed epoch rewrites its own directory
-    * instead of appending duplicates, the same idempotence contract as
-    * `LogDemux.demuxEachBatch`. Dims upsert into
-    * `dimDir/<table>/bucket=<crc32(id) % numBuckets>` keyed by data.id —
-    * last write wins (K3: the reference's `SET DIM:$TABLE:$id`,
-    * :109-115). The upsert is PARTITION-SCOPED ([[PartitionedUpsert]]):
-    * only the hash buckets whose keys appear in the batch are rewritten,
-    * so a small CDC epoch touches a few buckets, not the whole dim table.
+  /** foreachBatch fan-out: facts land as one epoch of the
+    * `factDir/<topic>` [[EpochStore]], OVERWRITTEN (K1) — a replayed
+    * epoch rewrites its own directory instead of appending duplicates,
+    * the same idempotence contract as `LogDemux.demuxEachBatch`. Dims
+    * upsert into `dimDir/<table>/bucket=<crc32(id) % numBuckets>` keyed
+    * by data.id — last write wins (K3: the reference's
+    * `SET DIM:$TABLE:$id`, :109-115). The upsert is PARTITION-SCOPED
+    * ([[PartitionedUpsert]]): only the hash buckets whose keys appear in
+    * the batch are rewritten, so a small CDC epoch touches a few
+    * buckets, not the whole dim table.
     *
     * Dim replay caveat: the upsert is idempotent per key (a replayed
     * epoch re-applies the same last-wins SETs), which matches the
@@ -112,8 +113,9 @@ object CdcRouter {
       val topics = routed.where(col("route") === "FACT")
         .select("topic").distinct().collect().map(_.getString(0))
       topics.foreach { t =>
-        routed.where(col("topic") === t).drop("topic", "route")
-          .write.mode("overwrite").parquet(s"$factDir/$t/epoch=$epochId")
+        EpochStore(batch.sparkSession, s"$factDir/$t", "cdc fact sink")
+          .write(epochId, routed.where(col("topic") === t)
+            .drop("topic", "route"))
       }
       val dims = routed.where(col("route") === "DIM")
         .withColumn("id", get_json_object(col("data"), "$.id"))

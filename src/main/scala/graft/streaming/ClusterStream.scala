@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TextExpressions
-import graft.operators.{BloomSkip, Compact, Dedup}
+import graft.operators.{BloomSkip, Dedup}
 
 /** Stream-maintained NEAR-DUP CLUSTER TABLE — incremental maintenance
   * of q60's MinHash-LSH cluster assignment under continuous ingest
@@ -90,19 +90,18 @@ object ClusterStream {
   val Bands = 8
   val Threshold = 0.5
 
-  private def sigsDir(outDir: String) = s"$outDir/$SigsSub"
-  private def mergesDir(outDir: String) = s"$outDir/$MergesSub"
+  private def sigStore(spark: SparkSession, outDir: String) =
+    EpochStore(spark, s"$outDir/$SigsSub", "cluster table")
+  private def mergeStore(spark: SparkSession, outDir: String) =
+    EpochStore(spark, s"$outDir/$MergesSub", "cluster table")
 
-  private def epochDirsExcluding(dir: String, epochId: Long): Seq[String] =
-    Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch=") &&
-        f.getName != s"epoch=$epochId")
-      .map(_.getAbsolutePath).toIndexedSeq
-
-  private def hasEpochs(dir: String): Boolean =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .exists(f => f.isDirectory && f.getName.startsWith("epoch="))
+  /** Both stores, claimed (and healed) before a writer reads either. */
+  private def claimTables(spark: SparkSession, outDir: String)
+      : (EpochStore, EpochStore) = {
+    val tables = (sigStore(spark, outDir), mergeStore(spark, outDir))
+    tables._1.claim(); tables._2.claim()
+    tables
+  }
 
   // ——— ingest ———————————————————————————————————————————————————————
 
@@ -115,10 +114,7 @@ object ClusterStream {
     * anything — a permanent singleton, not a dropped row. */
   def ingestBatch(batch: DataFrame, outDir: String, epochId: Long): Unit = {
     val sess = batch.sparkSession
-    val sDir = sigsDir(outDir); val mDir = mergesDir(outDir)
-    new java.io.File(sDir).mkdirs(); new java.io.File(mDir).mkdirs()
-    Compact.recoverAccumulated(sDir); Compact.recoverAccumulated(mDir)
-    PartitionedUpsert.recoverAll(sDir); PartitionedUpsert.recoverAll(mDir)
+    val (sigTab, mergeTab) = claimTables(sess, outDir)
     // complete any takedown a crash left half-done BEFORE matching
     // against the store (stale merge rows must not relink a dissolved
     // component through this batch's labels)
@@ -152,12 +148,11 @@ object ClusterStream {
       //    against the accumulated store (map-side — the corpus side
       //    never shuffles), verify with the SAME est_sim, emit one
       //    (new base, stored base) merge pair per distinct connection.
-      val oldDirs = epochDirsExcluding(sDir, epochId)
+      val oldEpochs = sigTab.epochs(except = Some(epochId))
       val crossMerges: DataFrame =
-        if (oldDirs.isEmpty)
-          Seq.empty[(Long, Long)].toDF("a", "b")
+        if (oldEpochs.isEmpty) noPairs(sess, "a", "b")
         else {
-          val old = sess.read.parquet(oldDirs: _*)
+          val old = sigTab.read(oldEpochs)
             .select(col("doc_id"), col("sig"), col("base"))
           // NULL sigs excluded from banding on both sides — the
           // minhashPairsFromSigs rule (they can never pass est_sim)
@@ -178,33 +173,26 @@ object ClusterStream {
         }
       // 3. publish — sigs FIRST (see the crash-ordering argument in
       //    the object doc), each epoch partition overwritten wholesale.
-      withBase.write.mode("overwrite").parquet(s"$sDir/epoch=$epochId")
-      crossMerges.write.mode("overwrite").parquet(s"$mDir/epoch=$epochId")
+      sigTab.write(epochId, withBase)
+      mergeTab.write(epochId, crossMerges)
     } finally sigs.unpersist(blocking = false)
   }
 
-  /** foreachBatch sink. `compactEvery > 0` folds committed epochs every
-    * N batches: sigs by identity (exactly-once row sets), the merge
-    * log to its component closure `(label, root)` — semantics-
-    * preserving (same connected components) and shrinking (bounded by
-    * live labels, not edge history). */
+  /** foreachBatch sink. `compactEvery` folds sigs by identity
+    * (exactly-once row sets) and the merge log to its component
+    * closure `(label, root)` — semantics-preserving (same connected
+    * components) and shrinking (bounded by live labels, not edge
+    * history). */
   def clusterSinkEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit = {
-    SingleWriter.assertOwner(batch.sparkSession, outDir,
-      "cluster table sink")
+    val sess = batch.sparkSession
     ingestBatch(batch, outDir, epochId)
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L) {
-      val sess = batch.sparkSession
-      // re-cluster the folded sig base by doc_id (the BloomStream
-      // sortWithin rule): the expansion-seed and takedown-member reads
-      // are pushed `doc_id isin` scans that skip on row-group stats —
-      // an unsorted fold would smear every row group's min/max across
-      // the whole id domain and disable exactly that skipping
-      Compact.compactAccumulated(sess, sigsDir(outDir), epochId, identity,
-        sortWithin = Seq("doc_id"))
-      Compact.compactAccumulated(sess, mergesDir(outDir), epochId, df =>
-        foldMergeLog(df))
-    }
+    // re-cluster the folded sig base by doc_id (the BloomStream
+    // sortWithin rule): the expansion-seed and takedown-member reads
+    // are pushed `doc_id isin` scans that skip on row-group stats
+    sigStore(sess, outDir).fold(epochId, compactEvery,
+      sortWithin = Seq("doc_id"))(identity)
+    mergeStore(sess, outDir).fold(epochId, compactEvery)(foldMergeLog)
   }
 
   /** Fold a merge-pair relation to its `(label, root)` closure — every
@@ -218,20 +206,14 @@ object ClusterStream {
 
   // ——— serving reads ————————————————————————————————————————————————
 
-  private def readSigs(spark: SparkSession, outDir: String): DataFrame = {
-    Compact.recoverAccumulated(sigsDir(outDir))
-    PartitionedUpsert.recoverAll(sigsDir(outDir))
-    spark.read.parquet(sigsDir(outDir))
+  private def noPairs(spark: SparkSession, a: String, b: String) = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF(a, b)
   }
 
-  private def readMerges(spark: SparkSession, outDir: String): DataFrame = {
-    Compact.recoverAccumulated(mergesDir(outDir))
-    PartitionedUpsert.recoverAll(mergesDir(outDir))
-    if (!hasEpochs(mergesDir(outDir))) {
-      import spark.implicits._
-      Seq.empty[(Long, Long)].toDF("a", "b")
-    } else spark.read.parquet(mergesDir(outDir)).select(col("a"), col("b"))
-  }
+  private def readMerges(spark: SparkSession, outDir: String): DataFrame =
+    mergeStore(spark, outDir).readOr(noPairs(spark, "a", "b"))
+      .select(col("a"), col("b"))
 
   /** The merge log's component labels `(base, comp)` — a small
     * relation (driver-path folds come back as a broadcastable
@@ -247,12 +229,10 @@ object ClusterStream {
     * merge roots. Equals q167's `allc` (docs left-joined to the batch
     * component chain, singletons their own label) — the q168 oracle. */
   def assignmentTable(spark: SparkSession, outDir: String): DataFrame = {
-    if (!hasEpochs(sigsDir(outDir))) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long)].toDF("doc_id", "comp")
-    }
-    val base = readSigs(spark, outDir).select(col("doc_id"), col("base"))
-    base.join(mergeRoots(spark, outDir), Seq("base"), "left")
+    val sigs = sigStore(spark, outDir)
+    if (sigs.epochs().isEmpty) return noPairs(spark, "doc_id", "comp")
+    sigs.read().select(col("doc_id"), col("base"))
+      .join(mergeRoots(spark, outDir), Seq("base"), "left")
       .select(col("doc_id"), coalesce(col("comp"), col("base")).as("comp"))
       .distinct()
   }
@@ -269,9 +249,8 @@ object ClusterStream {
     val seeds = seedIds.distinct.sorted
     require(seeds.nonEmpty && seeds.size <= BloomSkip.MaxForgetKeys,
       s"cascade seeds must be 1..${BloomSkip.MaxForgetKeys}")
-    import spark.implicits._
-    if (!hasEpochs(sigsDir(outDir)))
-      return Seq.empty[(Long, Long)].toDF("doc_id", "comp")
+    if (sigStore(spark, outDir).epochs().isEmpty)
+      return noPairs(spark, "doc_id", "comp")
     expansionWithRoots(spark, outDir, seeds, mergeRoots(spark, outDir))
   }
 
@@ -281,11 +260,10 @@ object ClusterStream {
   private def expansionWithRoots(spark: SparkSession, outDir: String,
       seeds: Seq[Long], roots: DataFrame): DataFrame = {
     import spark.implicits._
-    val sigs = readSigs(spark, outDir)
+    val sigs = sigStore(spark, outDir).read()
     val seedBases = sigs.where(col("doc_id").isin(seeds: _*))
       .select(col("base")).distinct().as[Long].collect().toIndexedSeq
-    if (seedBases.isEmpty)
-      return Seq.empty[(Long, Long)].toDF("doc_id", "comp")
+    if (seedBases.isEmpty) return noPairs(spark, "doc_id", "comp")
     // a seed base that WAS merged is not its own root — membership is
     // by folded root, so resolve every seed base through the log first
     val resolved = roots.where(col("base").isin(seedBases: _*))
@@ -362,11 +340,10 @@ object ClusterStream {
     val del = ids.distinct.sorted
     require(del.nonEmpty && del.size <= BloomSkip.MaxForgetKeys,
       s"takedown ids must be 1..${BloomSkip.MaxForgetKeys}")
-    SingleWriter.assertOwner(spark, outDir, "cluster table takedown")
+    val (sigTab, _) = claimTables(spark, outDir)
     healPendingForget(spark, outDir)
     import spark.implicits._
-    if (!hasEpochs(sigsDir(outDir)))
-      return TakedownReport(0L, 0L, 0L, 0L, 0L)
+    if (sigTab.epochs().isEmpty) return TakedownReport(0L, 0L, 0L, 0L, 0L)
     // the merge-log fold, computed ONCE and threaded through the
     // expansion and the label-closure steps below
     val roots = mergeRoots(spark, outDir)
@@ -377,9 +354,7 @@ object ClusterStream {
     require(members.size <= BloomSkip.MaxForgetKeys,
       s"takedown touches ${members.size} cluster members — beyond the " +
         s"${BloomSkip.MaxForgetKeys} batch cap; split the request")
-    val sigs = spark.read.option("basePath", sigsDir(outDir))
-      .parquet(sigsDir(outDir))
-    val memberRows = sigs.where(col("doc_id").isin(members: _*))
+    val memberRows = sigTab.read().where(col("doc_id").isin(members: _*))
     val affectedBases = memberRows.select(col("base")).distinct()
       .as[Long].collect().toIndexedSeq
     // the affected components' FULL label set: every log label whose
@@ -448,25 +423,21 @@ object ClusterStream {
 
   /** The mutation half of [[takedownClusters]] — idempotent per
     * sub-step so [[healPendingForget]] can replay it from any crash
-    * point, including a crash inside a per-partition swap (hence the
-    * recoverAll FIRST: the touched/emptied decisions must see the
-    * healed store, not a torn one). */
+    * point, including a crash inside a per-partition swap (the stores
+    * heal before every read and rewrite). */
   private def applyTakedown(spark: SparkSession, outDir: String,
       del: Seq[Long], members: Seq[Long], affectedLabels: Seq[Long],
       afterSigRewrite: () => Unit): TakedownReport = {
     import spark.implicits._
-    val sDir = sigsDir(outDir); val mDir = mergesDir(outDir)
-    Compact.recoverAccumulated(sDir); Compact.recoverAccumulated(mDir)
-    PartitionedUpsert.recoverAll(sDir); PartitionedUpsert.recoverAll(mDir)
-    val haveSigs = hasEpochs(sDir)
-    def sigsRead = spark.read.option("basePath", sDir).parquet(sDir)
+    val sigs = sigStore(spark, outDir)
+    val haveSigs = sigs.epochs().nonEmpty
     // 2. survivor recompute, cluster-local: retained members' pairs →
     //    fresh base labels (component splits fall out naturally).
     val survivors = members.filterNot(del.contains)
     val newBase: Map[Long, Long] =
       if (survivors.isEmpty || !haveSigs) Map.empty
       else {
-        val survSigs = sigsRead
+        val survSigs = sigs.read()
           .where(col("doc_id").isin(survivors: _*))
           .select(col("doc_id"), col("sig")).distinct()
         val pairs = Dedup.minhashPairsFromSigs(survSigs, NumHashes, Bands,
@@ -476,74 +447,30 @@ object ClusterStream {
         val roots = Dedup.unionFindRoots(pairs.toIndexedSeq)
         survivors.map(d => d -> roots.getOrElse(d, d)).toMap
       }
-    // 3. ONE pre-swap scan decides touched/emptied sig epochs (the
-    //    lazy-plan/swap hazard), then rewrite survivors in place.
-    //    (During a heal replay, already-rewritten epochs re-rewrite to
-    //    the same bytes and already-deleted rows are simply absent.)
-    val isDel = col("doc_id").isin(del: _*)
-    val perEpoch =
-      if (!haveSigs) Array.empty[(String, Long, Long)]
-      else sigsRead.where(col("doc_id").isin(members: _*))
-        .groupBy(col("epoch"))
-        .agg(count(lit(1)).as("mem"),
-          sum(when(isDel, 1L).otherwise(0L)).as("dd"))
-        .collect().map(r => (r.get(0).toString, r.getLong(1), r.getLong(2)))
-    val touched = perEpoch.map(_._1)
-    val epochTotals =
-      if (touched.isEmpty) Map.empty[String, Long]
-      else spark.read.option("basePath", sDir)
-        .parquet(touched.sorted.map(e => s"$sDir/epoch=$e"): _*)
-        .groupBy(col("epoch")).agg(count(lit(1)).as("total"))
-        .collect().map(r => (r.get(0).toString, r.getLong(1))).toMap
-    val emptied = perEpoch
-      .filter(e => epochTotals(e._1) == e._3).map(_._1).toSet
-    val rowsDeleted = perEpoch.map(_._3).sum
-    if (touched.exists(e => !emptied.contains(e))) {
-      val nb = newBase.toSeq.toDF("doc_id", "nb")
-      val rewritten = spark.read.option("basePath", sDir)
-        .parquet(touched.sorted.map(e => s"$sDir/epoch=$e"): _*)
-        .where(!isDel)
-        .join(broadcast(nb), Seq("doc_id"), "left")
+    // 3. rewrite the member epochs: deleted rows out, survivors
+    //    relabeled in place. (During a heal replay, already-rewritten
+    //    epochs re-rewrite to the same bytes and already-deleted rows
+    //    are simply absent.)
+    val nb = newBase.toSeq.toDF("doc_id", "nb")
+    val sigRewrite = sigs.rewrite(col("doc_id").isin(members: _*),
+      col("doc_id").isin(del: _*),
+      _.join(broadcast(nb), Seq("doc_id"), "left")
         .select(col("doc_id"), col("sig"),
-          coalesce(col("nb"), col("base")).as("base"), col("epoch"))
-        .where(!col("epoch").isin(emptied.toSeq: _*))
-      PartitionedUpsert.upsert(rewritten, sDir, "epoch", Seq.empty)
-    }
-    emptied.foreach { e =>
-      graft.AtomicSwap.deleteRecursively(new java.io.File(s"$sDir/epoch=$e"))
-    }
+          coalesce(col("nb"), col("base")).as("base"), col("epoch")))
     afterSigRewrite()
     // 4. merge-log hygiene: drop every row touching an affected label
     //    (survivor bases are final — recomputed globally within their
     //    clusters — so no replacement rows are needed).
-    var mergeEpochs = 0L
-    if (hasEpochs(mDir) && affectedLabels.nonEmpty) {
-      val touchesAffected = col("a").isin(affectedLabels: _*) ||
-        col("b").isin(affectedLabels: _*)
-      val mr = spark.read.option("basePath", mDir).parquet(mDir)
-      val perEpochM = mr.groupBy(col("epoch"))
-        .agg(count(lit(1)).as("total"),
-          sum(when(touchesAffected, 1L).otherwise(0L)).as("dd"))
-        .collect()
-        .map(r => (r.get(0).toString, r.getLong(1), r.getLong(2)))
-      val touchedM = perEpochM.filter(_._3 > 0L)
-      val emptiedM = touchedM.filter(e => e._2 == e._3).map(_._1).toSet
-      mergeEpochs = touchedM.length.toLong
-      if (touchedM.exists(e => !emptiedM.contains(e._1))) {
-        val kept = spark.read.option("basePath", mDir)
-          .parquet(touchedM.map(_._1).sorted.map(e => s"$mDir/epoch=$e"): _*)
-          .where(!touchesAffected)
-          .where(!col("epoch").isin(emptiedM.toSeq: _*))
-          .select(col("a"), col("b"), col("epoch"))
-        PartitionedUpsert.upsert(kept, mDir, "epoch", Seq.empty)
+    val mergeEpochs =
+      if (affectedLabels.isEmpty) 0L
+      else {
+        val touchesAffected = col("a").isin(affectedLabels: _*) ||
+          col("b").isin(affectedLabels: _*)
+        mergeStore(spark, outDir).rewrite(touchesAffected, touchesAffected,
+          _.select(col("a"), col("b"), col("epoch"))).touched
       }
-      emptiedM.foreach { e =>
-        graft.AtomicSwap.deleteRecursively(
-          new java.io.File(s"$mDir/epoch=$e"))
-      }
-    }
-    TakedownReport(members.size.toLong, rowsDeleted,
-      newBase.size.toLong, touched.length.toLong, mergeEpochs)
+    TakedownReport(members.size.toLong, sigRewrite.deleted,
+      newBase.size.toLong, sigRewrite.touched, mergeEpochs)
   }
 
   // ——— q168/q169: batch-driver build over the test corpus ———————————

@@ -39,26 +39,28 @@ object CorpusStatsStream {
     import graft.functions.TextFunctions.tokens
     // one tokenize feeds both partials; persist so the micro-batch
     // source is read once, not twice
+    val (uni, big) = stores(batch.sparkSession, outDir)
     val toks = batch.select(tokens(col("text")).as("l")).persist()
     try {
-      toks.select(explode(col("l")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$outDir/uni/epoch=$epochId")
-      TextAnalysis.bigrams(toks)
-        .groupBy("a", "b").agg(count(lit(1)).as("n_ab"))
-        .write.mode("overwrite").parquet(s"$outDir/big/epoch=$epochId")
+      uni.write(epochId, toks.select(explode(col("l")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("n")))
+      big.write(epochId, TextAnalysis.bigrams(toks)
+        .groupBy("a", "b").agg(count(lit(1)).as("n_ab")))
     } finally toks.unpersist(blocking = false)
   }
+
+  private def stores(spark: SparkSession, outDir: String)
+      : (EpochStore, EpochStore) =
+    (EpochStore(spark, s"$outDir/uni", "unigram count store"),
+      EpochStore(spark, s"$outDir/big", "bigram count store"))
 
   /** The accumulated counts under `outDir`: total unigram and bigram
     * counts (one sum-aggregation over the epoch partials each). */
   def accumulatedCounts(spark: SparkSession, outDir: String)
       : (DataFrame, DataFrame) = {
-    val ucnt = spark.read.parquet(s"$outDir/uni")
-      .groupBy("w").agg(sum(col("n")).as("n"))
-    val bcnt = spark.read.parquet(s"$outDir/big")
-      .groupBy("a", "b").agg(sum(col("n_ab")).as("n_ab"))
-    (ucnt, bcnt)
+    val (uni, big) = stores(spark, outDir)
+    (uni.read().groupBy("w").agg(sum(col("n")).as("n")),
+      big.read().groupBy("a", "b").agg(sum(col("n_ab")).as("n_ab")))
   }
 
   /** PMI collocations over everything streamed into `outDir` so far —

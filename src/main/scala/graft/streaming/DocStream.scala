@@ -164,16 +164,18 @@ object DocStream {
       .withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
   }
 
-  /** Loud rejection of the second concurrent writer on one corpus dir:
-    * ownership transfers freely when the recorded owner is not an ACTIVE
-    * streaming query (restart, replay, sequential tests), but two live
-    * writers would interleave the sketch read-modify-write — a
-    * correctness hole (lost fingerprints), not a race to tolerate.
-    * Registry shared with every other accumulated sink
-    * ([[SingleWriter]]). */
-  private def assertSingleWriter(
-      sess: org.apache.spark.sql.SparkSession, outDir: String): Unit =
-    SingleWriter.assertOwner(sess, outDir, "incrementalDedupSink")
+  /** The accumulated corpus under `outDir`. Its claim rejects a second
+    * live writer loudly: two would interleave the rolling-sketch
+    * read-modify-write (lost fingerprints). */
+  private def corpus(spark: org.apache.spark.sql.SparkSession,
+      outDir: String): EpochStore =
+    EpochStore(spark, outDir, "accumulated corpus")
+
+  /** The quality gate's held-back epochs, BESIDE the corpus directory
+    * (not inside it) so corpus readers and folds never see them. */
+  private def quarantine(spark: org.apache.spark.sql.SparkSession,
+      outDir: String): EpochStore =
+    EpochStore(spark, s"$outDir.quarantine", "corpus quarantine")
 
   /** Continuous-ingest incremental dedup sink (foreachBatch): each
     * micro-batch keeps only documents whose canonical fingerprint is
@@ -213,7 +215,7 @@ object DocStream {
     * NOT superset-preserving (last-writer-wins on `_bloom.bf` can drop
     * the other's fingerprints = duplicates admitted later), so a second
     * ACTIVE streaming query writing the same dir inside this JVM is
-    * rejected loudly (see [[assertSingleWriter]]); restarts and replay
+    * rejected loudly (see [[corpus]]); restarts and replay
     * calls take ownership over since the prior run is no longer active.
     * Cross-JVM single-ownership is the caller's responsibility, same as
     * for any checkpointed foreachBatch sink. */
@@ -221,28 +223,17 @@ object DocStream {
       expectedCorpusDocs: Long = 1000000L, fpp: Double = 0.01,
       compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.util.sketch.BloomFilter
-    assertSingleWriter(batch.sparkSession, outDir)
-    new java.io.File(outDir).mkdirs()
-    // heal a compaction swap a previous run crashed inside before
-    // listing the corpus epochs
-    graft.operators.Compact.recoverAccumulated(outDir)
-    // within-batch dedup: newDocsWithBloom compares batch-vs-corpus only
-    val uniq = batch
-      .where(col("text").isNotNull)
-      .withColumn("fp", fingerprint(col("text")))
-      .withColumn("__rn",
-        row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
-      .where(col("__rn") === 1).drop("__rn")
-    val corpusDirs = corpusEpochDirs(outDir, epochId)
     val sess = batch.sparkSession
-    val bloom = loadOrBuildBloom(sess, outDir, corpusDirs,
+    val store = corpus(sess, outDir)
+    store.claim() // before the sketch, the first thing this sink mutates
+    val others = store.epochs(except = Some(epochId))
+    val uniq = uniqueByFingerprint(batch)
+    val bloom = loadOrBuildBloom(sess, outDir, store, others,
       expectedCorpusDocs, fpp)
     val fresh =
-      if (corpusDirs.isEmpty) uniq
+      if (others.isEmpty) uniq
       else graft.operators.Dedup.newDocsWithBloom(
-        sess.read.parquet(corpusDirs: _*), uniq, bloom)
+        store.read(others), uniq, bloom)
     // materialize survivors BEFORE the sketch update so the fps fed into
     // the rolling bloom are exactly what lands in the epoch partition
     val rows = fresh.persist()
@@ -254,17 +245,23 @@ object DocStream {
       // lets a duplicate straight through. Atomic via tmp + rename.
       rows.select("fp").collect().foreach(r => bloom.putString(r.getString(0)))
       publishBloom(bloom, outDir)
-      rows.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
+      store.write(epochId, rows)
     } finally rows.unpersist(blocking = false)
-    // fold committed epochs into the epoch=-1 base (identity: each
-    // corpus row is exactly-once); the in-flight epoch is never
-    // folded, so replay still overwrites its own partition and the
-    // corpusEpochDirs exclusion rule keeps working (the base's name
-    // never equals epoch=<current>). The rolling sketch files ride
-    // into the rebuilt layout verbatim.
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        outDir, epochId, identity)
+    // identity fold: each corpus row is exactly-once; the rolling
+    // sketch files ride into the folded layout verbatim
+    store.fold(epochId, compactEvery)(identity)
+  }
+
+  /** Within-batch dedup, lowest doc_id per fingerprint (batch-vs-corpus
+    * is the sink's job); null-text rows dropped. */
+  private def uniqueByFingerprint(batch: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    batch
+      .where(col("text").isNotNull)
+      .withColumn("fp", fingerprint(col("text")))
+      .withColumn("__rn",
+        row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
+      .where(col("__rn") === 1).drop("__rn")
   }
 
   /** Continuous SUBSTRING dedup sink (foreachBatch) — the streaming
@@ -308,26 +305,20 @@ object DocStream {
       compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit = {
     import org.apache.spark.util.sketch.BloomFilter
-    assertSingleWriter(batch.sparkSession, outDir)
-    new java.io.File(outDir).mkdirs()
-    graft.operators.Compact.recoverAccumulated(outDir)
     val sess = batch.sparkSession
+    val store = corpus(sess, outDir)
+    store.claim()
+    val others = store.epochs(except = Some(epochId))
     val docs = batch.where(col("text").isNotNull)
     val segs = graft.operators.Dedup.cdcSegmentRelation(docs, p)
-    val corpusDirs = corpusEpochDirs(outDir, epochId)
 
     // rolling segment Bloom (superset of corpus segments; rebuild on loss)
-    val bloomFile = new java.io.File(outDir, "_segbloom.bf")
-    val bloom: BloomFilter =
-      if (bloomFile.exists()) {
-        val in = new java.io.FileInputStream(bloomFile)
-        try BloomFilter.readFrom(in) finally in.close()
-      } else if (corpusDirs.nonEmpty)
+    val bloom: BloomFilter = readBloom(outDir, SegBloom).getOrElse(
+      if (others.nonEmpty)
         // distributed rebuild — the corpus segment stream never collects
-        graft.operators.Dedup
-          .cdcSegmentRelation(sess.read.parquet(corpusDirs: _*), p)
+        graft.operators.Dedup.cdcSegmentRelation(store.read(others), p)
           .stat.bloomFilter("seg_h", expectedCorpusSegments, fpp)
-      else BloomFilter.create(expectedCorpusSegments, fpp)
+      else BloomFilter.create(expectedCorpusSegments, fpp))
 
     // corpus-seen segments: Bloom prefilter map-side, exact confirm
     // against the re-segmented corpus (semi-join on 8 B keys)
@@ -336,9 +327,8 @@ object DocStream {
     val candidates = segs.select("seg_h").distinct()
       .where(mightContain(col("seg_h")))
     val confirmed: Array[Long] =
-      if (corpusDirs.isEmpty) Array.emptyLongArray
-      else graft.operators.Dedup
-        .cdcSegmentRelation(sess.read.parquet(corpusDirs: _*), p)
+      if (others.isEmpty) Array.emptyLongArray
+      else graft.operators.Dedup.cdcSegmentRelation(store.read(others), p)
         .select("seg_h")
         .join(broadcast(candidates), Seq("seg_h"), "left_semi")
         .distinct()
@@ -371,56 +361,51 @@ object DocStream {
       graft.operators.Dedup.cdcSegmentRelation(rows, p)
         .select("seg_h").distinct()
         .collect().foreach(r => bloom.putLong(r.getLong(0)))
-      val tmp = new java.io.File(outDir, "._segbloom.bf.tmp")
-      val out = new java.io.FileOutputStream(tmp)
-      try bloom.writeTo(out) finally out.close()
-      if (!tmp.renameTo(bloomFile)) {
-        bloomFile.delete()
-        require(tmp.renameTo(bloomFile), s"cannot publish $bloomFile")
-      }
-      rows.write.mode("overwrite").parquet(s"$outDir/epoch=$epochId")
+      publishBloom(bloom, outDir, SegBloom)
+      store.write(epochId, rows)
     } finally rows.unpersist(blocking = false)
     // same compaction contract as the doc-level sink (identity fold)
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        outDir, epochId, identity)
+    store.fold(epochId, compactEvery)(identity)
   }
 
-  /** Every OTHER epoch's partition dir under `outDir`: a replayed epoch
-    * must not see its own previous (possibly partial) output as "the
-    * corpus" or replay would drop every row it is supposed to re-write. */
-  private def corpusEpochDirs(outDir: String, epochId: Long): Seq[String] =
-    Option(new java.io.File(outDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch=") &&
-        f.getName != s"epoch=$epochId")
-      .map(_.getAbsolutePath).toIndexedSeq
+  private val DocBloom = "_bloom.bf"
+  private val SegBloom = "_segbloom.bf"
+
+  private def readBloom(outDir: String, name: String)
+      : Option[org.apache.spark.util.sketch.BloomFilter] = {
+    val file = new java.io.File(outDir, name)
+    if (!file.exists()) None
+    else {
+      val in = new java.io.FileInputStream(file)
+      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
+      finally in.close()
+    }
+  }
 
   /** Rolling corpus Bloom, persisted beside the data: each epoch pays
     * O(batch) sketch work instead of the O(corpus) re-aggregation pass
     * (the sketch never shrinks, so it stays a SUPERSET of the corpus —
-    * over-approximation only widens the exact confirm join). Missing or
-    * unreadable sketch → rebuild from the corpus parquet. */
+    * over-approximation only widens the exact confirm join). Missing
+    * sketch → rebuild from the `others` epochs of the corpus. */
   private def loadOrBuildBloom(sess: org.apache.spark.sql.SparkSession,
-      outDir: String, corpusDirs: Seq[String], expectedCorpusDocs: Long,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
-    import org.apache.spark.util.sketch.BloomFilter
-    val bloomFile = new java.io.File(outDir, "_bloom.bf")
-    if (bloomFile.exists()) {
-      val in = new java.io.FileInputStream(bloomFile)
-      try BloomFilter.readFrom(in) finally in.close()
-    } else if (corpusDirs.nonEmpty)
-      sess.read.parquet(corpusDirs: _*)
-        .select(fingerprint(col("text")).as("fp"))
-        .stat.bloomFilter("fp", expectedCorpusDocs, fpp)
-    else BloomFilter.create(expectedCorpusDocs, fpp)
-  }
+      outDir: String, store: EpochStore, others: Seq[Long],
+      expectedCorpusDocs: Long,
+      fpp: Double): org.apache.spark.util.sketch.BloomFilter =
+    readBloom(outDir, DocBloom).getOrElse(
+      if (others.nonEmpty)
+        store.read(others)
+          .select(fingerprint(col("text")).as("fp"))
+          .stat.bloomFilter("fp", expectedCorpusDocs, fpp)
+      else org.apache.spark.util.sketch.BloomFilter
+        .create(expectedCorpusDocs, fpp))
 
-  /** Atomic tmp+rename publish of the rolling sketch. */
+  /** Atomic tmp+rename publish of a rolling sketch beside the corpus
+    * (which may not exist yet: the sketch goes first). */
   private def publishBloom(bloom: org.apache.spark.util.sketch.BloomFilter,
-      outDir: String): Unit = {
-    val bloomFile = new java.io.File(outDir, "_bloom.bf")
-    val tmp = new java.io.File(outDir, "._bloom.bf.tmp")
+      outDir: String, name: String = DocBloom): Unit = {
+    new java.io.File(outDir).mkdirs()
+    val bloomFile = new java.io.File(outDir, name)
+    val tmp = new java.io.File(outDir, s".$name.tmp")
     val out = new java.io.FileOutputStream(tmp)
     try bloom.writeTo(out) finally out.close()
     if (!tmp.renameTo(bloomFile)) {
@@ -434,11 +419,10 @@ object DocStream {
     * [[incrementalDedupSinkEachBatch]] machinery: rolling Bloom →
     * exact confirm → anti-join, corpus never shuffled) THEN sequence
     * packing continued exactly where the stored corpus ends, published
-    * as an `epoch=<id>` partition through [[PartitionedUpsert]] (atomic
-    * per-partition swap, untouched epochs never rewritten). Upstream of
-    * this sink sits [[curate]] (quality gate + watermarked dedup), so
-    * one streaming query runs gate → horizon dedup → corpus dedup →
-    * pack → shard publish; `PipelineSpec` pins the end-to-end contract:
+    * as one epoch of the corpus [[EpochStore]] (untouched epochs never
+    * rewritten). Upstream of this sink sits [[curate]] (quality gate +
+    * watermarked dedup), so one streaming query runs gate → horizon
+    * dedup → corpus dedup → pack → shard publish; `PipelineSpec` pins the end-to-end contract:
     * the final shard layout equals the one-shot batch pipeline (gate +
     * global exact dedup + `Packing.pack`) under id-ordered arrival,
     * across a checkpoint restart.
@@ -446,13 +430,12 @@ object DocStream {
     * Instead of keeping per-block running token offsets in state (the
     * [[packStream]] approach), each epoch derives them from the stored
     * corpus: `sum(n_tokens) per block` over the OTHER epochs' partitions.
-    * Epoch publication is atomic, so the sums are exact, and a replayed
-    * epoch is excluded from its own base offsets — replay lands every
-    * row at its original start_tok for free. The recompute reads only
-    * the (block, n_tokens) columns of the shard metadata, never text;
-    * at 100 TB this is a column-pruned scan of two longs per stored doc
-    * per epoch — trade it for packStream's keyed state when epochs are
-    * frequent.
+    * A replayed epoch is excluded from its own base offsets — replay
+    * lands every row at its original start_tok for free. The recompute
+    * reads only the (block, n_tokens) columns of the shard metadata,
+    * never text; at 100 TB this is a column-pruned scan of two longs
+    * per stored doc per epoch — trade it for packStream's keyed state
+    * when epochs are frequent.
     *
     * CONTRACT: same single-writer rule as
     * [[incrementalDedupSinkEachBatch]]; `budget`/`blocks`/`salt` must
@@ -464,31 +447,24 @@ object DocStream {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.Packing
     require(budget > 0 && blocks > 0, "budget and blocks must be positive")
-    assertSingleWriter(batch.sparkSession, outDir)
-    new java.io.File(outDir).mkdirs()
-    // heal any crashed epoch swap BEFORE the corpus listing: a half-
-    // published epoch would otherwise vanish from the dedup corpus and
-    // its documents would be re-admitted as new
-    PartitionedUpsert.recoverAll(outDir)
     val sess = batch.sparkSession
-    val uniq = batch
-      .where(col("text").isNotNull)
-      .withColumn("fp", fingerprint(col("text")))
-      .withColumn("__rn",
-        row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
-      .where(col("__rn") === 1).drop("__rn")
-    val corpusDirs = corpusEpochDirs(outDir, epochId)
-    val bloom = loadOrBuildBloom(sess, outDir, corpusDirs,
+    val store = corpus(sess, outDir)
+    // the claim heals first: a half-swapped epoch would otherwise
+    // vanish from the dedup corpus and its documents re-admit as new
+    store.claim()
+    val others = store.epochs(except = Some(epochId))
+    val uniq = uniqueByFingerprint(batch)
+    val bloom = loadOrBuildBloom(sess, outDir, store, others,
       expectedCorpusDocs, fpp)
     val fresh =
-      if (corpusDirs.isEmpty) uniq
+      if (others.isEmpty) uniq
       else graft.operators.Dedup.newDocsWithBloom(
-        sess.read.parquet(corpusDirs: _*), uniq, bloom)
+        store.read(others), uniq, bloom)
     // per-block token offsets where the stored corpus ends (column-
     // pruned: two longs per stored doc, text never read)
     val baseOffsets: Map[Long, Long] =
-      if (corpusDirs.isEmpty) Map.empty
-      else sess.read.parquet(corpusDirs: _*)
+      if (others.isEmpty) Map.empty
+      else store.read(others)
         .groupBy("block").agg(sum("n_tokens").as("t"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val baseCol = baseOffsets.foldLeft(lit(0L)) { case (acc, (b, t)) =>
@@ -510,11 +486,10 @@ object DocStream {
     val rows = packed.persist()
     try {
       // same crash ordering as the plain sink: sketch first (false
-      // positives only), then the atomic epoch swap
+      // positives only), then the epoch
       rows.select("fp").collect().foreach(r => bloom.putString(r.getString(0)))
       publishBloom(bloom, outDir)
-      PartitionedUpsert.upsert(rows.withColumn("epoch", lit(epochId)),
-        outDir, "epoch", Seq.empty)
+      store.write(epochId, rows)
     } finally rows.unpersist(blocking = false)
   }
 
@@ -598,34 +573,28 @@ object DocStream {
       bounds: Seq[graft.operators.Checks.Bound],
       compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit = {
     import graft.operators.Checks
+    val sess = batch.sparkSession
+    val (store, held) = (corpus(sess, outDir), quarantine(sess, outDir))
     val rows = batch.persist()
     try {
       if (rows.isEmpty) return // nothing to gate, nothing to publish
       val bad = Checks.violations(Checks.docReport(rows), bounds)
-      val corpusEpoch = new java.io.File(s"$outDir/epoch=$epochId")
-      val qEpoch = new java.io.File(s"$outDir.quarantine/epoch=$epochId")
       if (bad.nonEmpty) {
-        rows.write.mode("overwrite").parquet(qEpoch.getPath)
-        java.nio.file.Files.write(
-          new java.io.File(s"${qEpoch.getPath}.REASON.txt").toPath,
-          (bad :+ "").mkString("\n").getBytes("UTF-8"))
-        if (corpusEpoch.exists())
-          graft.AtomicSwap.deleteRecursively(corpusEpoch)
+        held.write(epochId, rows)
+        held.note(epochId, Reason, (bad :+ "").mkString("\n"))
+        store.drop(epochId)
         System.err.println(s"[quality-gate] epoch $epochId HELD BACK " +
           s"(${bad.size} violation(s)): ${bad.mkString("; ")}")
       } else {
-        rows.write.mode("overwrite").parquet(corpusEpoch.getPath)
-        if (qEpoch.exists()) {
-          graft.AtomicSwap.deleteRecursively(qEpoch)
-          graft.AtomicSwap.deleteRecursively(
-            new java.io.File(s"${qEpoch.getPath}.REASON.txt"))
-        }
-        if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-          graft.operators.Compact.compactAccumulated(batch.sparkSession,
-            outDir, epochId, identity)
+        store.write(epochId, rows)
+        held.drop(epochId)
+        store.fold(epochId, compactEvery)(identity)
       }
     } finally rows.unpersist(blocking = false)
   }
+
+  /** Sidecar naming the bounds a held-back epoch breached. */
+  private val Reason = "REASON.txt"
 
   /** What a [[takedownAccumulated]] pass did. `quarantineRowsDeleted`
     * counts rows swept from the sibling `outDir.quarantine` store —
@@ -640,17 +609,17 @@ object DocStream {
     * epoch-partitioned output of [[incrementalDedupSinkEachBatch]] /
     * [[qualityGateSinkEachBatch]]. Deletes every row of `ids` from the
     * corpus under `outDir` by rewriting ONLY the epoch partitions that
-    * hold them (one pushed-filter scan names the touched epochs; each
-    * rewrite is an atomic per-partition swap via [[PartitionedUpsert]],
-    * untouched epochs never read again), then REBUILDS the rolling
-    * corpus Bloom from the survivors — the fingerprints of taken-down
-    * documents are derived data too, and with the sketch rebuilt a
-    * re-submission of the same content is ADMITTED again (dedup state
-    * must not remember what compliance erased; the exact confirm join
-    * would admit it anyway — the rebuild also restores fp-rate
-    * hygiene). Idempotent: a second pass finds no epochs to touch.
-    * Same single-writer contract as the sinks (loud rejection while an
-    * ACTIVE streaming query owns the directory).
+    * hold them ([[EpochStore.rewrite]]: one pushed-filter scan names the
+    * touched epochs, untouched epochs are never read again), then
+    * REBUILDS the rolling corpus Bloom from the survivors — the
+    * fingerprints of taken-down documents are derived data too, and
+    * with the sketch rebuilt a re-submission of the same content is
+    * ADMITTED again (dedup state must not remember what compliance
+    * erased; the exact confirm join would admit it anyway — the
+    * rebuild also restores fp-rate hygiene). Idempotent: a second pass
+    * finds no epochs to touch. Same single-writer contract as the sinks
+    * (loud rejection while an ACTIVE streaming query owns the
+    * directory).
     *
     * Also sweeps the sibling `outDir.quarantine` store — a held-back
     * epoch holds the taken-down bytes too, and [[readmitQuarantine]]
@@ -663,143 +632,50 @@ object DocStream {
       expectedCorpusDocs: Long = 1000000L,
       fpp: Double = 0.01): TakedownReport = {
     require(ids.nonEmpty, "takedown needs at least one doc id")
-    assertSingleWriter(spark, outDir)
-    graft.operators.Compact.recoverAccumulated(outDir)
-    PartitionedUpsert.recoverAll(outDir)
-    val isDel = coalesce(col("doc_id").isin(ids: _*), lit(false))
+    val store = corpus(spark, outDir)
+    store.claim()
+    // a bare isin, so discovery pushes into the parquet scan (the store
+    // counts null as keep itself)
+    val isDel = col("doc_id").isin(ids: _*)
     // the quarantine sweeps FIRST (round-16 advice): held-back epochs
     // hold the taken-down bytes too, and readmitQuarantine could later
-    // reintroduce them — erasure covers both sides of the gate
-    val qDeleted = takedownQuarantine(spark, outDir, isDel)
-    // crash-safety marker (round-16 advice): a crash between the epoch
-    // rewrites and publishBloom would leave the erased fingerprints in
-    // the sketch PERMANENTLY — the re-run finds no touched epochs and
-    // returned early. The marker is written before the first rewrite
-    // and cleared only after the publish, so any later pass (re-run or
-    // a different batch) rebuilds the sketch when it is present.
-    val pending = new java.io.File(outDir, "_bloom.pending")
-    def rebuildAndPublish(): Unit = {
-      val remaining = Option(new java.io.File(outDir).listFiles())
-        .toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-      val bloom =
-        if (remaining.isEmpty)
-          org.apache.spark.util.sketch.BloomFilter
-            .create(expectedCorpusDocs, fpp)
-        else {
-          val rest = spark.read.parquet(remaining.map(_.getAbsolutePath): _*)
-          if (rest.isEmpty)
-            org.apache.spark.util.sketch.BloomFilter
-              .create(expectedCorpusDocs, fpp)
-          else rest.select(fingerprint(col("text")).as("fp"))
-            .stat.bloomFilter("fp", expectedCorpusDocs, fpp)
-        }
-      publishBloom(bloom, outDir)
-      pending.delete()
-    }
-    val epochDirs = Option(new java.io.File(outDir).listFiles())
-      .toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-    if (epochDirs.isEmpty) {
-      if (pending.exists()) rebuildAndPublish()
-      return TakedownReport(0L, 0L, 0L, qDeleted)
-    }
-    // PRUNE-FIRST discovery (round-16 verdict #5): a pushed doc_id
-    // filter names the touched epochs — parquet row-group stats skip
-    // untouched epochs' data pages, so discovery costs O(candidates),
-    // not a full-corpus aggregate. Totals then read ONLY the touched
-    // epochs' directories by path: untouched epochs' files are never
-    // listed again, let alone scanned (spec asserts this).
-    // plain isin, NOT the null-safe coalesce wrapper: a WHERE drops
-    // NULL-valued predicates anyway, and only the bare In() translates
-    // to a parquet pushed filter (coalesce would disable the pushdown
-    // this pass exists for)
-    val corpus = spark.read.parquet(outDir)
-    val touched = corpus.where(col("doc_id").isin(ids: _*))
-      .select(col("epoch").cast("string"))
-      .distinct().collect().map(_.getString(0)).toSet
-    if (touched.isEmpty) {
-      if (pending.exists()) rebuildAndPublish()
-      return TakedownReport(epochDirs.size.toLong, 0L, 0L, qDeleted)
-    }
-    // ONE pre-swap read over the touched epochs decides the deleted
-    // counts AND the epochs the takedown empties — all BEFORE any swap
-    // moves files under the lazy plan
-    val touchedRead = spark.read.option("basePath", outDir)
-      .parquet(touched.toSeq.sorted.map(e => s"$outDir/epoch=$e"): _*)
-    val perEpoch = touchedRead.groupBy(col("epoch"))
-      .agg(count(lit(1)).as("total"),
-        sum(when(isDel, 1L).otherwise(0L)).as("del"))
-      .collect()
-      .map(r => (r.get(0).toString, r.getLong(1), r.getLong(2)))
-    val emptied = perEpoch.filter(e => e._2 == e._3).map(_._1).toSet
-    // sketch goes dirty before the first swap (see marker scaladoc)
-    java.nio.file.Files.write(pending.toPath,
-      ids.mkString(",").getBytes("UTF-8"))
-    // survivors of the PARTIALLY touched epochs swap back atomically;
-    // an epoch whose EVERY row was deleted never appears in the upsert
-    // (it derives its partition list from the incoming rows), so its
-    // directory goes explicitly — otherwise the taken-down bytes would
-    // silently survive on disk while the report claimed them deleted
-    if (touched.size > emptied.size) {
-      val survivors = touchedRead
-        .where(col("epoch").isin((touched -- emptied).toSeq: _*))
-        .where(!isDel)
-      PartitionedUpsert.upsert(survivors, outDir, "epoch", Seq.empty)
-    }
-    emptied.foreach { e =>
-      graft.AtomicSwap.deleteRecursively(
-        new java.io.File(s"$outDir/epoch=$e"))
-    }
-    // rebuilt sketch from what remains (see scaladoc); a takedown that
-    // emptied the whole corpus leaves nothing to read
-    rebuildAndPublish()
-    TakedownReport(epochDirs.size.toLong, touched.size.toLong,
-      perEpoch.map(_._3).sum, qDeleted)
+    // reintroduce them — erasure covers both sides of the gate. Emptied
+    // held-back epochs go with their REASON sidecars.
+    val held = quarantine(spark, outDir).rewrite(isDel, isDel)
+    val r = store.rewrite(isDel, isDel,
+      beforeSwap = () => markSketchDirty(outDir, ids))
+    rebuildBloomIfDirty(store, outDir, r, expectedCorpusDocs, fpp)(
+      _.select(fingerprint(col("text")).as("fp")))
+    TakedownReport(r.epochs, r.touched, r.deleted, held.deleted)
   }
 
-  /** Sweep `ids` out of the sibling quarantine store (see
-    * [[qualityGateSinkEachBatch]]): per-epoch copy-on-write rewrite
-    * through a dot-prefixed tmp + atomic swap (never in place — a
-    * self-overwrite would read and clobber the same files), REASON
-    * sidecars kept for partially swept epochs, emptied epochs removed
-    * with their sidecar. The per-epoch loop is driver-side by design —
-    * quarantined epochs are the rare exception path. Returns the swept
-    * row count. */
-  private def takedownQuarantine(spark: org.apache.spark.sql.SparkSession,
-      outDir: String, isDel: org.apache.spark.sql.Column): Long = {
-    val qRoot = new java.io.File(s"$outDir.quarantine")
-    val epochs = Option(qRoot.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-    // heal a crashed sweep swap before reading (tmp → discard;
-    // aside-but-unpublished → restore)
-    epochs.foreach { q =>
-      graft.AtomicSwap.recover(q.getPath,
-        Seq(s"${qRoot.getPath}/.${q.getName}.td.tmp"),
-        s"${qRoot.getPath}/.${q.getName}.td.old")
-    }
-    var deleted = 0L
-    epochs.foreach { q =>
-      val rows = spark.read.parquet(q.getPath).persist()
-      try {
-        val del = rows.where(isDel).count()
-        if (del > 0L) {
-          deleted += del
-          val kept = rows.where(!isDel)
-          if (kept.isEmpty) {
-            graft.AtomicSwap.deleteRecursively(q)
-            graft.AtomicSwap.deleteRecursively(
-              new java.io.File(s"${q.getPath}.REASON.txt"))
-          } else {
-            val tmp = s"${qRoot.getPath}/.${q.getName}.td.tmp"
-            kept.write.mode("overwrite").parquet(tmp)
-            graft.AtomicSwap.publish(tmp, q.getPath,
-              s"${qRoot.getPath}/.${q.getName}.td.old")
-          }
-        }
-      } finally rows.unpersist(blocking = false)
-    }
-    deleted
+  /** Crash-safety marker (round-16 advice): a crash between the epoch
+    * rewrites and the sketch publish would leave the erased fingerprints
+    * in the sketch PERMANENTLY — a re-run finds no touched epochs. The
+    * marker is written before the first swap and cleared only after the
+    * publish, so any later pass rebuilds the sketch while it exists. */
+  private def markSketchDirty(outDir: String, ids: Seq[Long]): Unit =
+    java.nio.file.Files.write(new java.io.File(outDir, Pending).toPath,
+      ids.mkString(",").getBytes("UTF-8"))
+
+  private val Pending = "_bloom.pending"
+
+  /** Rebuild the rolling corpus Bloom from what remains (`fps` projects
+    * the corpus to its `fp` column) after a takedown touched epochs, or
+    * while an earlier pass's dirty marker is still present. */
+  private def rebuildBloomIfDirty(store: EpochStore, outDir: String,
+      r: EpochStore.Rewrite, expectedCorpusDocs: Long, fpp: Double)
+      (fps: DataFrame => DataFrame): Unit = {
+    import org.apache.spark.util.sketch.BloomFilter
+    val pending = new java.io.File(outDir, Pending)
+    if (r.touched == 0L && !pending.exists()) return
+    val rest =
+      if (store.epochs().isEmpty) None else Some(fps(store.read()))
+    val bloom = rest.filterNot(_.isEmpty)
+      .map(_.stat.bloomFilter("fp", expectedCorpusDocs, fpp))
+      .getOrElse(BloomFilter.create(expectedCorpusDocs, fpp))
+    publishBloom(bloom, outDir)
+    pending.delete()
   }
 
   /** Right-to-erasure for the STREAMING PACKED SHARDS — the accumulated
@@ -844,88 +720,38 @@ object DocStream {
     import graft.operators.Packing
     require(ids.nonEmpty, "takedown needs at least one doc id")
     require(budget > 0 && blocks > 0, "budget and blocks must be positive")
-    assertSingleWriter(spark, outDir)
-    PartitionedUpsert.recoverAll(outDir)
-    val pending = new java.io.File(outDir, "_bloom.pending")
-    def rebuildAndPublish(): Unit = {
-      val remaining = Option(new java.io.File(outDir).listFiles())
-        .toSeq.flatten
-        .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-      val bloom =
-        if (remaining.isEmpty)
-          org.apache.spark.util.sketch.BloomFilter
-            .create(expectedCorpusDocs, fpp)
-        else {
-          // the packed store carries the canonical fingerprint column —
-          // the rebuild is a column-pruned scan, text never read
-          val rest = spark.read
-            .parquet(remaining.map(_.getAbsolutePath): _*).select("fp")
-          if (rest.isEmpty)
-            org.apache.spark.util.sketch.BloomFilter
-              .create(expectedCorpusDocs, fpp)
-          else rest.stat.bloomFilter("fp", expectedCorpusDocs, fpp)
-        }
-      publishBloom(bloom, outDir)
-      pending.delete()
-    }
-    val epochDirs = Option(new java.io.File(outDir).listFiles())
-      .toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-    if (epochDirs.isEmpty) {
-      if (pending.exists()) rebuildAndPublish()
-      return TakedownReport(0L, 0L, 0L)
-    }
-    val corpus = spark.read.parquet(outDir)
+    val store = corpus(spark, outDir)
+    store.claim()
+    val isDel = col("doc_id").isin(ids: _*)
+    val epochs = store.epochs()
     // 1. active blocks (pushed doc_id filter — row-group prune)
-    val activeBlocks = corpus.where(col("doc_id").isin(ids: _*))
-      .select(col("block")).distinct().collect()
-      .map(_.getLong(0)).toIndexedSeq
-    if (activeBlocks.isEmpty) {
-      if (pending.exists()) rebuildAndPublish()
-      return TakedownReport(epochDirs.size.toLong, 0L, 0L)
-    }
-    // 2. touched epochs (pushed block filter)
-    val touched = corpus.where(col("block").isin(activeBlocks: _*))
-      .select(col("epoch").cast("string"))
-      .distinct().collect().map(_.getString(0)).toSet
-    // 3. ONE pre-swap read over the touched epochs
-    val isDel = coalesce(col("doc_id").isin(ids: _*), lit(false))
-    val touchedRead = spark.read.option("basePath", outDir)
-      .parquet(touched.toSeq.sorted.map(e => s"$outDir/epoch=$e"): _*)
-    val perEpoch = touchedRead.groupBy(col("epoch"))
-      .agg(count(lit(1)).as("total"),
-        sum(when(isDel, 1L).otherwise(0L)).as("del"))
-      .collect()
-      .map(r => (r.get(0).toString, r.getLong(1), r.getLong(2)))
-    val emptied = perEpoch.filter(e => e._2 == e._3).map(_._1).toSet
-    java.nio.file.Files.write(pending.toPath,
-      ids.mkString(",").getBytes("UTF-8"))
-    if (touched.size > emptied.size) {
-      // repack the active blocks' survivors across ALL their epochs in
-      // arrival order (epoch, then doc_id — the sink's own order);
-      // rows of untouched blocks inside touched epochs pass unchanged
-      val w = Window.partitionBy("block")
-        .orderBy(col("epoch").cast("long"), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val active = col("block").isin(activeBlocks: _*)
-      val repackedStart = sum("n_tokens").over(w) - col("n_tokens")
-      val survivors = touchedRead
-        .where(!isDel)
-        .withColumn("start_tok",
-          when(active, repackedStart).otherwise(col("start_tok")))
-        .withColumn("bin",
-          when(active, col("block") * lit(Packing.BinStride) +
-            expr(s"start_tok div $budget")).otherwise(col("bin")))
-        .where(!col("epoch").isin(emptied.toSeq: _*))
-      PartitionedUpsert.upsert(survivors, outDir, "epoch", Seq.empty)
-    }
-    emptied.foreach { e =>
-      graft.AtomicSwap.deleteRecursively(
-        new java.io.File(s"$outDir/epoch=$e"))
-    }
-    rebuildAndPublish()
-    TakedownReport(epochDirs.size.toLong, touched.size.toLong,
-      perEpoch.map(_._3).sum)
+    val activeBlocks =
+      if (epochs.isEmpty) Seq.empty[Long]
+      else store.read().where(isDel).select(col("block")).distinct()
+        .collect().map(_.getLong(0)).toIndexedSeq
+    // 2. + 3. touched epochs by a pushed block filter; survivors of the
+    // active blocks REPACK across all their epochs in arrival order
+    // (epoch, then doc_id — the sink's own order); rows of other blocks
+    // inside touched epochs pass unchanged
+    val active = col("block").isin(activeBlocks: _*)
+    val w = Window.partitionBy("block")
+      .orderBy(col("epoch").cast("long"), col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val repackedStart = sum("n_tokens").over(w) - col("n_tokens")
+    val r =
+      if (activeBlocks.isEmpty) EpochStore.Rewrite(epochs.size.toLong, 0L, 0L)
+      else store.rewrite(active, isDel,
+        _.withColumn("start_tok",
+            when(active, repackedStart).otherwise(col("start_tok")))
+          .withColumn("bin",
+            when(active, col("block") * lit(Packing.BinStride) +
+              expr(s"start_tok div $budget")).otherwise(col("bin"))),
+        beforeSwap = () => markSketchDirty(outDir, ids))
+    // the packed store carries the canonical fingerprint column — the
+    // rebuild is a column-pruned scan, text never read
+    rebuildBloomIfDirty(store, outDir, r, expectedCorpusDocs, fpp)(
+      _.select("fp"))
+    TakedownReport(r.epochs, r.touched, r.deleted)
   }
 
   /** What a [[readmitQuarantine]] pass did. */
@@ -951,28 +777,22 @@ object DocStream {
       outDir: String,
       bounds: Seq[graft.operators.Checks.Bound]): ReadmitReport = {
     import graft.operators.Checks
-    val qRoot = new java.io.File(s"$outDir.quarantine")
-    val epochs = Option(qRoot.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-      .sortBy(_.getName.stripPrefix("epoch=").toLong)
+    val (store, held) = (corpus(spark, outDir), quarantine(spark, outDir))
+    val epochs = held.epochs()
     var readmitted = 0L
     var kept = 0L
-    epochs.foreach { q =>
-      val rows = spark.read.parquet(q.getPath).persist()
+    epochs.foreach { e =>
+      val rows = held.read(Seq(e)).persist()
       try {
         val bad = Checks.violations(Checks.docReport(rows), bounds)
         if (bad.isEmpty) {
-          rows.write.mode("overwrite").parquet(s"$outDir/${q.getName}")
-          graft.AtomicSwap.deleteRecursively(q)
-          graft.AtomicSwap.deleteRecursively(
-            new java.io.File(s"${q.getPath}.REASON.txt"))
+          store.write(e, rows)
+          held.drop(e)
           System.err.println(
-            s"[quality-gate] ${q.getName} READMITTED under current bounds")
+            s"[quality-gate] epoch $e READMITTED under current bounds")
           readmitted += 1
         } else {
-          java.nio.file.Files.write(
-            new java.io.File(s"${q.getPath}.REASON.txt").toPath,
-            (bad :+ "").mkString("\n").getBytes("UTF-8"))
+          held.note(e, Reason, (bad :+ "").mkString("\n"))
           kept += 1
         }
       } finally rows.unpersist(blocking = false)

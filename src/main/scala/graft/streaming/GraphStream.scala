@@ -120,51 +120,37 @@ object GraphStream {
   /** foreachBatch sink: append this epoch's edge-weight deltas and
     * node set under `outDir` (see class doc for the replay argument).
     * Usage: `.writeStream.foreachBatch(GraphStream.edgeSinkEachBatch(dir) _)`.
-    *
-    * `compactEvery > 0` folds the committed epoch partitions into the
-    * single `epoch=-1` base every that-many epochs
-    * ([[graft.operators.Compact.compactAccumulated]]) — without it the
-    * sink grows one directory per micro-batch forever (~17k/day at a
-    * 5 s trigger) and every snapshot re-lists all of them. The
-    * in-flight epoch is never folded, so crash-replay still overwrites
-    * its own partition and snapshots converge (spec-pinned). Edge
-    * weights are additive partials (fold = sum), node rows a distinct
-    * set. */
+    * `compactEvery` folds edge weights by sum (additive partials) and
+    * nodes by distinct. */
   def edgeSinkEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: Dataset[GraphDelta], epochId: Long): Unit = {
-    SingleWriter.assertOwner(batch.sparkSession, outDir, "graph edge sink")
+    val (edges, nodes) = stores(batch.sparkSession, outDir)
     // one narrow dependency feeds both writes; persist so the batch's
     // state-store read-and-sort runs once, not twice
     val b = batch.toDF().persist()
     try {
-      b.where(col("src").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .write.mode("overwrite").parquet(s"$outDir/edges/epoch=$epochId")
-      b.select(col("dst").as("node")).distinct()
-        .write.mode("overwrite").parquet(s"$outDir/nodes/epoch=$epochId")
+      edges.write(epochId, b.where(col("src").isNotNull)
+        .groupBy("src", "dst").agg(count(lit(1)).as("w")))
+      nodes.write(epochId, b.select(col("dst").as("node")).distinct())
     } finally b.unpersist(blocking = false)
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L) {
-      val spark = batch.sparkSession
-      graft.operators.Compact.compactAccumulated(spark,
-        s"$outDir/edges", epochId,
-        _.groupBy("src", "dst").agg(sum(col("w")).as("w")))
-      graft.operators.Compact.compactAccumulated(spark,
-        s"$outDir/nodes", epochId, _.distinct())
-    }
+    edges.fold(epochId, compactEvery)(sumWeights)
+    nodes.fold(epochId, compactEvery)(_.distinct())
   }
 
+  private def stores(spark: SparkSession, outDir: String)
+      : (EpochStore, EpochStore) =
+    (EpochStore(spark, s"$outDir/edges", "graph edge store"),
+      EpochStore(spark, s"$outDir/nodes", "graph node store"))
+
+  private def sumWeights(edges: DataFrame): DataFrame =
+    edges.groupBy("src", "dst").agg(sum(col("w")).as("w"))
+
   /** The accumulated graph under `outDir`: total edge weights (one
-    * sum over the epoch partials) and the distinct node set. Heals a
-    * writer's crashed compaction swap before reading. */
+    * sum over the epoch partials) and the distinct node set. */
   def accumulatedGraph(spark: SparkSession, outDir: String)
       : (DataFrame, DataFrame) = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/edges")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/nodes")
-    val edges = spark.read.parquet(s"$outDir/edges")
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-    val nodes = spark.read.parquet(s"$outDir/nodes")
-      .select("node").distinct()
-    (edges, nodes)
+    val (edges, nodes) = stores(spark, outDir)
+    (sumWeights(edges.read()), nodes.read().select("node").distinct())
   }
 
   /** PageRank over everything streamed into `outDir` so far —
@@ -251,13 +237,8 @@ object GraphStream {
   def rebuildRetained(spark: SparkSession, outDir: String,
       events: DataFrame): Unit = {
     import org.apache.spark.sql.expressions.Window
-    SingleWriter.assertOwner(spark, outDir, "rebuildGraph")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/edges")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/nodes")
-    graft.AtomicSwap.recover(s"$outDir/edges",
-      Seq(s"$outDir/.edges.rebuild.tmp"), s"$outDir/.edges.old")
-    graft.AtomicSwap.recover(s"$outDir/nodes",
-      Seq(s"$outDir/.nodes.rebuild.tmp"), s"$outDir/.nodes.old")
+    val (edgeStore, nodeStore) = stores(spark, outDir)
+    edgeStore.claim(); nodeStore.claim()
     val ev = events
       .select(col("user_id"), col("ts"), col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -267,16 +248,10 @@ object GraphStream {
     try {
       val nxt = lead(col("k"), 1).over(
         Window.partitionBy("user_id").orderBy(col("ts"), col("event_id")))
-      val edges = ev.select(col("k").as("src"), nxt.as("dst"))
+      edgeStore.rebuild(ev.select(col("k").as("src"), nxt.as("dst"))
         .where(col("dst").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      val tmpE = s"$outDir/.edges.rebuild.tmp"
-      edges.write.mode("overwrite").parquet(s"$tmpE/epoch=-1")
-      graft.AtomicSwap.publish(tmpE, s"$outDir/edges", s"$outDir/.edges.old")
-      val nodes = ev.select(col("k").as("node")).distinct()
-      val tmpN = s"$outDir/.nodes.rebuild.tmp"
-      nodes.write.mode("overwrite").parquet(s"$tmpN/epoch=-1")
-      graft.AtomicSwap.publish(tmpN, s"$outDir/nodes", s"$outDir/.nodes.old")
+        .groupBy("src", "dst").agg(count(lit(1)).as("w")))
+      nodeStore.rebuild(ev.select(col("k").as("node")).distinct())
     } finally ev.unpersist(blocking = false)
   }
 }

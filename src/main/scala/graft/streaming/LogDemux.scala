@@ -164,30 +164,25 @@ object LogDemux {
     "DWD_PAGE_ACTION_LOG"  -> actions(parsed))
 
   /** One-pass fan-out for `foreachBatch`: persist the parsed batch, write
-    * every branch under `outDir/<topic>/epoch=<id>` (K1-equivalent sink;
-    * in prod the writer targets Kafka with a per-row topic column).
-    * Epoch-keyed OVERWRITE makes the sink idempotent under foreachBatch
-    * replay — a retried epoch rewrites its own directory instead of
-    * appending duplicates; the epoch commit after this function returns
-    * is the "flush then commit offsets" of the reference (:177-180).
-    *
-    * `compactEvery > 0` folds committed epochs into each topic's
-    * `epoch=-1` base via
-    * [[graft.operators.Compact.compactAccumulated]] (identity fold —
-    * demuxed rows are exactly-once per epoch), run IN-BAND from this
-    * sink so no epoch can land between the listing and the swap — the
-    * coordinated variant; [[graft.operators.Compact.compactEpochs]]
+    * every branch as one epoch of its topic's [[EpochStore]] under
+    * `outDir/<topic>` (K1-equivalent sink; in prod the writer targets
+    * Kafka with a per-row topic column). Epoch-keyed OVERWRITE makes the
+    * sink idempotent under foreachBatch replay — a retried epoch
+    * rewrites its own directory instead of appending duplicates; the
+    * epoch commit after this function returns is the "flush then commit
+    * offsets" of the reference (:177-180). `compactEvery` folds each
+    * topic in-band ([[EpochStore.fold]], identity — demuxed rows are
+    * exactly-once per epoch); [[graft.operators.Compact.compactEpochs]]
     * stays the stop-the-world form for OFFLINE rewrites of a stopped
-    * topic only. The in-flight epoch is never folded, preserving
-    * replay idempotence. */
+    * topic only. */
   def demuxEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit = {
     val parsed = parse(batch).persist()
     try branches(parsed).foreach { case (topic, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$topic/epoch=$epochId")
-      if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-        graft.operators.Compact.compactAccumulated(batch.sparkSession,
-          s"$outDir/$topic", epochId, identity)
+      val store = EpochStore(batch.sparkSession, s"$outDir/$topic",
+        "log demux sink")
+      store.write(epochId, df)
+      store.fold(epochId, compactEvery)(identity)
     } finally parsed.unpersist()
   }
 }

@@ -29,23 +29,21 @@ object MediaStream {
     * never shuffle and never land in the table. */
   def dhashSinkEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit = {
-    SingleWriter.assertOwner(batch.sparkSession, s"$outDir/$Sub",
-      "media signature sink")
-    Multimodal.dhashSignaturesOn(batch.where(col("content").isNotNull))
-      .write.mode("overwrite").parquet(s"$outDir/$Sub/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        s"$outDir/$Sub", epochId, _.distinct())
+    val store = signatures(batch.sparkSession, outDir)
+    store.write(epochId,
+      Multimodal.dhashSignaturesOn(batch.where(col("content").isNotNull)))
+    store.fold(epochId, compactEvery)(_.distinct())
   }
+
+  private def signatures(spark: SparkSession, outDir: String) =
+    EpochStore(spark, s"$outDir/$Sub", "media signature store")
 
   /** The accumulated signature relation (distinct — see the replay
     * argument above). */
-  def signatureTable(spark: SparkSession, outDir: String): DataFrame = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/$Sub")
-    spark.read.parquet(s"$outDir/$Sub")
+  def signatureTable(spark: SparkSession, outDir: String): DataFrame =
+    signatures(spark, outDir).read()
       .select(col("doc_id"), col("media_type"), col("dhash"))
       .distinct()
-  }
 
   /** q154 served from the TABLE: the identical cluster + banded-join
     * stage over the stream-maintained signatures — bit-equal to the
@@ -64,51 +62,17 @@ object MediaStream {
     * DERIVED PERSONAL DATA by the repo's own q161–q165 principle (it
     * identifies the content it was computed from and keeps answering
     * `/mediaNearDup` after the payload is gone), so a media takedown
-    * must delete the ids' rows here too. Same shape as
-    * [[DocStream.takedownAccumulated]]: a pushed `doc_id isin` scan
-    * names the touched epochs (row-group prune — discovery is
-    * O(candidates)); survivors of partially touched epochs swap back
-    * atomically ([[PartitionedUpsert]]); an epoch the takedown empties
-    * is removed explicitly (the upsert derives partitions from
-    * incoming rows and would never touch it). Idempotent; same
-    * single-writer rule as the sink. No sketch to rebuild — the table
-    * IS the derived artifact, and the payloads were never stored. */
+    * must delete the ids' rows here too: one [[EpochStore.rewrite]]
+    * (pushed `doc_id isin` discovery, per-epoch swaps, emptied epochs
+    * removed), as in [[DocStream.takedownAccumulated]]. Idempotent;
+    * same single-writer rule as the sink. No sketch to rebuild — the
+    * table IS the derived artifact, and the payloads were never
+    * stored. */
   def takedownSignatures(spark: SparkSession, outDir: String,
       ids: Seq[Long]): TakedownReport = {
-    import org.apache.spark.sql.functions._
     require(ids.nonEmpty, "takedown needs at least one media doc id")
-    val dir = s"$outDir/$Sub"
-    SingleWriter.assertOwner(spark, dir, "media signature takedown")
-    graft.operators.Compact.recoverAccumulated(dir)
-    PartitionedUpsert.recoverAll(dir)
-    val epochDirs = Option(new java.io.File(dir).listFiles())
-      .toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-    if (epochDirs.isEmpty) return TakedownReport(0L, 0L, 0L)
-    val table = spark.read.parquet(dir)
-    val touched = table.where(col("doc_id").isin(ids: _*))
-      .select(col("epoch").cast("string"))
-      .distinct().collect().map(_.getString(0)).toSet
-    if (touched.isEmpty)
-      return TakedownReport(epochDirs.size.toLong, 0L, 0L)
-    val isDel = coalesce(col("doc_id").isin(ids: _*), lit(false))
-    val touchedRead = spark.read.option("basePath", dir)
-      .parquet(touched.toSeq.sorted.map(e => s"$dir/epoch=$e"): _*)
-    val perEpoch = touchedRead.groupBy(col("epoch"))
-      .agg(count(lit(1)).as("total"),
-        sum(when(isDel, 1L).otherwise(0L)).as("del"))
-      .collect()
-      .map(r => (r.get(0).toString, r.getLong(1), r.getLong(2)))
-    val emptied = perEpoch.filter(e => e._2 == e._3).map(_._1).toSet
-    if (touched.size > emptied.size) {
-      val survivors = touchedRead.where(!isDel)
-        .where(!col("epoch").isin(emptied.toSeq: _*))
-      PartitionedUpsert.upsert(survivors, dir, "epoch", Seq.empty)
-    }
-    emptied.foreach { e =>
-      graft.AtomicSwap.deleteRecursively(new java.io.File(s"$dir/epoch=$e"))
-    }
-    TakedownReport(epochDirs.size.toLong, touched.size.toLong,
-      perEpoch.map(_._3).sum)
+    val isDel = col("doc_id").isin(ids: _*)
+    val r = signatures(spark, outDir).rewrite(isDel, isDel)
+    TakedownReport(r.epochs, r.touched, r.deleted)
   }
 }

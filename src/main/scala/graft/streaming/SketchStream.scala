@@ -96,16 +96,11 @@ object SketchStream {
     * re-delivered batch landing under a NEW epoch id cannot move the
     * merged registers — the sink is duplicate-immune at the algebra
     * level, not just the partition-layout level (spec-pinned).
-    * `compactEvery > 0` folds committed epochs into the `epoch=-1`
-    * base (max fold) via
-    * [[graft.operators.Compact.compactAccumulated]]; the in-flight
-    * epoch is never folded. */
+    * `compactEvery` folds with max ([[EpochStore.fold]]). */
   def hllSinkEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit =
-    hllRegSink(outDir, "hllregs", Seq("event_type"),
-      batch.select(col("event_type"),
-        col("user_id").cast("string").as("uid")),
-      epochId, compactEvery)
+    sink(outDir, "hllregs", hll(batch, daily = false), epochId,
+      compactEvery)(maxRho(Seq("event_type")))
 
   /** Distinct-user estimates over everything streamed into `outDir` so
     * far: max-merge the persisted epoch partials back to one register
@@ -117,30 +112,43 @@ object SketchStream {
     * the event log. */
   def hllTableEstimates(spark: org.apache.spark.sql.SparkSession,
       outDir: String): DataFrame = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/hllregs")
-    val regs = spark.read.parquet(s"$outDir/hllregs")
-      .groupBy("event_type", "j").agg(max(col("rho")).as("rho"))
+    val regs = maxRho(Seq("event_type"))(
+      store(spark, outDir, "hllregs").read())
     Sketches.hllEstimate(regs, Seq("event_type")).orderBy("event_type")
   }
 
-  /** Shared write path of the two HLL register sinks: build the
-    * partial for `scopeCols`, overwrite the epoch partition, max-fold
-    * committed epochs on a cadence. Keeping this in ONE place means a
-    * fix to the write or compaction contract cannot silently miss one
-    * of the two grains. */
-  private def hllRegSink(outDir: String, sub: String,
-      scopeCols: Seq[String], projected: DataFrame, epochId: Long,
-      compactEvery: Int): Unit = {
-    SingleWriter.assertOwner(projected.sparkSession, s"$outDir/$sub",
-      "sketch sink")
-    Sketches.hllRegisters(projected, scopeCols, col("uid"))
-      .write.mode("overwrite").parquet(s"$outDir/$sub/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(
-        projected.sparkSession, s"$outDir/$sub", epochId,
-        df => df.groupBy((scopeCols :+ "j").map(col): _*)
-          .agg(max(col("rho")).as("rho")))
+  private def store(spark: org.apache.spark.sql.SparkSession,
+      outDir: String, sub: String): EpochStore =
+    EpochStore(spark, s"$outDir/$sub", "sketch store")
+
+  /** The write path of every sketch sink: overwrite the epoch's
+    * partial, fold committed epochs on the cadence. */
+  private def sink(outDir: String, sub: String, partial: DataFrame,
+      epochId: Long, compactEvery: Int)(fold: DataFrame => DataFrame)
+      : Unit = {
+    val st = store(partial.sparkSession, outDir, sub)
+    st.write(epochId, partial)
+    st.fold(epochId, compactEvery)(fold)
   }
+
+  private def maxRho(scope: Seq[String])(regs: DataFrame): DataFrame =
+    regs.groupBy((scope :+ "j").map(col): _*).agg(max(col("rho")).as("rho"))
+
+  /** (event_type[, dt], uid) — the user projection every user-keyed
+    * family (sink and erasure rebuild alike) hashes. */
+  private def users(ev: DataFrame, daily: Boolean): DataFrame =
+    ev.select(Seq(col("event_type")) ++
+      (if (daily) Seq(date_format(col("ts"), "yyyy-MM-dd").as("dt"))
+       else Nil) :+ col("user_id").cast("string").as("uid"): _*)
+
+  private def hll(ev: DataFrame, daily: Boolean): DataFrame =
+    Sketches.hllRegisters(users(ev, daily),
+      if (daily) Seq("event_type", "dt") else Seq("event_type"), col("uid"))
+
+  private def kmv(ev: DataFrame, daily: Boolean, k: Int): DataFrame =
+    if (daily) Sketches.kmvRegistersDaily(users(ev, daily = true), k)
+    else Sketches.kmvRegisters(users(ev, daily = false), "event_type",
+      col("uid"), k)
 
   /** foreachBatch sink for the DAY-GRAIN HLL warehouse (q138/q152's
     * storage grain): per-epoch (event_type, dt, j, rho) partials,
@@ -149,11 +157,8 @@ object SketchStream {
     * makes ANY date range answerable at read time. */
   def hllDailySinkEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit =
-    hllRegSink(outDir, "hllregsdaily", Seq("event_type", "dt"),
-      batch.select(col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd").as("dt"),
-        col("user_id").cast("string").as("uid")),
-      epochId, compactEvery)
+    sink(outDir, "hllregsdaily", hll(batch, daily = true), epochId,
+      compactEvery)(maxRho(Seq("event_type", "dt")))
 
   /** Distinct-user estimates for an ARBITRARY date range over the
     * persisted day-grain register table: filter stored rows to
@@ -165,10 +170,9 @@ object SketchStream {
   def hllRangeEstimates(spark: org.apache.spark.sql.SparkSession,
       outDir: String, from: String, to: String): DataFrame = {
     require(from <= to, s"from '$from' must be <= to '$to' (ISO dates)")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/hllregsdaily")
-    val regs = spark.read.parquet(s"$outDir/hllregsdaily")
-      .where(col("dt").between(from, to))
-      .groupBy("event_type", "dt", "j").agg(max(col("rho")).as("rho"))
+    val regs = maxRho(Seq("event_type", "dt"))(
+      store(spark, outDir, "hllregsdaily").read()
+        .where(col("dt").between(from, to)))
     val perType = Sketches.hllMerge(regs, Seq("event_type"))
     val all = Sketches.hllMerge(
       regs.withColumn("event_type", lit("ALL")), Seq("event_type"))
@@ -187,25 +191,11 @@ object SketchStream {
     * sink inherits the stronger replay guarantee: a re-delivered batch
     * under a NEW epoch id cannot move the merged sketch (its hashes
     * are already members — duplicate-immune at the algebra level).
-    * `compactEvery > 0` folds committed epochs into the `epoch=-1`
-    * base (union → re-top-k fold) via
-    * [[graft.operators.Compact.compactAccumulated]]; the in-flight
-    * epoch is never folded. */
+    * `compactEvery` folds by union → re-top-k. */
   def kmvSinkEachBatch(outDir: String, k: Int = Sketches.DefaultKmvK,
-      compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit = {
-    SingleWriter.assertOwner(batch.sparkSession, s"$outDir/kmvregs",
-      "sketch sink")
-    Sketches
-      .kmvRegisters(
-        batch.select(col("event_type"),
-          col("user_id").cast("string").as("uid")),
-        "event_type", col("uid"), k)
-      .write.mode("overwrite").parquet(s"$outDir/kmvregs/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        s"$outDir/kmvregs", epochId,
-        df => Sketches.kmvTopK(df, Seq("event_type"), k))
-  }
+      compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit =
+    sink(outDir, "kmvregs", kmv(batch, daily = false, k), epochId,
+      compactEvery)(Sketches.kmvTopK(_, Seq("event_type"), k))
 
   /** Distinct-user estimates over everything streamed into `outDir` so
     * far: re-top-k the persisted epoch partials back to one sketch
@@ -216,9 +206,8 @@ object SketchStream {
     * ≤ types × k sketch rows, never from the event log. */
   def kmvTableEstimates(spark: org.apache.spark.sql.SparkSession,
       outDir: String, k: Int = Sketches.DefaultKmvK): DataFrame = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/kmvregs")
     val regs = Sketches.kmvTopK(
-      spark.read.parquet(s"$outDir/kmvregs"), Seq("event_type"), k)
+      store(spark, outDir, "kmvregs").read(), Seq("event_type"), k)
     Sketches.kmvEstimate(regs, Seq("event_type"), k).orderBy("event_type")
   }
 
@@ -229,9 +218,8 @@ object SketchStream {
     * over the same stream). Serves `/audienceOverlap?source=sketch`. */
   def kmvTableOverlap(spark: org.apache.spark.sql.SparkSession,
       outDir: String, k: Int = Sketches.DefaultKmvK): DataFrame = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/kmvregs")
     val regs = Sketches.kmvTopK(
-      spark.read.parquet(s"$outDir/kmvregs"), Seq("event_type"), k)
+      store(spark, outDir, "kmvregs").read(), Seq("event_type"), k)
     Sketches.kmvOverlapFromRegs(regs, k)
       .select(col("type_a"), col("type_b"), col("union_est"),
         col("overlap_est"), col("jaccard_ppm"))
@@ -247,20 +235,9 @@ object SketchStream {
     * read time (what the HLL day sink can never serve). */
   def kmvDailySinkEachBatch(outDir: String,
       k: Int = Sketches.DefaultKmvK, compactEvery: Int = 0)
-      (batch: DataFrame, epochId: Long): Unit = {
-    SingleWriter.assertOwner(batch.sparkSession, s"$outDir/kmvregsdaily",
-      "sketch sink")
-    Sketches
-      .kmvRegistersDaily(
-        batch.select(col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd").as("dt"),
-          col("user_id").cast("string").as("uid")), k)
-      .write.mode("overwrite").parquet(s"$outDir/kmvregsdaily/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        s"$outDir/kmvregsdaily", epochId,
-        df => Sketches.kmvTopK(df, Seq("event_type", "dt"), k))
-  }
+      (batch: DataFrame, epochId: Long): Unit =
+    sink(outDir, "kmvregsdaily", kmv(batch, daily = true, k), epochId,
+      compactEvery)(Sketches.kmvTopK(_, Seq("event_type", "dt"), k))
 
   /** Audience overlap/Jaccard estimates for an ARBITRARY date range
     * over the persisted day-grain KMV table: filter stored day rows to
@@ -274,9 +251,8 @@ object SketchStream {
       outDir: String, from: String, to: String,
       k: Int = Sketches.DefaultKmvK): DataFrame = {
     require(from <= to, s"from '$from' must be <= to '$to' (ISO dates)")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/kmvregsdaily")
     val rangeRegs = Sketches.kmvTopK(
-      spark.read.parquet(s"$outDir/kmvregsdaily")
+      store(spark, outDir, "kmvregsdaily").read()
         .where(col("dt").between(from, to))
         .select(col("event_type"), col("h")),
       Seq("event_type"), k)
@@ -295,23 +271,10 @@ object SketchStream {
     * erasure pass. */
   private def userSketchBuilders(k: Int)
       : Seq[(String, DataFrame => DataFrame)] = Seq(
-    "hllregs" -> (ev => Sketches.hllRegisters(
-      ev.select(col("event_type"),
-        col("user_id").cast("string").as("uid")),
-      Seq("event_type"), col("uid"))),
-    "hllregsdaily" -> (ev => Sketches.hllRegisters(
-      ev.select(col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd").as("dt"),
-        col("user_id").cast("string").as("uid")),
-      Seq("event_type", "dt"), col("uid"))),
-    "kmvregs" -> (ev => Sketches.kmvRegisters(
-      ev.select(col("event_type"),
-        col("user_id").cast("string").as("uid")),
-      "event_type", col("uid"), k)),
-    "kmvregsdaily" -> (ev => Sketches.kmvRegistersDaily(
-      ev.select(col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd").as("dt"),
-        col("user_id").cast("string").as("uid")), k)))
+    "hllregs" -> (hll(_, daily = false)),
+    "hllregsdaily" -> (hll(_, daily = true)),
+    "kmvregs" -> (kmv(_, daily = false, k)),
+    "kmvregsdaily" -> (kmv(_, daily = true, k)))
 
   /** Complete an upstream user erasure INSIDE the sketch warehouse:
     * registers cannot unmerge (max/min-k folds are lossy one-way —
@@ -323,36 +286,24 @@ object SketchStream {
     * sub-table present under `outDir`; the item/value-keyed families
     * hold no user identity and are left alone (see
     * [[userSketchBuilders]]). Idempotent (a rebuild from the same
-    * upstream lands bit-equal); crash-safe per table (AtomicSwap keeps
-    * a committed copy at every instant); the estimate surfaces are
-    * spec-pinned equal to batch sketches over the retained events.
-    * Cost: one distributed register build per table over the retained
-    * upstream — the price of erasure from a lossy aggregate, paid per
-    * compliance window, not per query.
+    * upstream lands bit-equal); crash-safe per table
+    * ([[EpochStore.rebuild]]); the estimate surfaces are spec-pinned
+    * equal to batch sketches over the retained events. Cost: one
+    * distributed register build per table over the retained upstream —
+    * the price of erasure from a lossy aggregate, paid per compliance
+    * window, not per query.
     *
-    * Single-writer guard (round-16 advice): the atomic swap would
-    * silently discard an in-flight epoch a LIVE sink is writing, so the
-    * rebuild claims each table's [[SingleWriter]] ownership first — a
-    * table owned by an active streaming query is a loud failure, not a
-    * lost epoch. Stop the sink's query before rebuilding. */
+    * The swap would discard an in-flight epoch of a LIVE sink, so a
+    * table owned by an active streaming query fails the store's claim
+    * loudly. Stop the sink's query before rebuilding. */
   def rebuildUserSketches(spark: org.apache.spark.sql.SparkSession,
       outDir: String, events: DataFrame,
-      k: Int = Sketches.DefaultKmvK): Seq[String] = {
-    userSketchBuilders(k).flatMap { case (sub, build) =>
-      val dir = new java.io.File(outDir, sub)
-      if (!dir.exists()) None
-      else {
-        SingleWriter.assertOwner(spark, dir.getPath, "rebuildUserSketches")
-        graft.operators.Compact.recoverAccumulated(dir.getPath)
-        graft.AtomicSwap.recover(dir.getPath,
-          Seq(s"$outDir/.$sub.rebuild.tmp"), s"$outDir/.$sub.old")
-        val tmp = s"$outDir/.$sub.rebuild.tmp"
-        build(events).write.mode("overwrite").parquet(s"$tmp/epoch=-1")
-        graft.AtomicSwap.publish(tmp, dir.getPath, s"$outDir/.$sub.old")
-        Some(sub)
-      }
+      k: Int = Sketches.DefaultKmvK): Seq[String] =
+    userSketchBuilders(k).collect {
+      case (sub, build) if new java.io.File(outDir, sub).exists() =>
+        store(spark, outDir, sub).rebuild(build(events))
+        sub
     }
-  }
 
   // ——— heavy-hitter twin (exact counts → epoch partials) ———
 
@@ -373,16 +324,15 @@ object SketchStream {
     * summaries + a final verification pass against the accumulated
     * corpus — the same two-pass shape q139 runs in batch. */
   def heavyHitterSinkEachBatch(outDir: String, itemCol: String = "item",
-      compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit = {
-    batch.select(col(itemCol).cast("long").as("item"))
-      .where(col("item").isNotNull)
-      .groupBy("item").agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(s"$outDir/hhcounts/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        s"$outDir/hhcounts", epochId,
-        df => df.groupBy("item").agg(sum(col("cnt")).as("cnt")))
-  }
+      compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit =
+    sink(outDir, "hhcounts",
+      batch.select(col(itemCol).cast("long").as("item"))
+        .where(col("item").isNotNull)
+        .groupBy("item").agg(count(lit(1)).as("cnt")),
+      epochId, compactEvery)(sumCnt(Seq("item")))
+
+  private def sumCnt(keys: Seq[String])(partials: DataFrame): DataFrame =
+    partials.groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"))
 
   /** Heavy hitters over everything streamed into `outDir` so far:
     * sum-merge the epoch partials, then apply q139's EXACT threshold
@@ -393,9 +343,8 @@ object SketchStream {
       outDir: String,
       phiPpm: Long = Sketches.DefaultPhiPpm): DataFrame = {
     require(phiPpm >= 1 && phiPpm <= 1000000L, "phiPpm in [1, 1e6]")
-    graft.operators.Compact.recoverAccumulated(s"$outDir/hhcounts")
-    val counts = spark.read.parquet(s"$outDir/hhcounts")
-      .groupBy("item").agg(sum(col("cnt")).as("cnt"))
+    val counts = sumCnt(Seq("item"))(
+      store(spark, outDir, "hhcounts").read())
     val tot = counts.agg(sum(col("cnt")).as("n")) // 1 row — broadcast
     counts.crossJoin(broadcast(tot))
       .where(col("cnt") * lit(1000000L) > col("n") * lit(phiPpm))
@@ -411,17 +360,12 @@ object SketchStream {
     * replay-safe via overwrite-own-partition + sum-fold compaction —
     * the histogram sink's contract, for point frequencies. */
   def cmsSinkEachBatch(outDir: String, itemCol: String = "item",
-      compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit = {
-    Sketches
-      .cmsRegisters(
+      compactEvery: Int = 0)(batch: DataFrame, epochId: Long): Unit =
+    sink(outDir, "cmsregs",
+      Sketches.cmsRegisters(
         batch.select(col(itemCol).cast("long").as("item"))
-          .where(col("item").isNotNull), "item")
-      .write.mode("overwrite").parquet(s"$outDir/cmsregs/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        s"$outDir/cmsregs", epochId,
-        df => df.groupBy("d", "w").agg(sum(col("cnt")).as("cnt")))
-  }
+          .where(col("item").isNotNull), "item"),
+      epochId, compactEvery)(sumCnt(Seq("d", "w")))
 
   /** Point-frequency estimates for `items` over everything streamed
     * into `outDir` so far: sum-merge the epoch partials, then the
@@ -433,9 +377,8 @@ object SketchStream {
       outDir: String, items: Seq[Long]): DataFrame = {
     require(items.nonEmpty && items.size <= 4096, "items must be 1..4096")
     import spark.implicits._
-    graft.operators.Compact.recoverAccumulated(s"$outDir/cmsregs")
-    val regs = spark.read.parquet(s"$outDir/cmsregs")
-      .groupBy("d", "w").agg(sum(col("cnt")).as("cnt"))
+    val regs = sumCnt(Seq("d", "w"))(
+      store(spark, outDir, "cmsregs").read())
     Sketches.cmsEstimates(regs, items.distinct.toDF("item"), "item")
       .orderBy("item")
   }
@@ -448,21 +391,13 @@ object SketchStream {
     * (event_type, b, cnt) partial under `outDir/hist/epoch=<id>`
     * (overwrite-own-partition ⇒ a replayed batch converges), partials
     * are register-sized (≤1024 rows/type), never event-sized.
-    * `compactEvery > 0` folds committed epochs into the `epoch=-1`
-    * base (sum fold) through
-    * [[graft.operators.Compact.compactAccumulated]]; the in-flight
-    * epoch is never folded, preserving replay idempotence. */
+    * `compactEvery` folds with sum. */
   def histSinkEachBatch(outDir: String, compactEvery: Int = 0)
-      (batch: DataFrame, epochId: Long): Unit = {
-    Sketches
-      .histRegisters(batch.select(col("event_type"), col("value")),
-        Seq("event_type"), col("value"))
-      .write.mode("overwrite").parquet(s"$outDir/hist/epoch=$epochId")
-    if (compactEvery > 0 && epochId > 0L && epochId % compactEvery == 0L)
-      graft.operators.Compact.compactAccumulated(batch.sparkSession,
-        s"$outDir/hist", epochId,
-        df => df.groupBy("event_type", "b").agg(sum(col("cnt")).as("cnt")))
-  }
+      (batch: DataFrame, epochId: Long): Unit =
+    sink(outDir, "hist",
+      Sketches.histRegisters(batch.select(col("event_type"), col("value")),
+        Seq("event_type"), col("value")),
+      epochId, compactEvery)(sumCnt(Seq("event_type", "b")))
 
   /** Quantile estimates over everything streamed into `outDir` so far:
     * sum-merge the epoch partials back to one register relation, then
@@ -471,9 +406,8 @@ object SketchStream {
     * including across replay and compaction). */
   def quantileSnapshot(spark: org.apache.spark.sql.SparkSession,
       outDir: String, qs: Seq[Int] = Seq(50, 95, 99)): DataFrame = {
-    graft.operators.Compact.recoverAccumulated(s"$outDir/hist")
-    val regs = spark.read.parquet(s"$outDir/hist")
-      .groupBy("event_type", "b").agg(sum(col("cnt")).as("cnt"))
+    val regs = sumCnt(Seq("event_type", "b"))(
+      store(spark, outDir, "hist").read())
     Sketches.histEstimates(regs, qs)
       .select(col("event_type") +: qs.map(q =>
         (col(s"pb$q") * lit(Sketches.HistWidthMicros))

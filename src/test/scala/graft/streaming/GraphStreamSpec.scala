@@ -228,11 +228,10 @@ class GraphStreamSpec extends SparkSpec {
     val twice = rankRows(GraphStream.rankSnapshot(spark, outDir))
     assert(once == twice, "replay across a compaction changed the rank")
     // an explicit full fold (no in-flight epoch) is snapshot-invariant
-    graft.operators.Compact.compactAccumulated(spark, s"$outDir/edges",
-      keepEpoch = Long.MinValue,
+    EpochStore(spark, s"$outDir/edges").fold(Long.MaxValue, every = 1)(
       _.groupBy("src", "dst").agg(sum(col("w")).as("w")))
-    graft.operators.Compact.compactAccumulated(spark, s"$outDir/nodes",
-      keepEpoch = Long.MinValue, _.distinct())
+    EpochStore(spark, s"$outDir/nodes").fold(Long.MaxValue, every = 1)(
+      _.distinct())
     assert(rankRows(GraphStream.rankSnapshot(spark, outDir)) == twice,
       "full compaction changed the snapshot")
   }

@@ -120,6 +120,36 @@ class MediaStreamSpec extends SparkSpec {
       "a fully-erased epoch's directory survives on disk")
   }
 
+  test("a per-epoch swap that crashed between its renames loses no " +
+      "signature: the read heals it, and so does a folding sink epoch") {
+    val outDir = Files.createTempDirectory("msig_crash").toString
+    val chunks = graft.operators.Multimodal.mediaTable(spark, sf)
+      .select("doc_id", "media_type", "content")
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2)))
+      .toSeq.sortBy(_._1).grouped(125).toSeq
+    assert(chunks.size == 4, s"fixture holds ${chunks.size} chunks")
+    def sink(i: Int, compactEvery: Int) =
+      MediaStream.dhashSinkEachBatch(outDir, compactEvery)(
+        chunks(i).toDF("doc_id", "media_type", "content"), i.toLong)
+    def ids = MediaStream.signatureTable(spark, outDir)
+      .select("doc_id").as[Long].collect().toSet
+    def idsOf(n: Int) = chunks.take(n).flatten.map(_._1).toSet
+    (0 until 3).foreach(sink(_, compactEvery = 0))
+    // a takedown's per-epoch swap moved epoch 1 aside, then died
+    // before publishing its replacement
+    def crash(): Unit = assert(
+      new java.io.File(s"$outDir/mediasigs/epoch=1").renameTo(
+        new java.io.File(s"$outDir/mediasigs/.epoch=1.old")))
+    crash()
+    assert(ids == idsOf(3), "the read lost the crashed epoch's rows")
+    crash()
+    // a folding sink epoch must heal before it folds and publishes
+    // over the directory (which would delete the aside for good)
+    sink(3, compactEvery = 1)
+    assert(ids == idsOf(4), "a folding epoch lost the crashed epoch")
+  }
+
   test("the lossless-band guard rejects maxHamming >= bands for every " +
       "caller") {
     intercept[IllegalArgumentException] {

@@ -417,6 +417,27 @@ class StreamingSpec extends SparkSpec {
     assert(ids == Set(1L, 2L, 4L, 5L), s"replay changed the corpus")
   }
 
+  test("incremental dedup sink: an epoch a crashed per-epoch swap left " +
+      "aside still dedups later arrivals and survives the fold") {
+    val out = tmpDir("increm-crash")
+    def sink(rows: Seq[(Long, String)], epoch: Long): Unit =
+      DocStream.incrementalDedupSinkEachBatch(out, compactEvery = 3)(
+        rows.toDF("doc_id", "text"), epoch)
+    sink(Seq((1L, "alpha beta"), (2L, "gamma delta")), 0L)
+    sink(Seq((3L, "epsilon zeta"), (4L, "eta theta")), 1L)
+    sink(Seq((5L, "iota kappa")), 2L)
+    // a takedown's per-epoch swap moved epoch 1 aside, then died
+    // before publishing its replacement
+    assert(new java.io.File(s"$out/epoch=1")
+      .renameTo(new java.io.File(s"$out/.epoch=1.old")))
+    // epoch 3 folds: a content dup of a crashed-epoch doc must drop,
+    // and the fold must not publish over the aside copy
+    sink(Seq((6L, "epsilon zeta"), (7L, "lambda mu")), 3L)
+    val ids = spark.read.parquet(out).select("doc_id").as[Long]
+      .collect().toSet
+    assert(ids == Set(1L, 2L, 3L, 4L, 5L, 7L), s"got $ids")
+  }
+
   test("incremental dedup sink: second concurrent writer rejected, " +
       "null text dropped") {
     val out = tmpDir("increm-own")
