@@ -101,7 +101,10 @@ object CdcRouter {
     * `SET DIM:$TABLE:$id`, :109-115). The upsert is PARTITION-SCOPED
     * ([[PartitionedUpsert]]): only the hash buckets whose keys appear in
     * the batch are rewritten, so a small CDC epoch touches a few
-    * buckets, not the whole dim table.
+    * buckets, not the whole dim table. Both kinds of sink write one
+    * file per epoch or bucket for a small batch ([[EpochStore.sized]]),
+    * sized from the persisted batch, which one collect of the distinct
+    * (route, topic, table) triples computes.
     *
     * Dim replay caveat: the upsert is idempotent per key (a replayed
     * epoch re-applies the same last-wins SETs), which matches the
@@ -110,8 +113,11 @@ object CdcRouter {
       numBuckets: Int = 16)(batch: DataFrame, epochId: Long): Unit = {
     val routed = route(normalizeOps(parse(batch)), config).persist()
     try {
-      val topics = routed.where(col("route") === "FACT")
-        .select("topic").distinct().collect().map(_.getString(0))
+      // one job computes the cached batch and names every sink it feeds
+      val sinks = routed.select("route", "topic", "table").distinct()
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      val topics = sinks.collect { case ("FACT", t, _) => t }.distinct
+      val tables = sinks.collect { case ("DIM", _, t) => t }.distinct
       topics.foreach { t =>
         EpochStore(batch.sparkSession, s"$factDir/$t", "cdc fact sink")
           .write(epochId, routed.where(col("topic") === t)
@@ -119,7 +125,6 @@ object CdcRouter {
       }
       val dims = routed.where(col("route") === "DIM")
         .withColumn("id", get_json_object(col("data"), "$.id"))
-      val tables = dims.select("table").distinct().collect().map(_.getString(0))
       tables.foreach { t =>
         // within-batch last-wins BEFORE the upsert (PartitionedUpsert's
         // contract is one row per key per batch): an epoch carrying

@@ -170,19 +170,26 @@ object LogDemux {
     * sink idempotent under foreachBatch replay — a retried epoch
     * rewrites its own directory instead of appending duplicates; the
     * epoch commit after this function returns is the "flush then commit
-    * offsets" of the reference (:177-180). `compactEvery` folds each
-    * topic in-band ([[EpochStore.fold]], identity — demuxed rows are
-    * exactly-once per epoch); [[graft.operators.Compact.compactEpochs]]
+    * offsets" of the reference (:177-180). A branch of a small batch is
+    * one file per epoch however many deliveries the batch holds.
+    * `compactEvery` folds each topic in-band ([[EpochStore.fold]],
+    * identity — demuxed rows are exactly-once per epoch);
+    * [[graft.operators.Compact.compactEpochs]]
     * stays the stop-the-world form for OFFLINE rewrites of a stopped
     * topic only. */
   def demuxEachBatch(outDir: String, compactEvery: Int = 0)
       (batch: DataFrame, epochId: Long): Unit = {
     val parsed = parse(batch).persist()
-    try branches(parsed).foreach { case (topic, df) =>
-      val store = EpochStore(batch.sparkSession, s"$outDir/$topic",
-        "log demux sink")
-      store.write(epochId, df)
-      store.fold(epochId, compactEvery)(identity)
+    try {
+      // computed up front, so every branch write sizes its files from
+      // the cached batch ([[EpochStore.sized]]), not the unsized stream
+      parsed.count()
+      branches(parsed).foreach { case (topic, df) =>
+        val store = EpochStore(batch.sparkSession, s"$outDir/$topic",
+          "log demux sink")
+        store.write(epochId, df)
+        store.fold(epochId, compactEvery)(identity)
+      }
     } finally parsed.unpersist()
   }
 }

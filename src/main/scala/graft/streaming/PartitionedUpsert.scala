@@ -26,6 +26,12 @@ import graft.AtomicSwap
   * the same window the whole-table AtomicSwap has; `recoverAll` at the
   * next sink start restores it if the writer died in between.)
   *
+  * Each rewritten partition is written as [[EpochStore.sized]] files:
+  * the persisted batch's materialized slice plus the stored files it
+  * merges with, one file per `spark.sql.files.maxPartitionBytes` of
+  * them — so a small upsert commits one file per partition, not one per
+  * input partition of the batch.
+  *
   * At cluster scale this is exactly a MERGE INTO with dynamic partition
   * pruning under Delta/Iceberg; the directory protocol is the no-table-
   * format substitute, same as AtomicSwap itself.
@@ -81,7 +87,8 @@ object PartitionedUpsert {
             existing.join(incKeys, sameKey, "left_anti")
               .unionByName(slice, allowMissingColumns = true)
           } else slice
-        merged.write.mode("overwrite").parquet(s"$outDir/.$part.tmp")
+        EpochStore.sized(merged).write.mode("overwrite")
+          .parquet(s"$outDir/.$part.tmp")
         AtomicSwap.publish(s"$outDir/.$part.tmp", dir, s"$outDir/.$part.old")
       }
     } finally incoming.unpersist()
