@@ -57,17 +57,11 @@ object GraftSession {
 
   /** Size of Spark's JVM-wide cache of compiled generated classes
     * (`spark.sql.codegen.cache.maxEntries`, default 100; a static conf,
-    * read once when the JVM first generates code). The cache is keyed by
-    * code body and class loader, and the streaming pipeline's working
-    * set is larger than the default: one run of the four reference
-    * streaming apps compiles 178 distinct bodies, about 110 of them on
-    * every 10 s tick. At 100 entries the cache thrashes — 75–85% of each
-    * tick's compiles repeat a class it compiled before (500–650 per 20 s
-    * window of perfbench's `stream_ingest`), Janino and the JIT spend
-    * their CPU on it again — while at 256 a window compiles 22–58, all
-    * but about 3 new code, the same as at 512 or 1024. The retained heap
-    * after such a run reads 111–114 MB at 256–1024 entries against
-    * 108 MB at the default; the cap still bounds a long-lived server. */
+    * read once when the JVM first generates code). The streaming
+    * pipeline's working set of generated classes is larger than 100, so
+    * at the default the cache thrashes and every micro-batch recompiles
+    * classes it compiled before; 256 holds the working set, and the cap
+    * still bounds a long-lived server. */
   val CodegenCacheEntries: Int = 256
 
   /** Session-conf key naming the scale-factor directory the SQL

@@ -78,50 +78,16 @@ object Dict {
     new Dict("doubles", doubles = xs.clone())
 
   /** `(key, value)` pairs sorted by key: `longs` holds the keys for a
-    * binary search, `values` the aligned values. Pairs with equal keys
-    * keep their input order. */
-  def sortedPairs(kv: Array[(Long, Long)]): Dict =
-    pairs(kv.map(_._1), kv.map(_._2))
+    * binary search, `values` the aligned values. */
+  def sortedPairs(kv: Array[(Long, Long)]): Dict = {
+    val s = kv.sortBy(_._1)
+    new Dict("pairs", longs = s.map(_._1), values = s.map(_._2))
+  }
 
   /** Collects a `(key long, value long)` frame — its first two columns
     * — into [[sortedPairs]]. The caller bounds the frame's size. */
-  def sortedPairs(frame: DataFrame): Dict = {
-    val rows = frame.collect()
-    pairs(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
-  }
-
-  /** A pairs dict from fresh `keys` and aligned `values` (reused as
-    * buffers): a stable bottom-up merge sort by key over the primitive
-    * arrays, alternating with one scratch pair, with no boxed tuple or
-    * comparator call per element. */
-  private def pairs(keys: Array[Long], values: Array[Long]): Dict = {
-    val n = keys.length
-    var (k, v) = (keys, values)
-    var (k2, v2) = (new Array[Long](n), new Array[Long](n))
-    var width = 1
-    while (width < n) {
-      var lo = 0
-      while (lo < n) {
-        val mid = math.min(lo + width, n)
-        val hi = math.min(lo + 2 * width, n)
-        var i = lo
-        var j = mid
-        var o = lo
-        while (o < hi) {
-          // `<=` takes the left run on a tie: equal keys keep their order
-          if (j >= hi || (i < mid && k(i) <= k(j))) {
-            k2(o) = k(i); v2(o) = v(i); i += 1
-          } else { k2(o) = k(j); v2(o) = v(j); j += 1 }
-          o += 1
-        }
-        lo = hi
-      }
-      val (tk, tv) = (k, v)
-      k = k2; v = v2; k2 = tk; v2 = tv
-      width *= 2
-    }
-    new Dict("pairs", longs = k, values = v)
-  }
+  def sortedPairs(frame: DataFrame): Dict =
+    sortedPairs(frame.collect().map(r => (r.getLong(0), r.getLong(1))))
 
   /** A string → long table; a repeated key keeps its last value. */
   def strings(kv: Iterable[(String, Long)]): Dict = {

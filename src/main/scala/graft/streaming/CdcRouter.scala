@@ -101,10 +101,7 @@ object CdcRouter {
     * `SET DIM:$TABLE:$id`, :109-115). The upsert is PARTITION-SCOPED
     * ([[PartitionedUpsert]]): only the hash buckets whose keys appear in
     * the batch are rewritten, so a small CDC epoch touches a few
-    * buckets, not the whole dim table. Both kinds of sink write one
-    * file per epoch or bucket for a small batch ([[EpochStore.sized]]),
-    * sized from the persisted batch, which one collect of the distinct
-    * (route, topic, table) triples computes.
+    * buckets, not the whole dim table.
     *
     * Dim replay caveat: the upsert is idempotent per key (a replayed
     * epoch re-applies the same last-wins SETs), which matches the

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.io.File
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{RepartitionOperation, Sort}
 import org.apache.spark.sql.functions._
 import graft.AtomicSwap
 
@@ -85,8 +86,7 @@ final class EpochStore(spark: SparkSession, dir: String, what: String) {
     spark.read.option("basePath", dir).parquet(epochIds.map(path): _*)
 
   /** Overwrite `epoch=<epochId>` with `df` — a replay of the same batch
-    * id lands bit-equal — as [[EpochStore.sized]] files: one for a
-    * small epoch, not one per input partition. */
+    * id lands bit-equal — as [[EpochStore.sized]] files. */
   def write(epochId: Long, df: DataFrame): Unit = {
     claim()
     sized(df).write.mode("overwrite").parquet(path(epochId))
@@ -216,24 +216,24 @@ object EpochStore {
   private val EpochDir = "epoch=(-?\\d+)".r
 
   /** `df` coalesced to one output file per `spark.sql.files.maxPartitionBytes`
-    * of the bytes it holds, as the optimizer's statistics size them: the
-    * materialized size of a persisted (and already computed) batch, the
-    * lengths of the parquet files a merge reads. Each written file costs
-    * a task that deserializes the Hadoop configuration, opens a parquet
-    * writer and commits, so a micro-batch of a few hundred KB that
-    * arrived in ten deliveries is one file, not ten; a large epoch still
-    * splits. The coalesce narrows the whole write stage to that many
-    * tasks, so it applies only when it asks for fewer than the cores: a
-    * plan without a size (an uncomputed streaming batch reads as
-    * `spark.sql.defaultSizeInBytes`) or an epoch that large keeps one
-    * file per input partition. */
-  private[streaming] def sized(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val files = ((bytes + target - 1) / target).max(1)
-    if (files >= df.sparkSession.sparkContext.defaultParallelism) df
-    else df.coalesce(files.toInt)
-  }
+    * of the bytes the optimizer's statistics give it (a persisted and
+    * computed batch's materialized size, the parquet files a merge
+    * reads), so a small epoch is one file and one write task, not one per
+    * input partition. Left as it is when that asks for as many files as
+    * the cores (a large epoch, or a plan without a size: an uncomputed
+    * stream batch reads as `spark.sql.defaultSizeInBytes`), and when the
+    * caller set its own partitioning or in-partition order: merging
+    * sorted partitions would unsort the file. */
+  private[streaming] def sized(df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case _: Sort | _: RepartitionOperation => df
+      case _ =>
+        val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+        val files = ((bytes + target - 1) / target).max(1)
+        if (files >= df.sparkSession.sparkContext.defaultParallelism) df
+        else df.coalesce(files.toInt)
+    }
 
   /** What a [[EpochStore.rewrite]] did: epochs in the store, epochs
     * rewritten or removed, rows deleted. */

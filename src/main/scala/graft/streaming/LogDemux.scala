@@ -170,11 +170,9 @@ object LogDemux {
     * sink idempotent under foreachBatch replay — a retried epoch
     * rewrites its own directory instead of appending duplicates; the
     * epoch commit after this function returns is the "flush then commit
-    * offsets" of the reference (:177-180). A branch of a small batch is
-    * one file per epoch however many deliveries the batch holds.
-    * `compactEvery` folds each topic in-band ([[EpochStore.fold]],
-    * identity — demuxed rows are exactly-once per epoch);
-    * [[graft.operators.Compact.compactEpochs]]
+    * offsets" of the reference (:177-180). `compactEvery` folds each
+    * topic in-band ([[EpochStore.fold]], identity — demuxed rows are
+    * exactly-once per epoch); [[graft.operators.Compact.compactEpochs]]
     * stays the stop-the-world form for OFFLINE rewrites of a stopped
     * topic only. */
   def demuxEachBatch(outDir: String, compactEvery: Int = 0)

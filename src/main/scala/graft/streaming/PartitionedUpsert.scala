@@ -26,11 +26,7 @@ import graft.AtomicSwap
   * the same window the whole-table AtomicSwap has; `recoverAll` at the
   * next sink start restores it if the writer died in between.)
   *
-  * Each rewritten partition is written as [[EpochStore.sized]] files:
-  * the persisted batch's materialized slice plus the stored files it
-  * merges with, one file per `spark.sql.files.maxPartitionBytes` of
-  * them — so a small upsert commits one file per partition, not one per
-  * input partition of the batch.
+  * Each rewritten partition is written as [[EpochStore.sized]] files.
   *
   * At cluster scale this is exactly a MERGE INTO with dynamic partition
   * pruning under Delta/Iceberg; the directory protocol is the no-table-

@@ -62,14 +62,6 @@ class DictSpec extends SparkSpec {
       (3L, 0L), (Long.MinValue, 8L), (1L, 5L), (3L, 9L)))
     assert(d.longs.toSeq == Seq(Long.MinValue, 1L, 1L, 3L, 3L, 3L, Long.MaxValue))
     assert(d.values.toSeq == Seq(8L, 2L, 5L, 1L, 0L, 9L, 4L))
-    val r = new scala.util.Random(3L)
-    for (n <- Seq(0, 1, 2, 3, 1000, 4097)) {
-      val kv = Array.fill(n)((r.nextInt(n / 3 + 1).toLong - n / 6, r.nextLong()))
-      val want = kv.sortBy(_._1) // stable: equal keys keep input order
-      val got = Dict.sortedPairs(kv)
-      assert(got.longs.toSeq == want.map(_._1).toSeq, s"keys, n=$n")
-      assert(got.values.toSeq == want.map(_._2).toSeq, s"values, n=$n")
-    }
   }
 
   test("expressions over content-equal dicts are semantically equal") {

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.io.File
 import java.nio.file.Files
@@ -96,6 +96,22 @@ class SinkFilesSpec extends SparkSpec {
     spark.conf.set(key, "256")
     val split = try demux() finally spark.conf.unset(key)
     assert(split.size == 5 && split.values.forall(_ > 1), split)
+  }
+
+  test("a write that sets its own partitioning and order keeps it: each " +
+      "sorted partition is its own file") {
+    val dir = tmpDir("sink_files_sorted")
+    // a small plan with a known size, which would otherwise be one file
+    val sorted = spark.range(0, 4000, 1, 4).toDF("k")
+      .repartition(4, col("k")).sortWithinPartitions("k")
+    EpochStore(spark, dir).write(0L, sorted)
+    val files = new File(s"$dir/epoch=0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath)
+    assert(files.length == 4, files.toSeq)
+    files.foreach { f =>
+      val ks = spark.read.parquet(f).collect().map(_.getLong(0)).toSeq
+      assert(ks == ks.sorted, s"$f is not sorted by k")
+    }
   }
 
   test("a third micro-batch of the same shape through the demux and " +
