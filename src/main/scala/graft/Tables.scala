@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -18,8 +18,61 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Session settings that change the schema parquet inference yields. */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Inferred schema per table path, versioned by the table's
+    * [[fingerprint]] and the [[schemaConfs]] values it was inferred
+    * under. Inference is a Spark job per `spark.read.parquet`. */
+  private val schemaMemo =
+    new Memo[String, (Long, Seq[Option[String]]), StructType]
+
+  /** A fresh relation over `dir/name.parquet` — new attribute ids on
+    * every call, so two reads of one table self-join. The schema is
+    * inferred once per file listing and session settings; a rewritten
+    * table is re-inferred on its next read. A path whose listing finds
+    * no data file (missing, or not on the local file system) is read
+    * unmemoized, so it fails exactly as a plain read does. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val files = listing(dir, name)
+    if (!files.exists(f => f.isFile && !f.getName.startsWith("_")))
+      spark.read.parquet(path)
+    else {
+      val version = (fold(files), schemaConfs.map(spark.conf.getOption))
+      val schema = schemaMemo.get(path, version)(spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** Cheap change detector for one source table under `dir`: a hash
+    * over each data file's (name, mtime, size) — one driver-side
+    * directory listing, no data read. The same signal object stores and
+    * streaming file sources key on; content hashing would cost a scan.
+    * Keys every memo built from a source table, and the schema memo. */
+  def fingerprint(dir: String, table: String): Long = fold(listing(dir, table))
+
+  private def listing(dir: String, table: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory)
+        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
+      else Seq(f)
+    walk(new java.io.File(s"$dir/$table.parquet"))
+      .filterNot(_.getName.startsWith("."))
+  }
+
+  private def fold(files: Seq[java.io.File]): Long =
+    files.foldLeft(17L) { (h, f) =>
+      var x = h
+      for (v <- Seq(f.getName.hashCode.toLong, f.lastModified, f.length))
+        x = x * 1000003L + v
+      x
+    }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

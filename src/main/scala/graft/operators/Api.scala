@@ -72,8 +72,10 @@ object Api {
     * returns {total, detail}); A5 highlight applied to sku_name. */
   def detailByItem(spark: SparkSession, dir: String, itemName: String,
       pageNo: Int = 1, pageSize: Int = 20): DataFrame = {
-    val page = Serving.detailByItem(spark, dir, itemName, pageNo, pageSize)
-    val total = Serving.matchedLineCount(spark, dir, itemName)
+    // one matched-lines relation feeds both the page and the total
+    val lines = Serving.matchedLines(spark, dir, itemName)
+    val page = Serving.detailPage(lines, pageNo, pageSize)
+    val total = Serving.lineCount(lines)
     page
       .withColumn("sku_name",
         regexp_replace(col("sku_name"), Serving.highlightPattern(itemName),

@@ -155,7 +155,7 @@ object BloomSkip {
     * writes NEW directories and retires the old trio to the deferred
     * reaper). Returns (layout path, nFiles). */
   def layoutCached(spark: SparkSession, dir: String): (String, Long) = {
-    val fp = IvfIndex.dataFingerprint(dir, table = "orders")
+    val fp = graft.Tables.fingerprint(dir, "orders")
     layoutMemo.get(dir, fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
@@ -283,7 +283,7 @@ object BloomSkip {
   /** The materialized date-clustered, doubly-indexed orders layout for
     * `dir` — the [[layoutCached]] discipline. */
   def dateLayoutCached(spark: SparkSession, dir: String): String = {
-    val fp = IvfIndex.dataFingerprint(dir, table = "orders")
+    val fp = graft.Tables.fingerprint(dir, "orders")
     dateLayoutMemo.get(dir, fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
@@ -385,7 +385,7 @@ object BloomSkip {
   def forgottenDateLayoutCached(spark: SparkSession, dir: String,
       keys: Seq[Long]): (String, DeleteReport) = {
     val ks = keys.distinct.sorted
-    val fp = IvfIndex.dataFingerprint(dir, table = "orders")
+    val fp = graft.Tables.fingerprint(dir, "orders")
     datedForgetMemo.get(dir, (ks, fp)) {
       val src = dateLayoutCached(spark, dir)
       val tag =
@@ -409,7 +409,7 @@ object BloomSkip {
   def isDatedForgetMemoized(spark: SparkSession, dir: String,
       keys: Seq[Long]): Boolean =
     datedForgetMemo.isBuilt(dir, (keys.distinct.sorted,
-      IvfIndex.dataFingerprint(dir, table = "orders")))
+      graft.Tables.fingerprint(dir, "orders")))
 
   /** q159: the post-erasure composed lookup — delete the key batch
     * through the bloom candidates (both indexes patched), then probe
@@ -556,7 +556,7 @@ object BloomSkip {
   def forgottenLayoutCached(spark: SparkSession, dir: String,
       keys: Seq[Long]): (String, DeleteReport) = {
     val ks = keys.distinct.sorted
-    val fp = IvfIndex.dataFingerprint(dir, table = "orders")
+    val fp = graft.Tables.fingerprint(dir, "orders")
     forgetMemo.get(dir, (ks, fp)) {
       val (src, _) = layoutCached(spark, dir)
       val tag =
@@ -648,7 +648,7 @@ object BloomSkip {
   def isForgetMemoized(spark: SparkSession, dir: String,
       keys: Seq[Long]): Boolean =
     forgetMemo.isBuilt(dir, (keys.distinct.sorted,
-      IvfIndex.dataFingerprint(dir, table = "orders")))
+      graft.Tables.fingerprint(dir, "orders")))
 
   /** Private vacuumed lineages: slot the dir, version (keys,
     * fingerprint); builds run under the build gate and a superseded
@@ -677,7 +677,7 @@ object BloomSkip {
     val probes = (delKeys ++ probeKeys).distinct
     requireProbeKeys(probes)
     val ks = delKeys.distinct.sorted
-    val fp = IvfIndex.dataFingerprint(dir, table = "orders")
+    val fp = graft.Tables.fingerprint(dir, "orders")
     val v = vacuumMemo.get(dir, (ks, fp)) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       // pid + generation: the per-JVM counter alone COLLIDES across

@@ -66,7 +66,7 @@ object Curation {
 
   private def gateModels(dir: String, scrubbed: DataFrame)
       : (LangModel.BigramModel, Array[Long], LangModel.OddsModel) = {
-    gateModelMemo.get(dir, IvfIndex.dataFingerprint(dir, "documents"))(
+    gateModelMemo.get(dir, Tables.fingerprint(dir, "documents"))(
       (LangModel.trainModelOn(scrubbed),
         Sampling.trainDsirOn(scrubbed, col("lang") === "en"),
         LangModel.trainOddsOn(scrubbed)))
@@ -97,7 +97,7 @@ object Curation {
     * final blocks stay persisted behind the returned lazy frames —
     * LRU-evictable, the connectedComponents convention. */
   private def gateSignals(spark: SparkSession, dir: String): DataFrame = {
-    gateSignalMemo.get(dir, IvfIndex.dataFingerprint(dir, "documents")) {
+    gateSignalMemo.get(dir, Tables.fingerprint(dir, "documents")) {
       val scrubbed = graft.Caches.register(Tables.documents(spark, dir)
         .withColumn("text", Pii.redactText(col("text"))).cache())
       val (ppxM, dsirT, oddsM) = gateModels(dir, scrubbed)
@@ -235,7 +235,7 @@ object Curation {
     // IvfIndex.trainCached / gate-model discipline applied to the
     // build output itself. An in-place corpus rewrite changes the
     // fingerprint and forces a fresh build.
-    val version = (IvfIndex.dataFingerprint(dir, "documents"),
+    val version = (Tables.fingerprint(dir, "documents"),
       buildParamKey(minQuality, ppxKeepPct, dsirKeepPct, oddsKeepPct,
         nearThreshold, semThreshold, domainCap, packBudget, packBlocks))
     manifestMemo.get(dir, version) {
@@ -316,7 +316,7 @@ object Curation {
           !keep.contains(f.getName))
         graft.AtomicSwap.deleteRecursively(f)
     })
-    val fp = IvfIndex.dataFingerprint(dir, "documents")
+    val fp = Tables.fingerprint(dir, "documents")
     val params = buildParamKey(minQuality, ppxKeepPct, dsirKeepPct,
       oddsKeepPct, nearThreshold, semThreshold, domainCap, packBudget,
       packBlocks)
@@ -364,7 +364,7 @@ object Curation {
       domainCap: Int = 100,
       packBudget: Int = 2048,
       packBlocks: Int = 8): DataFrame = {
-    val want = (IvfIndex.dataFingerprint(dir, "documents"),
+    val want = (Tables.fingerprint(dir, "documents"),
       buildParamKey(minQuality, ppxKeepPct, dsirKeepPct, oddsKeepPct,
         nearThreshold, semThreshold, domainCap, packBudget, packBlocks))
     val got = readSidecar(outDir)
@@ -407,7 +407,7 @@ object Curation {
       domainCap: Int = 100,
       packBudget: Int = 2048,
       packBlocks: Int = 8): DataFrame = {
-    val want = (IvfIndex.dataFingerprint(dir, "documents"),
+    val want = (Tables.fingerprint(dir, "documents"),
       buildParamKey(minQuality, ppxKeepPct, dsirKeepPct, oddsKeepPct,
         nearThreshold, semThreshold, domainCap, packBudget, packBlocks))
     if (!readSidecar(outDir).contains(want))

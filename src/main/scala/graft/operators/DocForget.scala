@@ -67,8 +67,8 @@ object DocForget {
   // ——— bundle build (v1) ————————————————————————————————————————————
 
   private def fingerprintOf(dir: String): Long =
-    IvfIndex.dataFingerprint(dir, "documents") * 31L +
-      IvfIndex.dataFingerprint(dir, "embeddings")
+    graft.Tables.fingerprint(dir, "documents") * 31L +
+      graft.Tables.fingerprint(dir, "embeddings")
 
   /** v1 bundles: slot the dir, version the corpus fingerprint; a
     * corpus rewrite retires the whole superseded bundle root. */

@@ -135,9 +135,9 @@ object IvfIndex {
   // many searches against it; re-paying training + a full corpus rewrite
   // per query (as q56 did through round 5) hides the number that matters
   // at 100 TB — per-request search latency over the existing index. The
-  // memos' slot is (dir, cells, iters) and their version the
-  // dataFingerprint: it folds in every embedding file's (name, mtime,
-  // size), so an in-place rewrite of the source parquet (CDC refresh,
+  // memos' slot is (dir, cells, iters) and their version the embeddings'
+  // `Tables.fingerprint`: it folds in every embedding file's (name,
+  // mtime, size), so an in-place rewrite of the source parquet (CDC refresh,
   // compaction) forces a fresh train + build instead of silently
   // serving a stale index from a warm JVM. Superseded index directories
   // go to the deferred reaper (deleted one full refresh after their key
@@ -147,25 +147,6 @@ object IvfIndex {
     retire = { case ((dir, cells, iters), stale) =>
       graft.IndexGc.retire(s"ivf:$dir:$cells:$iters", stale) })
 
-  /** Cheap change detector for the embeddings under `dir`: a hash over
-    * each data file's (name, mtime, size) — one driver-side directory
-    * listing, no data read. The same signal object stores and streaming
-    * file sources key on; content hashing would cost a corpus scan. */
-  def dataFingerprint(dir: String, table: String = "embeddings"): Long = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    walk(new java.io.File(s"$dir/$table.parquet"))
-      .filterNot(_.getName.startsWith("."))
-      .foldLeft(17L) { (h, f) =>
-        var x = h
-        for (v <- Seq(f.getName.hashCode.toLong, f.lastModified, f.length))
-          x = x * 1000003L + v
-        x
-      }
-  }
-
   private def trainCachedFp(spark: SparkSession, dir: String, cells: Int,
       iters: Int, fp: Long): Centroids =
     trainMemo.get((dir, cells, iters), fp)(train(spark, dir, cells, iters))
@@ -174,7 +155,7 @@ object IvfIndex {
     * the JVM lifetime. */
   def trainCached(spark: SparkSession, dir: String, cells: Int = 16,
       iters: Int = 3): Centroids =
-    trainCachedFp(spark, dir, cells, iters, dataFingerprint(dir))
+    trainCachedFp(spark, dir, cells, iters, Tables.fingerprint(dir, "embeddings"))
 
   /** The materialized inverted file for (dir, cells, iters): trained and
     * written on first request, reused afterwards — until the source data
@@ -190,7 +171,7 @@ object IvfIndex {
     * needs. */
   def invertedFileCached(spark: SparkSession, dir: String, cells: Int = 16,
       iters: Int = 3): (String, Centroids) = {
-    val fp = dataFingerprint(dir)
+    val fp = Tables.fingerprint(dir, "embeddings")
     val cents = trainCachedFp(spark, dir, cells, iters, fp)
     val path = indexMemo.get((dir, cells, iters), fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")

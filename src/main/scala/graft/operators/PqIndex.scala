@@ -127,7 +127,7 @@ object PqIndex {
   private[graft] val memo = new graft.Memo[(String, Int, Int, Int), Long, SubCentroids]
   def trainCached(spark: SparkSession, dir: String, m: Int = M,
       k: Int = K, iters: Int = Iters): SubCentroids =
-    memo.get((dir, m, k, iters), IvfIndex.dataFingerprint(dir))(
+    memo.get((dir, m, k, iters), Tables.fingerprint(dir, "embeddings"))(
       train(spark, dir, m, k, iters))
 
   /** q108: every vector's PQ codes — map-only encode under the trained

@@ -340,7 +340,7 @@ object Ranking {
     * concurrent search may be scanning). */
   def postingsFileCached(spark: SparkSession, dir: String,
       nBuckets: Int = PostingsBuckets): String = {
-    val fp = IvfIndex.dataFingerprint(dir, table = "documents")
+    val fp = Tables.fingerprint(dir, "documents")
     postingsMemo.get((dir, nBuckets), fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +

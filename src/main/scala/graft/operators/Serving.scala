@@ -90,7 +90,7 @@ object Serving {
 
   /** Lines joined to their part, filtered by match-AND on p_name — the
     * shared scan for A3/A4/A5. */
-  private def matchedLines(spark: SparkSession, dir: String,
+  private[operators] def matchedLines(spark: SparkSession, dir: String,
       itemName: String): DataFrame = {
     val p = Tables.part(spark, dir).where(matchAll(col("p_name"), itemName))
     val li = Tables.lineitem(spark, dir)
@@ -108,7 +108,12 @@ object Serving {
     * (SURVEY §7.4 risk 3): (l_orderkey, l_linenumber) is a total key. */
   def detailByItem(spark: SparkSession, dir: String, itemName: String,
       pageNo: Int, pageSize: Int): DataFrame =
-    matchedLines(spark, dir, itemName)
+    detailPage(matchedLines(spark, dir, itemName), pageNo, pageSize)
+
+  /** A4's page of `lines` ([[matchedLines]]). */
+  private[operators] def detailPage(lines: DataFrame, pageNo: Int,
+      pageSize: Int): DataFrame =
+    lines
       .select(
         col("l_orderkey"), col("l_linenumber"), col("p_name").as("sku_name"),
         col("l_quantity").as("sku_num"),
@@ -123,7 +128,11 @@ object Serving {
   /** A4's `total`: count of all lines matching the item filter. */
   def matchedLineCount(spark: SparkSession, dir: String,
       itemName: String): DataFrame =
-    matchedLines(spark, dir, itemName).agg(count(lit(1)).as("total"))
+    lineCount(matchedLines(spark, dir, itemName))
+
+  /** The `total` of `lines` ([[matchedLines]]). */
+  private[operators] def lineCount(lines: DataFrame): DataFrame =
+    lines.agg(count(lit(1)).as("total"))
 
   /** Regex alternation of the quoted query tokens — shared by the A5
     * highlight query and the /detailByItem endpoint so their highlight

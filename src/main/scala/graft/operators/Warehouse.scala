@@ -214,7 +214,7 @@ object Warehouse {
     * overwriting files a concurrent scan may hold). */
   def zlayoutCached(spark: SparkSession, dir: String,
       shift: Int = ZShift): String = {
-    val fp = IvfIndex.dataFingerprint(dir, table = "events")
+    val fp = Tables.fingerprint(dir, "events")
     zlayoutMemo.get((dir, shift), fp) {
       val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
       val p = sys.props("java.io.tmpdir") +
@@ -407,7 +407,7 @@ object Warehouse {
       users: Seq[Long],
       shift: Int = ZShift): (String, Layouts.DeleteReport) = {
     val us = users.distinct.sorted
-    val fp = IvfIndex.dataFingerprint(dir, table = "events")
+    val fp = Tables.fingerprint(dir, "events")
     zforgetMemo.get(dir, (us, shift, fp)) {
       val src = zlayoutCached(spark, dir, shift)
       val tag =
@@ -432,7 +432,7 @@ object Warehouse {
   def isZforgetMemoized(spark: SparkSession, dir: String,
       users: Seq[Long], shift: Int = ZShift): Boolean =
     zforgetMemo.isBuilt(dir, (users.distinct.sorted, shift,
-      IvfIndex.dataFingerprint(dir, table = "events")))
+      Tables.fingerprint(dir, "events")))
 
   /** q155: the post-erasure z-order scan — delete `user`'s rows
     * through quadrant-candidate rewrites, then run the q145 rectangle

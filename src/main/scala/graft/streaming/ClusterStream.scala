@@ -494,7 +494,7 @@ object ClusterStream {
       graft.IndexGc.retire(s"clusforget:$dir:${ks.mkString(",")}", stale) })
 
   private def fingerprintOf(spark: SparkSession, dir: String): Long =
-    graft.operators.IvfIndex.dataFingerprint(dir, "documents")
+    graft.Tables.fingerprint(dir, "documents")
 
   private def buildStore(spark: SparkSession, dir: String,
       root: String): String = {
