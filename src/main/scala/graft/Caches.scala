@@ -1,7 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Registry for operator-internal cached carriers (the shingle index,
   * minhash signature arrays, simhash clusters — see Dedup). The caches
@@ -11,20 +12,45 @@ import org.apache.spark.sql.DataFrame
   * long-lived session (HttpServer, a 56-query Verify/Bench run) the
   * leaked blocks would otherwise pin memory until LRU eviction.
   *
-  * Contract: operators `register` their cached frames; the HOST calls
-  * [[releaseAll]] once it has materialized the results it needs.
-  * Releasing is always safe — at worst a subsequent reference recomputes.
+  * Contract: a host releases what it registered. Operators `register`
+  * their cached frames on the host's thread (an HTTP request's handler
+  * thread, the Verify/Bench loop); the host calls [[releaseAll]] on that
+  * thread once it has materialized the results it needs, which releases
+  * that thread's registrations only — concurrent requests keep theirs.
+  * Two hosts that cache plan-equal frames share one CacheManager entry,
+  * so a release unpersists a frame only when no live registration of
+  * any thread holds a plan-equal one. Releasing is always safe — at
+  * worst a subsequent reference recomputes.
   */
 object Caches {
-  private val reg = new ConcurrentLinkedQueue[DataFrame]()
+  /** What this thread registered since its last [[releaseAll]]. */
+  private val mine = ThreadLocal.withInitial(() => mutable.ArrayBuffer.empty[DataFrame])
+  /** Every thread's live registrations; the lock for the refcount rule. */
+  private val live = mutable.ArrayBuffer.empty[DataFrame]
 
   /** Track a cached frame for later release; returns it for chaining. */
-  def register(df: DataFrame): DataFrame = { reg.add(df); df }
+  def register(df: DataFrame): DataFrame = {
+    live.synchronized {
+      live += df
+      // another thread's release may have dropped the shared entry
+      // between this frame's cache() and its registration
+      if (df.storageLevel == StorageLevel.NONE) df.persist()
+    }
+    mine.get += df
+    df
+  }
 
-  /** Unpersist (non-blocking) every registered frame and clear. */
+  /** Unpersist (non-blocking) every frame this thread registered that no
+    * other live registration holds plan-equal, and forget them all. */
   def releaseAll(): Unit = {
-    var df = reg.poll()
-    while (df != null) { df.unpersist(blocking = false); df = reg.poll() }
+    val own = mine.get
+    if (own.nonEmpty) live.synchronized {
+      own.foreach(df => live.remove(live.indexWhere(_ eq df)))
+      own.filterNot(df => live.exists(
+          _.queryExecution.normalized.sameResult(df.queryExecution.normalized)))
+        .foreach(_.unpersist(blocking = false))
+    }
+    own.clear()
   }
 
   /** Release the storage behind a `localCheckpoint`'d frame. UNLIKE

@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone (oracle parity),
   *  - AQE on (runtime re-plan, skew-join splitting at scale),
   *  - shuffle partitions sized to local cores (not the 200 default),
-  *  - nanosAsLong: the driver's `events` table carries TIMESTAMP(NANOS)
-  *    which Spark's vectorized reader refuses; read as Long and normalize
-  *    in Tables.events (truncate to micros, same as the oracle's cast),
+  *  - nanosAsLong: an `events` table written as TIMESTAMP(NANOS), which
+  *    Spark's vectorized reader refuses, reads as Long and Tables.events
+  *    normalizes it (truncate to micros, same as the oracle's cast); the
+  *    test corpora's microsecond `ts` reads as TIMESTAMP_NTZ untouched,
   *  - a generated-class cache sized to the streaming working set
   *    ([[CodegenCacheEntries]]).
   */

@@ -2,22 +2,44 @@ package graft.serving
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer => JdkServer}
 import java.net.InetSocketAddress
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Thin REST wrapper over the served operators — the reference's
   * InsightAnalytics surface (PublisherController's three routes) without
-  * Spring: the JDK built-in HTTP server (zero extra dependencies) with one
-  * dispatcher thread, returning JSON rows. The routes, their parameters,
-  * defaults and bounds are the entries of [[Ops]] that have an HTTP path.
+  * Spring: the JDK built-in HTTP server (zero extra dependencies),
+  * returning JSON rows. The routes, their parameters, defaults and bounds
+  * are the entries of [[Ops]] that have an HTTP path.
   *
   * The Spark driver hosts the server; each request compiles to a
   * DataFrame program that Catalyst plans and the cluster executes —
-  * query serving is the engine itself, not a copy of the data.
+  * query serving is the engine itself, not a copy of the data. Requests
+  * run on a fixed pool of `defaultParallelism` handler threads, so one
+  * request's driver-side planning overlaps another's jobs (each Spring
+  * request had its own thread too). Each request's Spark jobs carry the
+  * job group `<path>#<request seq>`, described by the request URI, and
+  * the request releases the cached carriers it registered
+  * ([[graft.Caches]]).
   */
 class HttpServer(spark: SparkSession, dataDir: String, port: Int = 0,
     sketchDir: Option[String] = None) {
 
   private val server = JdkServer.create(new InetSocketAddress(port), 0)
+
+  private val pool = {
+    val n = new AtomicLong()
+    Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism,
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-http-$boundPort-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+  server.setExecutor(pool)
+
+  /** Numbers each request's job group. */
+  private val requests = new AtomicLong()
 
   /** At most ONE erasure (copy-on-write layout rewrite) builds at a
     * time on this serving JVM; concurrent /forget requests for a not-
@@ -80,7 +102,12 @@ class HttpServer(spark: SparkSession, dataDir: String, port: Int = 0,
   }
 
   private def handler(op: Ops.Op): HttpHandler =
-    (ex: HttpExchange) =>
+    (ex: HttpExchange) => {
+      val sc = spark.sparkContext
+      // pool threads are reused: the group is set per request and
+      // cleared in `finally`, so no job inherits the previous request's
+      sc.setJobGroup(s"${ex.getHttpContext.getPath}#${requests.incrementAndGet()}",
+        ex.getRequestURI.toString, interruptOnCancel = false)
       try respond(ex, 200, HttpServer.asJson(
         op.build(ctx, new Ops.HttpParams(params(ex)))))
       catch {
@@ -99,11 +126,15 @@ class HttpServer(spark: SparkSession, dataDir: String, port: Int = 0,
           respond(ex, 500,
             s"""{"error":"${jsonEscape(e.getClass.getSimpleName)}"}""")
       }
-      // release operator-internal cached carriers whether the request
-      // succeeded or failed — a long-lived server must not accrete query
-      // caches (failing requests register carriers too). Try: a release
-      // failure must not re-touch the already-closed exchange.
-      finally scala.util.Try(graft.Caches.releaseAll())
+      // release this request's cached carriers whether it succeeded or
+      // failed — a long-lived server must not accrete query caches
+      // (failing requests register carriers too). Try: a release failure
+      // must not re-touch the already-closed exchange.
+      finally {
+        scala.util.Try(graft.Caches.releaseAll())
+        sc.clearJobGroup()
+      }
+    }
 
   def start(): HttpServer = {
     for (op <- Ops.table; path <- op.path)
@@ -112,7 +143,13 @@ class HttpServer(spark: SparkSession, dataDir: String, port: Int = 0,
     this
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stops accepting, then lets in-flight handlers finish (interrupting
+    * any still running after a minute) and ends the handler pool. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    if (!pool.awaitTermination(60, TimeUnit.SECONDS)) pool.shutdownNow()
+  }
 }
 
 object HttpServer {

@@ -3,6 +3,7 @@ package graft.serving
 import graft.SparkSpec
 import java.net.{HttpURLConnection, URL}
 import scala.io.Source
+import scala.jdk.CollectionConverters._
 
 /** Drive the REST surface over a real socket — the reference's three
   * endpoints answered by the engine. */
@@ -608,5 +609,85 @@ class HttpServerSpec extends SparkSpec {
       }
       assert(answered >= 7, s"only $answered of ${both.size} answered")
     } finally srv.stop()
+  }
+
+  private val referenceUrls = Seq("/dauRealtime?td=2024-01-15",
+    "/statsByItem?itemName=small+ring&t=segment",
+    "/detailByItem?itemName=small+ring&pageNo=1&pageSize=3")
+
+  private def handlerThreads(port: Int): Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith(s"graft-http-$port-"))
+
+  test("concurrent requests each answer their URL's serial body, and stop " +
+      "ends every handler thread") {
+    // /searchRanked caches a carrier (Caches.register) per request: equal
+    // requests in flight together share one CacheManager entry
+    val urls = referenceUrls :+ "/searchRanked?q=spark+vector&topN=5"
+    val srv = new HttpServer(spark, sf).start()
+    val port = srv.boundPort
+    val base = s"http://127.0.0.1:$port"
+    val clients = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val serial = urls.map { u =>
+        val (code, body) = get(s"$base$u")
+        assert(code == 200, s"$u: $body")
+        u -> body
+      }.toMap
+      val calls = (0 until 4).flatMap(_ => urls).map { u =>
+        u -> clients.submit(new java.util.concurrent.Callable[(Int, String)] {
+          def call(): (Int, String) = get(s"$base$u")
+        })
+      }
+      calls.foreach { case (u, f) =>
+        val (code, body) = f.get()
+        assert(code == 200 && body == serial(u),
+          s"$u answered ${body.take(200)} concurrently, ${serial(u).take(200)} serially")
+      }
+      assert(handlerThreads(port).size > 1, "requests were not spread over a pool")
+    } finally { clients.shutdown(); srv.stop() }
+    val left = handlerThreads(port)
+    left.foreach(_.join(10000))
+    assert(left.forall(!_.isAlive), s"alive after stop: ${left.map(_.getName)}")
+  }
+
+  test("every job of a request carries that request's job group, named " +
+      "after its path and described by its URI") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String)]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).orNull
+        jobs.add((js.time, prop("spark.jobGroup.id"), prop("spark.job.description")))
+      }
+    }
+    val srv = new HttpServer(spark, sf).start()
+    val base = s"http://127.0.0.1:${srv.boundPort}"
+    spark.sparkContext.addSparkListener(l)
+    // twice the pool size in sequence, so handler threads are reused
+    val n = 2 * spark.sparkContext.defaultParallelism
+    val windows = try (0 until n).map { i =>
+      val u = referenceUrls(i % referenceUrls.size)
+      val t0 = System.currentTimeMillis()
+      val (code, body) = get(s"$base$u")
+      assert(code == 200, s"$u: $body")
+      (u, t0, System.currentTimeMillis())
+    } finally srv.stop()
+    var last = -1
+    while (jobs.size != last) { last = jobs.size; Thread.sleep(500) }
+    spark.sparkContext.removeSparkListener(l)
+    val all = jobs.asScala.toSeq
+    val groups = windows.map { case (u, t0, t1) =>
+      val mine = all.filter { case (t, _, _) => t >= t0 && t <= t1 }
+      assert(mine.nonEmpty, s"$u started no job")
+      val gs = mine.map(_._2).distinct
+      assert(gs.size == 1 && gs.head != null &&
+        gs.head.startsWith(u.takeWhile(_ != '?') + "#"),
+        s"$u ran jobs in groups $gs")
+      assert(mine.forall(_._3 == u), s"$u jobs described as ${mine.map(_._3).distinct}")
+      gs.head
+    }
+    assert(groups.distinct.size == n, s"a group spans two requests: $groups")
   }
 }
